@@ -126,10 +126,8 @@ object DelScale {
       col("value"),
       date_format(col("ts"), "yyyy-MM-dd").as("day"))
     reps.foreach { g =>
-      val root = s"/tmp/graft_delscale/g$g"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(root + "__meta.json"))
+      val base = s"/tmp/graft_delscale/g$g"
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
       // G day-shifted copies: same rows/day, G× more day partitions —
       // EXACTLY the axis the round-7 replaceSubject rewrite scaled on
       val big = (0 until g).map(i => e0.select(col("subject"),
@@ -137,13 +135,10 @@ object DelScale {
           date_format(date_add(to_date(col("day")), i * 40), "yyyy-MM-dd")
             .as("day")))
         .reduce(_ unionByName _)
-      big.withColumn("__day", col("day")).withColumn("__seq", lit(0L))
-        .repartition(col("__day"))
-        .write.mode("overwrite").partitionBy("__day").parquet(root)
-      val st = new TsStore(spark, root, subject = "subject", time = "t_ms",
-        soleCols = Nil, dayCol = col("day"))
-      val nDays = new java.io.File(root).listFiles()
-        .count(_.getName.startsWith("__day="))
+      val st = new TsStore(spark, s"$base/st", subject = "subject",
+        time = "t_ms", soleCols = Nil, dayCol = col("day"))
+      st.set(big); st.save()
+      val nDays = st.snapshotDays.size
       val t0 = System.nanoTime()
       st.deleteWhere(col("subject") === "u2" && col("day") === "2024-01-10",
         _ == "2024-01-10")

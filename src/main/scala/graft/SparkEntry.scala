@@ -356,7 +356,7 @@ object SparkEntry {
   private def qCdcRollup(s: SparkSession, dir: String): DataFrame = {
     val root = s"/tmp/graft_a11_cdc/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val eng = new graft.api.Engine(s, s"$root/eng", snapshots = true)
+    val eng = new graft.api.Engine(s, s"$root/eng")
     eng.create("{ev:{fields:{t:[T,8],etype:[C,16],value:[F,8],eid:[I,8]}}}")
     val ev = t(s, dir, "events").filter(col("user_id") < 10)
     def payloads(rows: DataFrame): Array[(Long, String)] =
@@ -1348,7 +1348,7 @@ object SparkEntry {
   private def qStreamCdcRollup(s: SparkSession, dir: String): DataFrame = {
     val base = s"/tmp/graft_st11_cdcbar/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val eng = new graft.api.Engine(s, s"$base/eng", snapshots = true)
+    val eng = new graft.api.Engine(s, s"$base/eng")
     eng.create("{ev:{fields:{t:[T,8],etype:[C,16],value:[F,8],eid:[I,8]}}}")
     val raw = t(s, dir, "events").filter(col("user_id") < 10)
       .select(col("ts").as("t"), col("event_type").as("etype"),
@@ -1479,7 +1479,7 @@ object SparkEntry {
       : DataFrame = {
     val base = s"/tmp/graft_e24_evbar/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val eng = new graft.api.Engine(s, s"$base/eng", snapshots = true)
+    val eng = new graft.api.Engine(s, s"$base/eng")
     eng.create("{ev:{fields:{t:[T,8],etype:[C,16],value:[F,8]," +
       "qty:[I,4],eid:[I,8]}}}")
     val ev = t(s, dir, "events").filter(col("user_id") < 8)
@@ -3314,12 +3314,12 @@ object SparkEntry {
   }
 
   /** E10 — snapshot-isolated concurrent reads over the store: the
-    * TsStore in snapshot mode (versioned `__day=X/__v=N` dirs + an
-    * atomically-swapped manifest as the single commit point,
-    * TsStore scaladoc "Concurrent-reader contract"). A reader PINNED
+    * TsStore's versioned `__day=X/__v=N` dirs + an exclusively claimed
+    * manifest as the single commit point (TsStore scaladoc "On-disk
+    * layout and the concurrent-reader contract"). A reader PINNED
     * before a multi-day ranged delete must keep serving the full
-    * pre-delete snapshot while the delete commits — the exact race
-    * the flat layout's delete-dest+rename window cannot protect
+    * pre-delete snapshot while the delete commits — the race an
+    * in-place delete-dest+rename rewrite cannot protect
     * (round-9 verdict item 5, the reference's serialize-everything
     * dispatcher sidesteps it, sisdb_server.c:474-476). Both
     * isolation properties are REQUIREd in-query, the o4/u1 gate
@@ -3331,7 +3331,7 @@ object SparkEntry {
     val root = s"/tmp/graft_snapstore/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     val st = new graft.store.TsStore(s, s"$root/ev", subject = "subject",
-      time = "t", soleCols = Nil, dayCol = col("day"), snapshots = true)
+      time = "t", soleCols = Nil, dayCol = col("day"))
     val e = t(s, dir, "events").filter(col("user_id") < 5)
       .select(concat(lit("u"), col("user_id")).as("subject"),
         col("ts").as("t"), col("event_type"), col("value"),
@@ -3475,7 +3475,7 @@ object SparkEntry {
     q
   }
 
-  /** E11 — snapshot-mode SQL front door: the engine runs with
+  /** E11 — SQL front door over versions: the engine runs with
     * versioned day dirs (concurrent-reader isolation, e10), and
     * `exposeSql` pins each catalog partition's LOCATION to the
     * manifest-committed `__v=N` dir instead of filesystem discovery.
@@ -3489,7 +3489,7 @@ object SparkEntry {
   private def qSnapshotSql(s: SparkSession, dir: String): DataFrame = {
     val root = s"/tmp/graft_snap_sql/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val eng = new graft.api.Engine(s, root, snapshots = true)
+    val eng = new graft.api.Engine(s, root)
     eng.create("{ev:{fields:{t:[T,8],etype:[C,16],value:[F,8]}}}")
     def ingest(rows: DataFrame): Unit = clientEventPayloads(rows)
       .foreach { case (u, arr) => eng.set(s"u$u.ev", arr) }
@@ -3913,7 +3913,7 @@ object SparkEntry {
   private def qTimeTravel(s: SparkSession, dir: String): DataFrame = {
     val root = s"/tmp/graft_timetravel/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val eng = new graft.api.Engine(s, root, snapshots = true)
+    val eng = new graft.api.Engine(s, root)
     eng.create("{ev:{fields:{t:[T,8],etype:[C,16],value:[F,8]}}}")
     val ev = t(s, dir, "events").filter(col("user_id") < 10)
     clientEventPayloads(ev.filter(col("event_id") % 2 === 1))
@@ -3947,7 +3947,7 @@ object SparkEntry {
   private def qTimeTravelSql(s: SparkSession, dir: String): DataFrame = {
     val root = s"/tmp/graft_tt_sql/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val eng = new graft.api.Engine(s, root, snapshots = true)
+    val eng = new graft.api.Engine(s, root)
     eng.create("{ev:{fields:{t:[T,8],etype:[C,16],value:[F,8]}}}")
     val ev = t(s, dir, "events").filter(col("user_id") < 10)
     clientEventPayloads(ev.filter(col("event_id") % 2 === 1))
@@ -4003,7 +4003,7 @@ object SparkEntry {
   private def qChangeFeed(s: SparkSession, dir: String): DataFrame = {
     val root = s"/tmp/graft_changes/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val eng = new graft.api.Engine(s, root, snapshots = true)
+    val eng = new graft.api.Engine(s, root)
     eng.create("{ev:{fields:{t:[T,8],etype:[C,16],value:[F,8]}}}")
     val ev = t(s, dir, "events").filter(col("user_id") < 10)
     clientEventPayloads(ev.filter(col("event_id") % 2 === 1))
@@ -4060,7 +4060,7 @@ object SparkEntry {
   private def qCrossEraFeed(s: SparkSession, dir: String): DataFrame = {
     val root = s"/tmp/graft_xera_feed/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val eng = new graft.api.Engine(s, root, snapshots = true)
+    val eng = new graft.api.Engine(s, root)
     eng.create("{ev:{fields:{t:[T,8],etype:[C,16],value:[F,8]," +
       "qty:[I,4],flag:[I,4]}}}")
     val ev = t(s, dir, "events")
@@ -4155,7 +4155,7 @@ object SparkEntry {
   private def qAtomicCommit(s: SparkSession, dir: String): DataFrame = {
     val root = s"/tmp/graft_e21_atomic/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val eng = new graft.api.Engine(s, root, snapshots = true)
+    val eng = new graft.api.Engine(s, root)
     eng.create("{ev:{fields:{t:[T,8],etype:[C,16],value:[F,8]}}}")
     eng.create("{fx:{fields:{t:[T,8],etype:[C,16],value:[F,8]}}}")
     val ev = t(s, dir, "events").filter(col("user_id") < 8)
@@ -4209,7 +4209,7 @@ object SparkEntry {
       "the injected mid-commit crash did not fire")
     require(eng.atomicMarker().nonEmpty,
       "the crashed saveAll must leave its marker (the roll-forward claim)")
-    val eng2 = new graft.api.Engine(s, root, snapshots = true)
+    val eng2 = new graft.api.Engine(s, root)
     require(eng2.atomicMarker().isEmpty,
       "open-time recovery did not release the atomic marker")
     val post = eng2.openAtomicSnapshot(Seq("ev", "fx"))
@@ -4249,7 +4249,7 @@ object SparkEntry {
   private def qFactorVersioned(s: SparkSession, dir: String): DataFrame = {
     val root = s"/tmp/graft_e22_fver/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val eng = new graft.api.Engine(s, root, snapshots = true)
+    val eng = new graft.api.Engine(s, root)
     eng.create("{ev:{fields:{t:[T,8],etype:[C,16],value:[F,8]}}}")
     val ev = t(s, dir, "events").filter(col("user_id") < 6)
     def factorPayloads(rows: DataFrame): Array[(Long, String)] =
@@ -4340,7 +4340,7 @@ object SparkEntry {
   private def qFactorEvolve(s: SparkSession, dir: String): DataFrame = {
     val root = s"/tmp/graft_e23_fevo/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val eng = new graft.api.Engine(s, root, snapshots = true)
+    val eng = new graft.api.Engine(s, root)
     val ev = t(s, dir, "events").filter(col("user_id") < 6)
     // era-0 factors: avg value per (user, day) over the ODD event-ids
     def payloads(rows: DataFrame, withConf: Boolean): Array[(Long, String)] = {
@@ -4431,7 +4431,7 @@ object SparkEntry {
   }
 
   /** E14 — SCHEDULED vacuum on the commit path
-    * ([[graft.api.Engine.autoVacuum]]): a snapshot-mode deployment
+    * ([[graft.api.Engine.autoVacuum]]): a deployment
     * that never calls vacuum() accumulates superseded version dirs
     * and generation records without bound — the reference runs its
     * own save/pack housekeeping on a schedule for the same reason
@@ -4459,7 +4459,7 @@ object SparkEntry {
         f" (total ${(now - tq0) / 1e9}%.2fs)")
       tqLast = now
     }
-    val eng = new graft.api.Engine(s, root, snapshots = true)
+    val eng = new graft.api.Engine(s, root)
     eng.create("{ev:{fields:{t:[T,8],etype:[C,16],value:[F,8]}}}")
     eng.autoVacuum(everyGenerations = 2, keepSuperseded = 0,
       removedDayGraceMs = 0L, supersededGraceMs = 0L)
@@ -4511,7 +4511,7 @@ object SparkEntry {
   private def qSnapshotCut(s: SparkSession, dir: String): DataFrame = {
     val root = s"/tmp/graft_snapcut/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val eng = new graft.api.Engine(s, root, snapshots = true)
+    val eng = new graft.api.Engine(s, root)
     eng.create("{ev:{fields:{t:[T,8],etype:[C,16],value:[F,8]}}}")
     eng.create("{fx:{fields:{t:[T,8],etype:[C,16],value:[F,8]}}}")
     val ev = t(s, dir, "events").filter(col("user_id") < 8)
@@ -4583,7 +4583,7 @@ object SparkEntry {
   private def qRestoreCut(s: SparkSession, dir: String): DataFrame = {
     val root = s"/tmp/graft_restore/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val eng = new graft.api.Engine(s, root, snapshots = true)
+    val eng = new graft.api.Engine(s, root)
     eng.create("{ev:{fields:{t:[T,8],etype:[C,16],value:[F,8]}}}")
     eng.create("{fx:{fields:{t:[T,8],etype:[C,16],value:[F,8]}}}")
     val ev = t(s, dir, "events").filter(col("user_id") < 8)
@@ -4644,7 +4644,7 @@ object SparkEntry {
   private def qCutManifest(s: SparkSession, dir: String): DataFrame = {
     val root = s"/tmp/graft_cutman/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val eng = new graft.api.Engine(s, root, snapshots = true)
+    val eng = new graft.api.Engine(s, root)
     eng.create("{ev:{fields:{t:[T,8],etype:[C,16],value:[F,8]}}}")
     eng.create("{fx:{fields:{t:[T,8],etype:[C,16],value:[F,8]}}}")
     val ev = t(s, dir, "events")
@@ -4735,7 +4735,7 @@ object SparkEntry {
   private def qSchemaEvolve(s: SparkSession, dir: String): DataFrame = {
     val root = s"/tmp/graft_evolve_q/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val eng = new graft.api.Engine(s, root, snapshots = true)
+    val eng = new graft.api.Engine(s, root)
     eng.create("{ev:{fields:{t:[T,8],etype:[C,16],value:[F,8]," +
       "qty:[I,4],flag:[I,4],extra:[I,4]}}}")
     val ev = t(s, dir, "events")
@@ -5117,13 +5117,16 @@ object SparkEntry {
       time = "t_ms", soleCols = Nil, dayCol = col("day"))
     st.set(e); st.save()
     st.pack(16, zorderBy = Some(("subject", "t_ms")))
+    // the live manifest's files only: the pre-pack version stays on
+    // disk for pinned readers until a vacuum
+    val live = graft.store.TsStore.openSnapshot(s, root).get
     // footer-stat selectivity over the packed files (box: a subject
     // range × the middle fifth of the time span)
-    val mm = s.read.parquet(root)
+    val mm = live
       .agg(min("t_ms"), max("t_ms")).collect()(0)
     val (tLo, tHi) = (mm.getLong(0), mm.getLong(1))
     val (bLo, bHi) = (tLo + (tHi - tLo) * 2 / 5, tLo + (tHi - tLo) * 3 / 5)
-    val stats = s.read.parquet(root)
+    val stats = live
       .groupBy(col("_metadata.file_name").as("f"))
       .agg(min("subject").as("mnS"), max("subject").as("mxS"),
         min("t_ms").as("mnT"), max("t_ms").as("mxT"))

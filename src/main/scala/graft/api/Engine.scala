@@ -26,14 +26,15 @@ import org.apache.spark.sql.functions._
   * "fields":"time,open,close","format":"a"}` becomes
   * `engine.get("SH600600.stk_day", params)` with identical semantics.
   *
-  * `snapshots = true` puts every table's store in TsStore snapshot
-  * mode (versioned day dirs behind an atomically-swapped manifest —
-  * the concurrent-reader contract, TsStore scaladoc): out-of-process
-  * readers pin a manifest via [[openSnapshot]] and stay whole through
-  * saves/deletes/packs; the deployment schedules [[vacuum]] with a
-  * grace ≥ its longest reader. The mode is recorded in the engine
-  * catalog sidecar and checked on reopen — mixing modes over one root
-  * corrupts silently, so it fails loudly instead.
+  * Every table's store keeps versioned day dirs behind an
+  * exclusively-claimed manifest (the concurrent-reader contract,
+  * TsStore scaladoc): out-of-process readers pin a manifest via
+  * [[openSnapshot]] and stay whole through saves/deletes/packs.
+  * Superseded versions are reclaimed only by [[vacuum]] — run by the
+  * deployment with a grace ≥ its longest reader — or by the opt-in
+  * [[autoVacuum]] schedule; neither runs by default. A root written
+  * by the retired flat layout (catalog `"snapshots": false`) is
+  * refused at open.
   *
   * One WRITER per store root is ENFORCED, not just documented: each
   * table's TsStore takes over a lease sidecar at open and re-checks
@@ -43,8 +44,7 @@ import org.apache.spark.sql.functions._
   * (TsStore writer-fence scaladoc; the reference gets the same
   * guarantee from its single dispatcher thread,
   * sisdb_server.c:474-476). */
-final class Engine(val spark: SparkSession, rootPath: String,
-    val snapshots: Boolean = false) {
+final class Engine(val spark: SparkSession, rootPath: String) {
 
   val catalog = new Catalog
   val subs = new SubRegistry
@@ -74,8 +74,10 @@ final class Engine(val spark: SparkSession, rootPath: String,
   // the dicts, src/core/disk/sis_disk.h:239ff). Stores themselves stay
   // lazy (first access runs TsStore's own meta/tombstone/swap
   // recovery), so reopening a 10k-table root costs one JSON read.
-  private def hadoopFs = org.apache.hadoop.fs.FileSystem.get(
-    spark.sparkContext.hadoopConfiguration)
+  // resolved from the root path: the session's DEFAULT filesystem
+  // would fail Hadoop's wrong-FS check for a root on another scheme
+  private def hadoopFs = new org.apache.hadoop.fs.Path(rootPath)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def catalogFile = new org.apache.hadoop.fs.Path(
     s"${rootPath.stripSuffix("/")}/__catalog.json")
   // exposures done via exposeSql: table → (db list), re-exposed on open
@@ -215,7 +217,6 @@ final class Engine(val spark: SparkSession, rootPath: String,
       // engine's declarations — the exact bug the merge prevents.
       val (gen, onDisk) = readNewestCatalog(f)
       val root = mapper.createObjectNode()
-      root.put("snapshots", snapshots)
       val ts = root.putObject("tables")
       catalog.tables.foreach(t => ts.put(t, catalog.get(t).get.toDsl))
       val ex = root.putObject("exposed")
@@ -277,13 +278,14 @@ final class Engine(val spark: SparkSession, rootPath: String,
     val f = hadoopFs
     readNewestCatalog(f)._2.foreach { node =>
       import scala.jdk.CollectionConverters._
-      // fail at open, before any store is touched: a wrong-mode reopen
-      // would lazily hit each TsStore's own guard one table at a time
-      // (or, for a never-saved table, not at all)
-      require(node.path("snapshots").asBoolean(false) == snapshots,
-        s"$rootPath was written with snapshots = " +
-          s"${node.path("snapshots").asBoolean(false)} — reopen the " +
-          "engine with the same mode")
+      // fail at open, before any store is touched: a root of the
+      // retired flat layout would otherwise hit each TsStore's own
+      // refusal one table at a time (or, for a never-saved table, not
+      // at all)
+      require(!(node.has("snapshots") && !node.path("snapshots").asBoolean()),
+        s"$rootPath was written by the retired flat store layout " +
+          "(\"snapshots\": false) — rewrite its tables into a new root; " +
+          "it cannot be opened in place")
       rehydrating = true
       try {
         node.path("tables").properties().asScala
@@ -333,10 +335,9 @@ final class Engine(val spark: SparkSession, rootPath: String,
     * cold-read boundary, per era group); new `set`s are typed under
     * the new schema; time travel ([[openSnapshotAt]] /
     * [[openSnapshotAllAt]]) to a pre-evolve generation serves the
-    * OLD schema exactly as committed. Snapshot mode evolves lazily
-    * (a sidecar record, no data rewrite); flat mode migrates the
-    * store once through the crash-safe pack swap — see
-    * [[graft.store.TsStore.evolveSchema]] for the mode trade.
+    * OLD schema exactly as committed. The evolve itself is lazy (a
+    * sidecar record, no data rewrite) — see
+    * [[graft.store.TsStore.evolveSchema]].
     *
     * Invariants the store's identity depends on are REFUSED, not
     * silently rewritten: the main (time) index and the solely-field
@@ -401,8 +402,7 @@ final class Engine(val spark: SparkSession, rootPath: String,
             org.apache.spark.sql.types.StructField("subject",
               org.apache.spark.sql.types.StringType) :+
             org.apache.spark.sql.types.StructField("__day",
-              org.apache.spark.sql.types.StringType))),
-        snapshots = snapshots)
+              org.apache.spark.sql.types.StringType))))
       st.autoVacuum = autoVacuumCfg
       // cross-table snapshot cuts pin generations beyond keepHistory:
       // any generation a retained cut record references must survive
@@ -428,7 +428,7 @@ final class Engine(val spark: SparkSession, rootPath: String,
       // a staged-but-unmarked save is a saveAll that died BEFORE its
       // commit point: roll it back (all-pre) — the marker-covered case
       // is rolled forward by recoverAtomicCommit before any command
-      if (snapshots && !atomicMarker().exists(_.contains(table)))
+      if (!atomicMarker().exists(_.contains(table)))
         st.discardStagedSave()
       st
     })
@@ -815,9 +815,6 @@ final class Engine(val spark: SparkSession, rootPath: String,
     * exactly as it blocks for a save() on its own table. */
   def saveAll(tables: Seq[String] = Seq.empty): Map[String, Long] =
     synchronized {
-      require(snapshots,
-        "saveAll requires snapshot mode (committed generations are " +
-          "what gate multi-table visibility)")
       val ts = (if (tables.nonEmpty) tables
                 else catalog.tables.toSeq).distinct.sorted
       require(ts.nonEmpty, "saveAll: no tables declared")
@@ -855,7 +852,6 @@ final class Engine(val spark: SparkSession, rootPath: String,
     * exists for the whole window in which any table is mid-commit). */
   def openAtomicSnapshot(tables: Seq[String] = Seq.empty)
       : Map[String, Option[DataFrame]] = synchronized {
-    require(snapshots, "openAtomicSnapshot requires snapshot mode")
     val ts = if (tables.nonEmpty) tables else catalog.tables.toSeq.sorted
     val marker = atomicMarker()
     // an in-flight (or crashed) RESTORE likewise must never serve a
@@ -889,15 +885,15 @@ final class Engine(val spark: SparkSession, rootPath: String,
       clearAtomicMarker()
     }
 
-  /** Snapshot-mode maintenance: reclaim version dirs no committed
-    * manifest (inside the grace windows) can reference — see
-    * [[TsStore.vacuum]], whose defaults these forward (one retention
-    * contract, not two copies that can drift). No-op on a flat-mode
-    * engine. */
-  /** Returns stale-cut warnings when `cutMaxAgeMs > 0` (see
-    * [[staleCutWarnings]]): vacuum is where a deployment notices a
-    * forgotten cut, because cuts are the one pin no retention dial
-    * ever expires — age-flagged here, reclaimed only by an explicit
+  /** Reclaim version dirs no committed manifest (inside the grace
+    * windows) can reference — see [[TsStore.vacuum]], whose defaults
+    * these forward (one retention contract, not two copies that can
+    * drift). The only reclamation besides [[autoVacuum]]: without
+    * either, superseded versions stay on disk. Returns stale-cut
+    * warnings when `cutMaxAgeMs > 0` (see [[staleCutWarnings]]):
+    * vacuum is where a deployment notices a forgotten cut, because
+    * cuts are the one pin no retention dial ever expires —
+    * age-flagged here, reclaimed only by an explicit
     * [[dropSnapshotCut]] (the warning never auto-drops: a cut is a
     * reproducibility promise someone recorded on purpose). */
   def vacuum(table: String,
@@ -953,7 +949,7 @@ final class Engine(val spark: SparkSession, rootPath: String,
   @volatile var lastStaleCutWarnings: Seq[String] = Seq.empty
 
   /** Committed snapshot generations available for time travel on
-    * `table`, ascending (empty outside snapshot mode). */
+    * `table`, ascending. */
   def snapshotVersions(table: String): Seq[Long] =
     storeOf(table).snapshotVersions
 
@@ -1033,7 +1029,7 @@ final class Engine(val spark: SparkSession, rootPath: String,
     * as long as the frame lives, regardless of concurrent
     * saves/deletes/packs (until a vacuum whose grace the deployment
     * must set ≥ this reader's runtime). None when the table has no
-    * cold data (or the engine is not in snapshot mode). Tombstones
+    * cold data. Tombstones
     * apply exactly as the owning store's reads do. Routed through
     * [[storeOf]] first: an unknown table throws like every other
     * command (not a silent None), and opening the store rolls any
@@ -1083,12 +1079,8 @@ final class Engine(val spark: SparkSession, rootPath: String,
   /** Record a consistent cut across `tables` (default: every declared
     * table): flush each table's hot tail, then atomically record each
     * table's committed generation under one monotonic cut id.
-    * Returns the cut id — the single number a training run records.
-    * Requires snapshot mode (generations only exist there). */
+    * Returns the cut id — the single number a training run records. */
   def snapshotAll(tables: Seq[String] = Seq.empty): Long = synchronized {
-    require(snapshots,
-      "engine-wide snapshot cuts require an engine opened with " +
-        "snapshots = true")
     val ts = if (tables.nonEmpty) tables else catalog.tables.toSeq.sorted
     require(ts.nonEmpty, "snapshotAll: no tables declared")
     // flush first: the cut must include rows already set() — a cut
@@ -1166,7 +1158,7 @@ final class Engine(val spark: SparkSession, rootPath: String,
     * forgotten. `maxAgeMs <= 0` disables (default). */
   def staleCutWarnings(maxAgeMs: Long,
       now: Long = System.currentTimeMillis()): Seq[String] =
-    if (maxAgeMs <= 0L || !snapshots) Seq.empty
+    if (maxAgeMs <= 0L) Seq.empty
     else listCuts(now).filter(_.ageMs > maxAgeMs).map { c =>
       s"cut ${c.id} is ${c.ageMs} ms old (> $maxAgeMs ms): it pins " +
         c.tables.toSeq.sortBy(_._1)
@@ -1646,8 +1638,6 @@ final class Engine(val spark: SparkSession, rootPath: String,
       orderKey: org.apache.spark.sql.Column,
       value: org.apache.spark.sql.Column,
       volume: org.apache.spark.sql.Column): Long = {
-    require(snapshots, "rollup maintenance diffs committed generations " +
-      "— snapshot mode only")
     require(graft.ops.Rollup.readBarCursor(spark, barRoot).isEmpty,
       s"$barRoot is already a maintained bar store (it has a cursor) " +
         "— re-seeding slot 0 would double-count rows already in later " +
@@ -1756,8 +1746,6 @@ final class Engine(val spark: SparkSession, rootPath: String,
       orderKey: org.apache.spark.sql.Column,
       value: org.apache.spark.sql.Column,
       volume: org.apache.spark.sql.Column): (Seq[String], Seq[String]) = {
-    require(snapshots, "rollup maintenance diffs committed generations " +
-      "— snapshot mode only")
     val st = storeOf(table)
     maintLock(barRoot).synchronized {
       ensureMaintLease(barRoot, "round start")
@@ -1907,8 +1895,6 @@ final class Engine(val spark: SparkSession, rootPath: String,
       housekeepGroupCols: Seq[String] = Seq.empty,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(snapshots, "rollup maintenance diffs committed generations " +
-      "— snapshot mode only")
     require(housekeepEveryBatches <= 0 || housekeepGroupCols.nonEmpty,
       "housekeeping needs the stored partials' group column names " +
         "(housekeepGroupCols) — they cannot be inferred safely")
@@ -1963,16 +1949,14 @@ final class Engine(val spark: SparkSession, rootPath: String,
     * publish point, like the reference's disk flush.)
     *
     * The sync cost is proportional to the CHANGE, preserving `save`'s
-    * O(dirty days) property: a save adds exactly its dirty-day
-    * partitions (`ALTER TABLE … ADD IF NOT EXISTS PARTITION`), a pack
-    * only drops cached file listings, and only a wholesale rewrite
-    * (`del`/`drop`) — which may remove partitions — pays the full
-    * `MSCK … SYNC PARTITIONS` re-list. Calling exposeSql again (same
-    * or another db) keeps every earlier registration live.
+    * O(dirty days) property: a save or `del` re-pins exactly the days
+    * it touched, and only a wholesale rewrite (`pack`, restore) pays a
+    * full partition re-sync. Calling exposeSql again (same or another
+    * db) keeps every earlier registration live.
     *
-    * On a snapshot-mode engine the backing table skips filesystem
-    * discovery entirely: each day partition's LOCATION is pinned to
-    * the manifest-committed `__v=N` dir and every cold rewrite re-pins
+    * The backing table skips filesystem discovery entirely: each day
+    * partition's LOCATION is pinned to the manifest-committed `__v=N`
+    * dir and every cold rewrite re-pins
     * exactly the affected days — SQL clients read the committed
     * snapshot (never a superseded or half-committed version), and a
     * scan already running when a commit lands keeps its pinned file
@@ -1998,24 +1982,18 @@ final class Engine(val spark: SparkSession, rootPath: String,
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     dropRegistration(qn)
     dropRegistration(backing)
-    if (snapshots) {
-      // over a versioned layout, filesystem partition discovery would
-      // union EVERY `__v=N` dir — duplicate rows, and deletes
-      // resurrected from superseded versions a vacuum has not
-      // reclaimed yet. Register the backing table with an EXPLICIT
-      // schema and no discovery, then pin each day partition's
-      // LOCATION to the manifest-committed version dir: SQL clients
-      // read exactly the committed snapshot, day predicates still
-      // prune through the catalog partitions, and in-flight scans of
-      // a superseded version survive a concurrent commit for as long
-      // as the vacuum grace keeps its files (the same reader contract
-      // openSnapshot pins).
-      createPinnedBacking(st, table, backing)
-      pinSnapshotPartitions(st, backing, st.snapshotDays)
-    } else {
-      spark.catalog.createTable(backing, "parquet", Map("path" -> st.path))
-      spark.catalog.recoverPartitions(backing)
-    }
+    // filesystem partition discovery over the versioned layout would
+    // union EVERY `__v=N` dir — duplicate rows, and deletes resurrected
+    // from superseded versions a vacuum has not reclaimed yet. Register
+    // the backing table with an EXPLICIT schema and no discovery, then
+    // pin each day partition's LOCATION to the manifest-committed
+    // version dir: SQL clients read exactly the committed snapshot, day
+    // predicates still prune through the catalog partitions, and
+    // in-flight scans of a superseded version survive a concurrent
+    // commit for as long as the vacuum grace keeps its files (the same
+    // reader contract openSnapshot pins).
+    createPinnedBacking(st, table, backing)
+    pinSnapshotPartitions(st, backing, st.snapshotDays)
     createSqlView(st, table, qn, backing)
     sqlNames.updateWith(table)(prev =>
       Some(prev.getOrElse(Vector.empty).filterNot(_._1 == qn) :+ (qn, backing)))
@@ -2028,11 +2006,11 @@ final class Engine(val spark: SparkSession, rootPath: String,
     }
     st.onColdChange = change => sqlNames.getOrElse(table, Vector.empty)
       .foreach { case (view, back) =>
-        if (snapshots) change match {
-          // every snapshot-mode rewrite moves the affected days to a
-          // NEW version dir, so the sync is a location re-pin (still
-          // proportional to the CHANGE — the manifest lookup is one
-          // sidecar read, the ALTERs touch only affected days)
+        change match {
+          // every rewrite moves the affected days to a NEW version
+          // dir, so the sync is a location re-pin (still proportional
+          // to the CHANGE — the manifest lookup is one sidecar read,
+          // the ALTERs touch only affected days)
           case TsStore.DaysUpserted(days) =>
             pinSnapshotDays(st, back, days)
           case TsStore.DaysReplaced(replaced, removed) =>
@@ -2045,44 +2023,14 @@ final class Engine(val spark: SparkSession, rootPath: String,
           case TsStore.Tombstoned =>
             createSqlView(st, table, view, back)
           case TsStore.Rewritten =>
-            // pack: the manifest is now EXACTLY the produced days —
-            // full partition re-sync (drop gone days, re-pin the rest)
-            // and re-view (tombstones were materialized away)
+            // pack/restore: the manifest is a new day set — full
+            // partition re-sync (drop gone days, re-pin the rest) and
+            // re-view (tombstones moved)
             resyncSnapshotPartitions(st, back)
             createSqlView(st, table, view, back)
-          case TsStore.Compacted =>
-            // unreachable in snapshot mode today — pack routes through
-            // packSnapshot, which emits Rewritten; kept total so a
-            // future flat-path emit degrades to a refresh, not a crash
-            ()
-        } else change match {
-          case TsStore.DaysUpserted(days) =>
-            // save never removes a day — targeted ADDs, no full re-list
-            days.foreach(d => spark.sql(
-              s"ALTER TABLE $back ADD IF NOT EXISTS PARTITION " +
-                s"(__day='${d.replace("'", "''")}')"))
-          case TsStore.DaysReplaced(replaced, removed) =>
-            // del: targeted per-day sync, proportional to the CHANGE —
-            // replaced days were rewritten in place, removed days lost
-            // their last row; neither needs a full re-list
-            replaced.foreach(d => spark.sql(
-              s"ALTER TABLE $back ADD IF NOT EXISTS PARTITION " +
-                s"(__day='${d.replace("'", "''")}')"))
-            removed.foreach(d => spark.sql(
-              s"ALTER TABLE $back DROP IF EXISTS PARTITION " +
-                s"(__day='${d.replace("'", "''")}')"))
-          case TsStore.Tombstoned =>
-            // drop: no file changed — only the view's tombstone WHERE
-            createSqlView(st, table, view, back)
-          case TsStore.Rewritten =>
-            // pack materialized tombstones: day set may have shrunk and
-            // the tombstone predicate is now empty — re-list + re-view
-            spark.sql(s"MSCK REPAIR TABLE $back SYNC PARTITIONS")
-            createSqlView(st, table, view, back)
-          case TsStore.Compacted => // day set unchanged; refresh below
         }
-        // drop the cached file index in every case — in-place day dir
-        // renames and compactions would otherwise serve stale listings
+        // drop the cached file index in every case — re-pinned
+        // locations would otherwise serve stale listings
         spark.catalog.refreshTable(back)
       }
     qn
@@ -2102,7 +2050,7 @@ final class Engine(val spark: SparkSession, rootPath: String,
     spark.sql(s"SHOW PARTITIONS $backing").collect()
       .map(r => snapshotDayVal(r.getString(0))).toSet
 
-  /** BULK-pin day partitions of a snapshot-mode backing table to
+  /** BULK-pin day partitions of a backing table to
     * their manifest-committed version dirs — `pins` are (escaped day
     * dir name, version) pairs as [[TsStore.snapshotDays]] returns
     * them. For the bulk paths only (initial exposure, pack resync),
@@ -2189,9 +2137,9 @@ final class Engine(val spark: SparkSession, rootPath: String,
       pinnedDays.put(backing, known ++ specs.map(_._1))
   }
 
-  /** Full catalog↔manifest partition re-sync for a snapshot-mode
-    * backing table (pack may both move and remove days): drop catalog
-    * partitions the manifest no longer lists, re-pin every listed one. */
+  /** Full catalog↔manifest partition re-sync for a backing table
+    * (pack may both move and remove days): drop catalog partitions the
+    * manifest no longer lists, re-pin every listed one. */
   private def resyncSnapshotPartitions(st: TsStore, backing: String): Unit = {
     val manifest = st.snapshotDays
     val live = manifest.map(p => snapshotDayVal(p._1)).toSet
@@ -2202,11 +2150,10 @@ final class Engine(val spark: SparkSession, rootPath: String,
   }
 
   /** Register `backing` as an explicit-schema, no-discovery
-    * partitioned parquet table over `st`'s root — the snapshot-mode
-    * registration shape: filesystem partition discovery over a
-    * versioned layout would union every `__v=N` dir (duplicate rows,
-    * resurrected deletes), so each day partition's LOCATION is pinned
-    * to one committed version dir by the caller instead. */
+    * partitioned parquet table over `st`'s root: filesystem partition
+    * discovery over the versioned layout would union every `__v=N` dir
+    * (duplicate rows, resurrected deletes), so each day partition's
+    * LOCATION is pinned to one committed version dir by the caller. */
   private def createPinnedBacking(st: TsStore, table: String,
       backing: String): Unit = {
     val sdb = catalog.get(table).getOrElse(
@@ -2240,9 +2187,6 @@ final class Engine(val spark: SparkSession, rootPath: String,
     * `<db>.<table>__v<v>` so live and time-travel views of one table
     * coexist in one database. */
   def exposeSqlAt(table: String, v: Long, db: String = "graft"): String = {
-    require(snapshots,
-      s"time-travel SQL exposure requires an engine opened with " +
-        "snapshots = true")
     val st = storeOf(table)
     val (days, tombs) = st.historyRecord(v).getOrElse(
       throw new IllegalArgumentException(

@@ -36,41 +36,42 @@ import org.apache.spark.storage.StorageLevel
   * single dispatcher thread (sisdb_server.c:474-476) — the store keeps
   * one writer's view consistent, it is not a concurrency layer.
   *
-  * ==Concurrent-reader contract==
-  * Cold rewrites commit per day partition by delete-dest + rename (and
-  * `pack` swaps the whole store by rename-aside). Renames are atomic,
-  * so a CONCURRENT reader never sees torn files — but a read that
-  * lists partitions in the millisecond window between a day's delete
-  * and its rename-in can miss that day, and a multi-day `del` is not
-  * a snapshot (a racing read may see day A rewritten and day B not
-  * yet). This is the reference's own position — every command runs on
-  * one dispatcher thread, readers included (sisdb_server.c:474-476) —
-  * and the single-process engine serializes through `synchronized`
-  * the same way. Deployments that add OUT-OF-PROCESS readers (e.g.
-  * external SQL engines over the same parquet paths) and cannot
-  * tolerate a transiently missing day during a swap get SNAPSHOT
-  * MODE (`snapshots = true`): cold commits write versioned
-  * `__day=X/__v=N` dirs and the single commit point is an EXCLUSIVE
-  * CLAIM of the next numbered manifest slot (`__snapshot.<v>.<k>
-  * .json`, day → version inside) — exactly one of N concurrent
-  * claimants of a slot wins, so a commit either linearizes fully or
-  * fails loudly with nothing published; readers resolve the max slot.
-  * Nothing a committed manifest references is ever deleted by a
-  * later commit — a reader that pinned a manifest ([[TsStore
-  * .openSnapshot]]) reads immutable dirs for as long as it runs, a
+  * ==On-disk layout and the concurrent-reader contract==
+  * One layout: every cold rewrite (save, delete, pack) writes NEW
+  * versioned day dirs `__day=X/__v=N` and commits them by an
+  * EXCLUSIVE CLAIM of the next numbered manifest slot
+  * (`__snapshot.<v>.<k>.json`, day → version inside) — exactly one of
+  * N concurrent claimants of a slot wins, so a commit either
+  * linearizes fully or fails loudly with nothing published; readers
+  * resolve the max slot. Nothing a committed manifest references is
+  * ever deleted by a later commit — a reader that pinned a manifest
+  * ([[TsStore.openSnapshot]], also an out-of-process SQL engine over
+  * the pinned dirs) reads immutable dirs for as long as it runs, a
   * multi-day delete/save/pack is all-or-nothing (readers see the old
-  * snapshot in full until the manifest swaps, the new one in full
-  * after), and a writer crash before the manifest commit is a no-op
-  * (orphan version dirs are inert). Superseded versions are garbage-
-  * collected by [[vacuum]], which the operator schedules with a
-  * grace ≥ the longest reader runtime — the same retention contract
-  * Iceberg/Delta expire-snapshots carry. PORTABILITY: the commit
-  * protocol assumes atomic rename (HDFS/posix true, S3 false — object
-  * stores need a manifest-committer deployment regardless); it does
-  * NOT assume meaningful directory mtimes — every grace that measures
-  * "time since placement" reads the committer-written placed-at stamp
-  * inside the version dir ([[TsStore.PlacedStamp]]), with dir mtime
-  * only as a legacy fallback.
+  * snapshot in full until the slot claim, the new one in full after),
+  * and a writer crash before the claim is a no-op (orphan version
+  * dirs are inert). Superseded versions are reclaimed ONLY by
+  * [[vacuum]] (or its opt-in scheduled form, [[autoVacuum]] /
+  * [[graft.api.Engine.autoVacuum]] — off unless configured): a store
+  * that is never vacuumed keeps every version it ever wrote. The
+  * operator runs it with a grace ≥ the longest reader runtime — the
+  * same retention contract Iceberg/Delta expire-snapshots carry.
+  *
+  * A placing commit writes two small sidecars: the generation's
+  * RESERVATION (`__resv.<v>.json` — the complete commit instruction:
+  * staged tmp, days to place, the next manifest with its ingest
+  * watermark, the tombstones of its history record) and the manifest
+  * slot. After the claim the reservation is renamed into the
+  * generation's time-travel record, and the slot GC retires is
+  * renamed over the floor record — no further file writes.
+  * PORTABILITY: the commit protocol assumes atomic rename (HDFS/posix
+  * true, S3 false — object stores need a manifest-committer deployment
+  * regardless); it does NOT assume meaningful directory mtimes — the
+  * reader grace dates a version by when its data files were written
+  * ([[TsStore.placedAt]]). The root's filesystem is resolved from `path` itself,
+  * so a root on a non-default scheme works. Roots written by the
+  * retired flat layout (meta sidecar `"snapshots": false`) are refused
+  * at open.
   */
 final class TsStore(
     val spark: SparkSession,
@@ -81,8 +82,7 @@ final class TsStore(
     val dayCol: org.apache.spark.sql.Column,
     val schema: Option[org.apache.spark.sql.types.StructType] = None,
     val maxHotRows: Long = 4L << 20,
-    val maxHotBatches: Int = 64,
-    val snapshots: Boolean = false) {
+    val maxHotBatches: Int = 64) {
 
   private var hotFrames: Vector[DataFrame] = Vector.empty
   // the PERSISTED originals behind hotFrames: deleteWhere/dropSubject
@@ -99,6 +99,11 @@ final class TsStore(
   // to computing. Exactness matters: save REQUIREs produced day dirs
   // == dirty days, so an overcount is an error, never "just slower".
   private var hotDays: Option[Set[String]] = Some(Set.empty)
+  // the ingest-sequence watermark. Durable in two places: every
+  // placing commit carries it in its reservation and manifest (so the
+  // rows a commit stamps and the watermark covering them land in ONE
+  // atomic claim), and the meta sidecar carries it whenever the
+  // tombstones change. Open takes the max of both.
   private var seq: Long = 0L
   // M6 tombstones: subject → drop-sequence. A `drop` is an O(1)
   // metadata write (the reference marks blocks moved and erases them at
@@ -108,107 +113,36 @@ final class TsStore(
   // stamp `__seq` with the CURRENT ingest sequence, so rows written
   // after the drop (a re-created subject) always outrank the tombstone.
   private var tombstones: Map[String, Long] = Map.empty
-  // mode/layout guard BEFORE recovery touches anything: a flat store
-  // opened with snapshots=true would read as EMPTY (no manifest) and
-  // the next save would bury live flat day dirs under version dirs; a
-  // snapshot store opened flat would scan every superseded version as
-  // data. Neither failure is detectable from results — fail loudly.
-  // The layouts differ INSIDE the day dirs (flat: data files directly;
-  // snapshot: only `__v=N` subdirs), which stays true across every
-  // crash state — the manifest alone does not (a first save can crash
-  // after placing versions, before the first manifest commit). A store
-  // with ZERO committed day dirs has no layout to probe, but may still
-  // hold a roll-forward-able tmp from a crashed FIRST save — the meta
-  // sidecar records the writing mode (and persistMeta runs before any
-  // tmp write, so the record exists whenever such a tmp can), closing
-  // the window where wrong-mode recovery would destroy or re-layout it.
-  // The node parsed here is handed to loadMeta (nothing between the
-  // guard and loadMeta rewrites the file), so open reads the sidecar
-  // once — on a 10k-table root that is 10k fewer namenode round-trips.
-  private var metaNodeAtOpen: Option[com.fasterxml.jackson.databind.JsonNode] =
-    None
-  locally {
-    // probe the first NON-EMPTY day dir: an empty one (a crash between
-    // placeVersions' mkdirs and its rename, or between vacuum deleting
-    // a day's last version dir and the day dir itself) carries no
-    // layout evidence, and misreading it as "flat" would brick the
-    // open that recovery needs to heal exactly that crash
-    val probe = dayDirs(new org.apache.hadoop.fs.Path(path))
-      .iterator
-      .map { case (name, _) =>
-        fs.listStatus(new org.apache.hadoop.fs.Path(path, name)).toSeq }
-      .find(_.nonEmpty)
-      .map(_.exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("__v=")))
-    require(!(snapshots && probe.contains(false)),
-      s"$path holds a flat-layout store — open it with snapshots = " +
-        "false, or migrate by rewriting through a snapshot-mode save")
-    require(!(!snapshots && (probe.contains(true) ||
-        TsStore.anyManifest(fs, path))),
-      s"$path was written in snapshot mode — open it with snapshots = true")
-    metaNodeAtOpen =
-      if (!fs.exists(metaFile)) None
-      else Some(new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(TsStore.readJsonBytes(fs, metaFile)))
-    val metaMode: Option[Boolean] = metaNodeAtOpen
-      .filter(_.has("snapshots")) // pre-mode-record meta: layout probe only
-      .map(_.path("snapshots").asBoolean())
-    require(!metaMode.exists(_ != snapshots),
-      s"$path was written with snapshots = ${metaMode.get} — open it " +
-        "with the same mode")
-  }
   // ── cross-process writer fence. The reference cannot have two
-  // writer processes by construction — every command runs on one
-  // dispatcher thread of one server (sisdb_server.c:474-476). Here
-  // the single-writer contract (scaladoc above) is ENFORCED, not just
-  // documented, by two layers with distinct jobs:
+  // writer processes by construction (one dispatcher thread,
+  // sisdb_server.c:474-476); here the single-writer contract is
+  // ENFORCED by two layers with distinct jobs:
   //
   //  POLICY — the lease: a handle's FIRST MUTATION takes over a lease
   //  sidecar (a unique token — the fencing identity — plus a
-  //  best-effort diagnostic epoch, committed by atomic rename-over),
-  //  and every later mutation re-checks the token before touching the
-  //  live store — so of two live writer handles on one root, the
-  //  superseded one fails loudly at its next write. Acquisition is
-  //  lazy, at first mutation rather than at open, so a process that
-  //  opens the store only to READ (an engine serving get/exposeSql, a
-  //  snapshot inspector) never fences the active writer — read
-  //  coexistence is the vacuum-grace contract's whole point. Takeover
-  //  (not mutual exclusion) is deliberate: a crashed writer must never
-  //  brick the store behind a stale lock file, and a restart is
-  //  indistinguishable from a takeover. Acquiring over a root with a
-  //  RESERVED-but-uncommitted generation first seals or adopts it
-  //  ([[sealOrAdoptPendingSlots]]), so the new writer's own commits
-  //  start from a sequence with nothing in flight under them.
+  //  diagnostic epoch, committed by atomic rename-over), and every
+  //  later mutation re-checks the token, so of two writer handles on
+  //  one root the superseded one fails loudly at its next write.
+  //  Acquisition is lazy, so a process that only READS never fences
+  //  the writer. Takeover (not mutual exclusion) is deliberate: a
+  //  crashed writer must never brick the store behind a stale lock,
+  //  and a restart is indistinguishable from a takeover. Acquiring
+  //  over a RESERVED-but-uncommitted generation first seals or adopts
+  //  it ([[sealOrAdoptPendingSlots]]).
   //
   //  SAFETY — the claims: the commit point is an EXCLUSIVE CLAIM of a
   //  numbered manifest slot ([[commitSnapshot]]), and every placement
-  //  of day dirs is preceded by an exclusive claim of its generation
+  //  is preceded by an exclusive claim of its generation
   //  ([[claimOrAdoptResv]]) with writer-token-unique staging paths.
-  //  Lease checks order who SHOULD win; the claims guarantee that
-  //  whatever happens in the unobservable instants between a check
-  //  and an action, every commit either linearizes fully or fails
-  //  loudly with nothing published — no lost update, no mixed slot,
-  //  no rollback, under ANY interleaving of takeovers and in-flight
-  //  commits. (The old rename-over protocol verified the lease after
-  //  the swap and rolled back on takeover, which left a documented
-  //  residual race of the instants between rename and verify; the
-  //  claim protocol removed both the rollback and the residual.) One
-  //  consequence worth naming: a superseded writer's ALREADY-IN-FLIGHT
-  //  commit may still win its slot claim and land — consistently,
-  //  linearized before the takeover's first write, and adopted as the
-  //  new writer's baseline; the fence then stops the superseded
-  //  writer's NEXT mutation. Recovery at open can itself commit
-  //  (roll-forward), which takes the lease then — correct: replaying
-  //  a pending commit IS writing.
+  //  Whatever happens between a lease check and an action, every
+  //  commit linearizes fully or fails loudly with nothing published —
+  //  no lost update, no mixed slot, no rollback. A superseded writer's
+  //  ALREADY-IN-FLIGHT commit may still win its claim and land,
+  //  linearized before the takeover's first write; the fence stops
+  //  its NEXT mutation. Recovery that rolls a commit forward takes the
+  //  lease — replaying a pending commit IS writing.
   @volatile private var leaseToken: Option[String] = None
   @volatile private var leaseEpoch: Long = 0L
-  // meta BEFORE recovery: a recovery-path snapshot commit mints the
-  // generation's time-travel history record from the live tombstone
-  // map — replaying with the sidecar not yet loaded would stamp the
-  // record with EMPTY tombstones, silently rewriting the as-of
-  // history a clean run records. Safe in this order: recovery never
-  // rewrites the meta sidecar, and the watermark it loads was
-  // persisted before any roll-forward-able tmp existed (see save).
 
   // ── incremental-vacuum bookkeeping: the commit path records which
   // day dirs it touched since the last vacuum, so the SCHEDULED
@@ -243,7 +177,7 @@ final class TsStore(
   // cached GC floor (-1 = not yet read). Pre-claim resurrection
   // checks read this (cheap); every claim WINNER re-reads the real
   // file post-claim (the authoritative check), which also refreshes
-  // the cache. GC's own floor writes refresh it too.
+  // the cache. GC's own floor advances refresh it too.
   private var floorCache: Long = -1L
   private def cachedFloor: Long = {
     if (floorCache < 0L) floorCache = TsStore.readFloor(fs, path)
@@ -261,11 +195,8 @@ final class TsStore(
   // probed once per handle: after the first numbered commit deletes
   // it, the legacy single-file manifest can never reappear
   private var legacySnapMayExist: Boolean = true
-  private var histDirReady = false
   private var coldCacheKey: Option[(Long, Long, Int, Int)] = None
   private var coldCacheFrame: Option[DataFrame] = None
-  // flat-mode external freshness fingerprint (see [[cold]]'s flat branch)
-  private var flatColdSig: Seq[(String, Long)] = Nil
   private var coldEpoch: Long = 0L
   // pinned-read (time-travel) plan cache: a generation's referenced
   // version dirs are immutable, so the constructed frame is reusable
@@ -275,41 +206,35 @@ final class TsStore(
   // within an epoch). Plan metadata only — actions still scan.
   private var pinnedCache: Map[Long, Option[DataFrame]] = Map.empty
 
-  /** Test-only hook, invoked between the fence check and the manifest
-    * slot CLAIM — lets a spec land a competing takeover exactly inside
-    * the commit window. Under the claimed-slot protocol either order
-    * is safe: the claim is the single arbiter, so the in-flight commit
-    * linearizes fully (the takeover then builds on it) or fails loudly
-    * (nothing published) — there is no rollback and no verify window.
-    * Declared before the recovery call below (recovery can commit). */
+  /** Test-only hooks, invoked just before the manifest slot CLAIM and
+    * just before a placing commit's generation RESERVATION claim — they
+    * let a spec land a competing takeover inside the commit window.
+    * Either order is safe: the claims are the single arbiter, so the
+    * in-flight commit linearizes fully or fails loudly (nothing
+    * published). Declared before the recovery call below. */
   private[graft] var onBeforeSnapshotClaim: () => Unit = () => ()
+  private[graft] var onBeforeResvClaim: () => Unit = () => ()
 
+  // meta BEFORE recovery: a seal during recovery mints its
+  // generation's time-travel record from the live tombstone map —
+  // replaying with the sidecar not yet loaded would stamp the record
+  // with EMPTY tombstones, silently rewriting the as-of history a
+  // clean run records
   loadMeta()
-  recoverSwaps()
+  recover()
 
   // ── schema eras (the reference's version-tolerant convert,
-  // sis_dynamic.h:12-51: server and client exchange schema
-  // dictionaries and a field-by-field converter bridges record
-  // layouts; rule sis_dynamic.h:110-117 — same style carries/widens,
-  // different style → 0/empty, never a best-effort cast). A store
-  // that has EVOLVED carries its schema history in a `__schemas`
-  // sidecar dir: one record per era, `e=N.json` = {era,
-  // fromGeneration, dsl}. In SNAPSHOT mode no per-day bookkeeping is
-  // needed: a day-version dir `__v=V` is only ever written by the
-  // commit that advanced the manifest to generation V, and
+  // sis_dynamic.h:12-51; rule sis_dynamic.h:110-117 — same style
+  // carries/widens, different style → 0/empty). An EVOLVED store keeps
+  // one record per era in a `__schemas` sidecar dir (`e=N.json` =
+  // {era, fromGeneration, dsl}). A day-version dir `__v=V` is only
+  // ever written by the commit that advanced to generation V, and
   // [[evolveSchema]] flushes before recording `fromGeneration =
-  // current generation + 1` — so a dir's writing era is a pure
-  // function of its version number ([[TsStore.eraOfGen]]) and the
-  // existing commit/recovery/vacuum machinery is untouched. Cold
-  // reads group day dirs by era, read each group self-described, and
-  // [[graft.ops.Convert.alignKeeping]] every non-live group to the
-  // era the read targets (live reads → latest era; time travel → the
-  // era live AT that generation). FLAT mode has no generation to hang
-  // an era on (data dirs and metadata commit in separate renames), so
-  // a flat evolve MIGRATES: one aligned whole-store rewrite through
-  // the crash-safe pack swap — flat stores stay single-era by
-  // construction. Stores that never evolve have no `__schemas` dir
-  // and every read path is byte-identical to before this feature.
+  // current generation + 1` — so a dir's era is a pure function of
+  // its version number ([[TsStore.eraOfGen]]). Cold reads group day
+  // dirs by era and [[graft.ops.Convert.alignKeeping]] every non-target
+  // group (live reads → latest era; time travel → the era live AT that
+  // generation). Never-evolved stores have no `__schemas` dir.
   private var eraRecords: Seq[TsStore.EraRecord] =
     TsStore.readEras(fs, path)
 
@@ -352,12 +277,8 @@ final class TsStore(
   private def leaseFile =
     new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__lease.json")
 
-  private def readLease(): Option[com.fasterxml.jackson.databind.JsonNode] = {
-    val f = fs
-    if (!f.exists(leaseFile)) None
-    else scala.util.Try(new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(TsStore.readJsonBytes(f, leaseFile))).toOption
-  }
+  private def readLease(): Option[com.fasterxml.jackson.databind.JsonNode] =
+    scala.util.Try(TsStore.readJsonOpt(fs, leaseFile)).toOption.flatten
 
   private def acquireLease(): String = {
     val f = fs
@@ -368,8 +289,7 @@ final class TsStore(
     // messages, the manifest's writer record), not the identity.
     val epoch = readLease().map(_.path("epoch").asLong(0L)).getOrElse(0L) + 1
     val token = java.util.UUID.randomUUID().toString
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = m.createObjectNode()
+    val root = TsStore.Json.createObjectNode()
     root.put("epoch", epoch)
     root.put("token", token)
     root.put("owner", s"${ProcessHandle.current().pid()}@" +
@@ -377,8 +297,7 @@ final class TsStore(
     root.put("acquiredAt", System.currentTimeMillis())
     val tmp = new org.apache.hadoop.fs.Path(
       path.stripSuffix("/") + "__lease.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(m.writeValueAsBytes(root)) finally out.close()
+    TsStore.writeBytes(f, tmp, TsStore.Json.writeValueAsBytes(root))
     TsStore.atomicReplace(f, tmp, leaseFile)
     leaseEpoch = epoch
     // the token must be set BEFORE the seal/adopt pass: sealing
@@ -390,26 +309,17 @@ final class TsStore(
   }
 
   /** The new lease holder's first duty: resolve every RESERVED but
-    * UNCOMMITTED generation above the live manifest, so its own
-    * commits start from a sequence with no in-flight slots under it.
-    * For each pending reservation (ascending — they are dense: a
-    * reservation's baseline is always the committed generation below
-    * it):
-    *  - the recorded commit instruction is still COMPLETE on disk →
-    *    ADOPT: roll it forward (placements replay byte-identically
-    *    from the same tmp; the slot claim tolerates the owner racing
-    *    us with equal content). An in-flight commit that got this far
-    *    is linearized BEFORE this takeover.
+    * UNCOMMITTED generation above the live manifest (ascending — they
+    * chain densely from the committed generation):
+    *  - the instruction is COMPLETE (its staged tmp still holds the
+    *    job's `_SUCCESS`) → ADOPT: [[replay]] it; the in-flight commit
+    *    is linearized BEFORE this takeover;
     *  - incomplete/vanished → SEAL: claim the slot with an empty
-    *    advance (baseline days under the reserved generation). The
-    *    old writer's eventual claim of the slot then fails atomically
-    *    — FENCED with nothing published, no rollback needed.
-    * If the old writer's real commit wins a race against our seal,
-    * the loop re-reads and simply builds on it. Snapshot mode only;
-    * a no-op whenever no reservation is pending (the common case —
-    * one extra listing per lease acquisition). */
+    *    advance, so the old writer's eventual claim fails atomically —
+    *    FENCED with nothing published.
+    * If the old writer's real commit wins a race against our seal, the
+    * loop re-reads and builds on it. One listing when nothing pends. */
   private def sealOrAdoptPendingSlots(): Unit = {
-    if (!snapshots) return
     val f = fs
     var guard = 0
     var done = false
@@ -427,36 +337,20 @@ final class TsStore(
           s"$path: reservation for generation $rv pends over a live " +
             s"manifest at ${snap.v} with a gap — protocol corruption " +
             "(reservations chain densely from the committed generation)")
-        val info = scala.util.Try(new com.fasterxml.jackson.databind
-          .ObjectMapper().readTree(TsStore.readJsonBytes(f,
-            TsStore.resvFile(path, rv)))).toOption
-        val tmpP = info.map(i => new org.apache.hadoop.fs.Path(
-          i.path("tmp").asText()))
-        val kind = info.map(_.path("kind").asText()).getOrElse("")
-        val manifest = if (kind == "deleting") TsStore.AffectedManifest
-          else TsStore.CommitManifest
-        val complete = tmpP.exists(t =>
-          f.exists(new org.apache.hadoop.fs.Path(t, "_SUCCESS")) &&
-            f.exists(new org.apache.hadoop.fs.Path(t, manifest)))
-        if (complete) {
-          kind match {
-            case "deleting" => commitDeletingSnapshot(tmpP.get)
-            case "packed" => commitPackedSnapshot(tmpP.get)
-            case _ => commitSavingSnapshot(tmpP.get)
-          }
-          f.delete(tmpP.get, true)
-        } else {
-          // SEAL: consume the reserved slot with an empty advance. If
-          // the reservation's owner commits the real slot first, our
-          // claim loses — benign: the loop re-reads and the owner's
-          // commit (linearized before this takeover's first write)
-          // becomes our baseline.
-          try commitSnapshot(TsStore.Snapshot(rv, snap.days, snap.removed),
-            advance = true, cur0 = Some(snap))
-          catch {
-            case e: IllegalStateException =>
-              if (!holdsWriteLease) throw e // a THIRD writer took over
-          }
+        TsStore.readInstr(f, path, rv).filter(complete) match {
+          case Some(i) => replay(i)
+          case None =>
+            // SEAL: consume the reserved slot with an empty advance. If
+            // the reservation's owner commits the real slot first, our
+            // claim loses — benign: the loop re-reads and the owner's
+            // commit (linearized before this takeover's first write)
+            // becomes our baseline.
+            try commitSnapshot(snap.copy(v = rv, sub = 0),
+              advance = true, cur0 = Some(snap))
+            catch {
+              case e: IllegalStateException =>
+                if (!holdsWriteLease) throw e // a THIRD writer took over
+            }
         }
       }
     }
@@ -474,19 +368,14 @@ final class TsStore(
   }
 
   /** Fail loudly if another writer took over this root since this
-    * handle FIRST WROTE. Checked at every mutation entry (before the
-    * tmp job starts — nothing of the fenced writer's touches disk)
-    * AND at [[commitSnapshot]], the manifest swap itself. The first
-    * check a handle ever makes acquires the lease instead (lazy —
-    * read-only handles never touch it). */
-  // re-entrancy depth for the fence check: a public mutator checks
-  // ONCE at entry (via [[fenced]]); the nested protocol steps it runs
-  // (persistMeta, stagingTmp, claimOrAdoptResv, commitSnapshot) skip
-  // the redundant lease re-reads. This narrows no safety property:
-  // the lease check was always advisory check-then-act — the
-  // exclusive slot/reservation CLAIMS (plus the advance-content rule
-  // in commitSnapshot) are what guarantee a superseded writer's
-  // commit either linearizes fully or fails loudly.
+    * handle FIRST WROTE; the first check a handle makes acquires the
+    * lease instead (lazy: read-only handles never touch it). A public
+    * mutator checks ONCE at entry ([[fenced]]), before its tmp job;
+    * the protocol steps it nests (stagingTmp, claimOrAdoptResv,
+    * commitSnapshot) skip the re-read. That narrows no safety property:
+    * the lease check is advisory check-then-act — the exclusive slot
+    * and reservation CLAIMS make a superseded writer's commit
+    * linearize fully or fail loudly. */
   private var fenceDepth: Int = 0
   private def fenced[A](body: => A): A = synchronized {
     checkFence()
@@ -536,7 +425,7 @@ final class TsStore(
     * inside a commit — vacuum itself drains pending commits, and a
     * commit-path trigger would recurse). */
   private def maybeAutoVacuum(): Unit = autoVacuum.foreach { av =>
-    if (snapshots && av.everyGenerations > 0 &&
+    if (av.everyGenerations > 0 &&
       loadSnapshot().v % av.everyGenerations == 0) {
       // scoped: the scheduled path lists only the days commits touched
       // since the last vacuum (plus days a wall-clock grace left
@@ -571,70 +460,50 @@ final class TsStore(
     hotDays = Some(Set.empty)
   }
 
-  // "exists" = holds at least one day partition — a delete that empties
-  // the store leaves the root dir (and parquet's _SUCCESS) behind, and
-  // a bare `spark.read.parquet` on a file-less dir cannot infer schema.
-  // Probed through the Hadoop FileSystem like every other path op: a
-  // java.io.File probe is always-false on hdfs://-style schemes, which
-  // would make save() silently overwrite cold data on a real cluster.
-  private def coldExists: Boolean =
-    if (snapshots) loadSnapshot().days.nonEmpty
-    else dayDirs(new org.apache.hadoop.fs.Path(path)).nonEmpty
+  // "exists" = the live manifest holds at least one day
+  private def coldExists: Boolean = loadSnapshot().days.nonEmpty
 
   // ── persisted store metadata (sidecar JSON next to the parquet root):
-  // the ingest-sequence watermark and the live tombstones. Persisted on
-  // every save/drop so a restarted store (a) keeps issuing sequences
-  // above every recorded drop and (b) keeps dropped subjects dead.
+  // the live tombstones plus the ingest-sequence watermark. Persisted
+  // whenever the tombstones change (drop, pack, restore) so a
+  // restarted store keeps dropped subjects dead and keeps issuing
+  // sequences above every recorded drop.
   private def metaFile =
     new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__meta.json")
 
-  private def loadMeta(): Unit = {
-    // reuse the node the open guard already parsed; fall back to a
-    // fresh read for any other call path
-    val nodeOpt = metaNodeAtOpen.orElse {
-      if (!fs.exists(metaFile)) None
-      else Some(new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(TsStore.readJsonBytes(fs, metaFile)))
-    }
-    metaNodeAtOpen = None
-    nodeOpt.foreach { node =>
+  private def loadMeta(): Unit =
+    TsStore.readJsonOpt(fs, metaFile).foreach { node =>
+      // the retired flat layout recorded its mode here; its day dirs
+      // hold data files directly, which this layout would read as an
+      // empty store and then bury under version dirs — refuse it
+      require(!(node.has("snapshots") && !node.path("snapshots").asBoolean()),
+        s"$path was written by the retired flat store layout " +
+          "(\"snapshots\": false) — rewrite it into a new root through " +
+          "set/save; it cannot be opened in place")
       seq = math.max(seq, node.path("seq").asLong(0L))
-      import scala.jdk.CollectionConverters._
-      tombstones = node.path("tombstones").properties().asScala
-        .map(e => e.getKey -> e.getValue.asLong(0L)).toMap
+      tombstones = TsStore.longMap(node, "tombstones")
     }
-  }
 
   private def persistMeta(): Unit = {
-    checkFence() // before the sidecar write AND the tmp job that follows
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = m.createObjectNode()
+    checkFence() // before the sidecar write
+    val root = TsStore.Json.createObjectNode()
     root.put("seq", seq)
-    root.put("snapshots", snapshots) // mode record — see the open guard
     val t = root.putObject("tombstones")
     tombstones.toSeq.sortBy(_._1).foreach { case (k, v) => t.put(k, v) }
-    // write-tmp + atomic rename-over: an in-place overwrite interrupted
-    // mid-write corrupts the watermark/tombstone file and the store
-    // fails to load (or worse, loads a stale watermark that lets a
-    // later tombstone rank below re-stamped rows). The replace is
-    // [[TsStore.atomicReplace]] — one rename on every filesystem.
+    // write-tmp + atomic rename-over: an overwrite interrupted mid-write
+    // would corrupt the watermark/tombstones the store loads at open
     val tmp = new org.apache.hadoop.fs.Path(
       path.stripSuffix("/") + "__meta.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(m.writeValueAsBytes(root)) finally out.close()
+    TsStore.writeBytes(fs, tmp, TsStore.Json.writeValueAsBytes(root))
     TsStore.atomicReplace(fs, tmp, metaFile)
   }
 
-  // ── snapshot mode: versioned day dirs + a manifest as the single
-  // commit point. The tmp-write halves of save/deleteWhere/pack are
-  // shared with the default mode; only the COMMIT differs — instead
-  // of delete-dest + rename over the live day dirs, each produced day
-  // renames into `__day=X/__v=(v+1)` (under an exclusive per-
-  // generation reservation) and the new manifest is claimed as the
-  // next numbered slot `__snapshot.<v>.<k>.json` — readers resolve
-  // the max slot. Old versions are never touched by a commit, so
-  // pinned readers stay whole; a crash before the slot claim changes
-  // nothing a reader can see.
+  /** The ingest-sequence watermark this handle issues above. */
+  private[graft] def watermark: Long = synchronized(seq)
+
+  // ── the commit protocol (see the class doc): produced days rename
+  // into `__day=X/__v=(v+1)`, then the manifest slot
+  // `__snapshot.<v>.<k>.json` is claimed; readers resolve the max slot.
 
   /** The LEGACY single-file manifest: read as a fallback while no
     * numbered slot exists (stores written before the claim protocol),
@@ -645,15 +514,14 @@ final class TsStore(
   private def histDir =
     new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__snaphist")
 
-  /** The last slot this handle resolved — a probe hint only, never
-    * trusted: [[loadSnapshot]] walks FORWARD from it (slots are dense:
-    * every advance is v+1, every bookkeeping rewrite k+1, and a
-    * takeover seals skipped reservations, so the walk cannot jump a
-    * commit), and a hint whose file GC already retired falls back to
-    * the full listing. Stale reads are impossible either way; the
-    * hint only trades a directory listing for two existence probes on
-    * the steady path. */
-
+  /** The live committed manifest. The last slot this handle resolved
+    * is a probe hint only, never trusted: the walk goes FORWARD from it
+    * (slots are dense: every advance is v+1, every bookkeeping rewrite
+    * k+1, and a takeover seals skipped reservations, so the walk
+    * cannot jump a commit), and a hint whose file GC already retired
+    * falls back to the full listing. Stale reads are impossible either
+    * way; the hint only trades a directory listing for two existence
+    * probes on the steady path. */
   private def loadSnapshot(): TsStore.Snapshot = {
     val f = fs
     slotHint match {
@@ -697,31 +565,34 @@ final class TsStore(
     s
   }
 
-  /** Record a committed manifest generation for time travel:
-    * `__snaphist/v=N.json` holds the generation's day→version map AND
-    * the tombstones live at commit time, so [[TsStore.openSnapshotAt]]
-    * reproduces exactly what a reader pinned at that commit saw
-    * (drops land at the NEXT commit point — `drop` itself is an O(1)
-    * metadata write with no manifest generation). First writer wins:
-    * a crash-replayed commit never rewrites a generation's record.
-    * Written AFTER the live manifest rename — a crash in between
-    * leaves generation N committed but not time-travelable (absent
-    * from [[snapshotVersions]]), never the reverse. */
-  private def writeHistory(s: TsStore.Snapshot): Unit = {
+  /** Record a committed generation for time travel:
+    * `__snaphist/v=N.json` holds its day→version map AND the
+    * tombstones live at commit, so [[TsStore.openSnapshotAt]]
+    * reproduces exactly what a reader pinned at that commit saw.
+    * First writer wins (an exclusive claim). Written AFTER the slot
+    * claim — a crash in between leaves generation N committed but not
+    * time-travelable until [[recover]] finishes the move, never the
+    * reverse. `fromResv`: a placing commit's reservation already holds
+    * exactly this record, so it is renamed into place — no file
+    * write; every other commit (seal, restore, tombstone-only) writes
+    * the record. */
+  private def writeHistory(s: TsStore.Snapshot, fromResv: Boolean = false): Unit = {
     val f = fs
     val dest = new org.apache.hadoop.fs.Path(histDir, s"v=${s.v}.json")
-    if (f.exists(dest)) return
-    val root = TsStore.Json.createObjectNode()
-    root.put("v", s.v)
-    val d = root.putObject("days")
-    s.days.toSeq.sortBy(_._1).foreach { case (k, ver) => d.put(k, ver) }
-    val tb = root.putObject("tombstones")
-    tombstoneList.sortBy(_._1).foreach { case (sub, g) => tb.put(sub, g) }
-    if (!histDirReady) { f.mkdirs(histDir); histDirReady = true }
-    val tmp = new org.apache.hadoop.fs.Path(histDir, s"v=${s.v}.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(TsStore.Json.writeValueAsBytes(root)) finally out.close()
-    if (!f.rename(tmp, dest)) f.delete(tmp, false) // lost the race: fine
+    val moved = fromResv && scala.util.Try(TsStore.commitExclusive(f,
+      TsStore.resvFile(path, s.v), dest)).getOrElse(false)
+    if (!moved && !f.exists(dest)) {
+      val root = TsStore.Json.createObjectNode()
+      root.put("v", s.v)
+      val d = root.putObject("days")
+      s.days.toSeq.sortBy(_._1).foreach { case (k, ver) => d.put(k, ver) }
+      val tb = root.putObject("tombstones")
+      tombstoneList.foreach { case (sub, g) => tb.put(sub, g) }
+      val tmp = new org.apache.hadoop.fs.Path(histDir,
+        s"v=${s.v}.json.tmp.${leaseToken.getOrElse("anon")}")
+      TsStore.writeBytes(f, tmp, TsStore.Json.writeValueAsBytes(root))
+      TsStore.commitExclusive(f, tmp, dest) // lost the race: fine
+    }
   }
 
   /** [[TsStore.readHistRecord]] for this store's root. */
@@ -730,11 +601,8 @@ final class TsStore(
     TsStore.readHistRecord(fs, path, v)
 
   /** The live manifest's committed generation (0 before the first
-    * commit; meaningless outside snapshot mode). The number an
-    * engine-wide cut records per table. */
-  private[graft] def currentGeneration: Long = synchronized {
-    if (!snapshots) 0L else loadSnapshot().v
-  }
+    * commit). The number an engine-wide cut records per table. */
+  private[graft] def currentGeneration: Long = synchronized(loadSnapshot().v)
 
   /** Commit a TOMBSTONE-ONLY generation when the live tombstone map
     * has moved past the last committed generation's record. [[save]]
@@ -748,7 +616,6 @@ final class TsStore(
     * its whole payload is the new history record carrying the
     * current tombstone map. No-op when nothing drifted. */
   private[graft] def commitPendingTombstones(): Unit = synchronized {
-    if (!snapshots) return
     // compare against the latest RETAINED record at or below the live
     // generation — snap.v's own record may have been vacuumed under
     // keepHistory=0, and treating that as "recorded nothing" would
@@ -787,30 +654,19 @@ final class TsStore(
   }
 
   /** RESTORE the live table to committed generation `g`, as a NEW
-    * generation (roll-forward — the Delta/Iceberg RESTORE shape): the
-    * new manifest re-points every day at g's recorded version dirs
-    * (METADATA-ONLY: no data file is read, copied, or moved, so
-    * restore is O(days) at any corpus size), the live tombstones
-    * revert to g's as-of record, and the un-flushed hot tail is
-    * discarded (restore means "the corpus as of g"; rows set() after
-    * the target are post-g by definition). Days committed after g
-    * leave the manifest through the `removed` bookkeeping, so vacuum
-    * reclaims their version dirs after the reader grace like any
-    * other removal. History is never rewritten: generations after g
-    * stay time-travelable, and the restore itself is just the next
-    * generation — a mistaken restore is undone by restoring again.
-    *
-    * Refused when g's history record or any version dir it references
-    * was already vacuumed (restore cannot re-materialize reclaimed
-    * data) — pin the generation with a cut first if restore-ability
-    * matters; a cut's pins make its generations restorable forever.
-    *
-    * Commit order: in-memory tombstones revert BEFORE the manifest
-    * commit so the restore generation's history record carries g's
-    * map; the meta sidecar persists after the swap (a crash between
-    * re-loads pre-restore tombstones under a manifest already at g's
-    * days — re-running the restore converges, like every interrupted
-    * commit here). Returns the new live generation. */
+    * generation (the Delta/Iceberg RESTORE shape): the new manifest
+    * re-points every day at g's recorded version dirs (METADATA-ONLY,
+    * O(days) at any corpus size), the live tombstones revert to g's
+    * as-of record, and the un-flushed hot tail is discarded. Days
+    * committed after g leave through the `removed` bookkeeping, so
+    * vacuum reclaims them after the reader grace. History is never
+    * rewritten — a mistaken restore is undone by restoring again.
+    * Refused when g's history record or any dir it references was
+    * vacuumed (a cut's pins make its generations restorable forever).
+    * Tombstones revert BEFORE the commit (the restore generation's
+    * record carries g's map); the meta sidecar persists after it (a
+    * crash between re-loads pre-restore tombstones — re-running the
+    * restore converges). Returns the new live generation. */
   def restoreTo(g: Long): Long = fenced {
     // the fence (via [[fenced]]) runs first: a first mutation's adopt
     // pass must run before the live generation is read (save's rule)
@@ -828,8 +684,8 @@ final class TsStore(
     // discarded only once the restore has actually committed.
     val prevTombstones = tombstones
     tombstones = tombsG
-    try commitSnapshot(TsStore.Snapshot(snap.v + 1, daysG, removed),
-      advance = true, cur0 = Some(snap))
+    try commitSnapshot(TsStore.Snapshot(snap.v + 1, daysG, removed,
+        seq = math.max(snap.seq, seq)), advance = true, cur0 = Some(snap))
     catch { case e: Throwable => tombstones = prevTombstones; throw e }
     invalidateCold()
     clearHot()
@@ -847,7 +703,6 @@ final class TsStore(
     * before the first restore commits, so a cut with one
     * unrestorable table fails fast instead of fail-partial. */
   private[graft] def validateRestore(g: Long): Unit = synchronized {
-    require(snapshots, s"$path: restoreTo requires snapshot mode")
     val (daysG, _) = TsStore.readHistRecord(fs, path, g).getOrElse(
       throw new IllegalArgumentException(
         s"$path: generation $g is unknown or its history record was " +
@@ -866,7 +721,7 @@ final class TsStore(
   /** Committed generations available for time travel, ascending. */
   def snapshotVersions: Seq[Long] = synchronized {
     val f = fs
-    if (!snapshots || !f.exists(histDir)) Seq.empty
+    if (!f.exists(histDir)) Seq.empty
     else f.listStatus(histDir)
       .map(_.getPath.getName)
       .collect { case TsStore.HistFile(v) => v.toLong }
@@ -874,33 +729,25 @@ final class TsStore(
   }
 
   /** `recordHistory = false` is for same-generation bookkeeping
-    * rewrites (vacuum's removal-record retirement): a generation's
-    * history record must only ever be written by the commit that
-    * ADVANCED to it — re-minting one later would stamp it with
-    * current tombstones instead of as-of-commit tombstones, silently
-    * rewriting time-travel history (and resurrecting records a
-    * keepHistory=0 vacuum just reclaimed).
+    * rewrites (vacuum's removal-record retirement): a history record
+    * is only ever written by the commit that ADVANCED to it — minting
+    * one later would stamp current tombstones over as-of-commit ones.
     *
-    * `advance = true` declares the commit's INSTRUCTION is an advance
-    * (its content was derived as baseline+1) — such a commit must
-    * NEVER fall into the same-generation sub-slot branch: if the live
-    * manifest already sits AT its target generation, either a replay
-    * of this very instruction landed it (equal content → success) or
-    * another writer's commit/seal consumed the generation (different
-    * content → FENCED). Without the flag, a takeover sealing the
-    * reserved generation mid-flight would let the superseded advance
-    * claim `(v, 1)` as a "bookkeeping rewrite" and publish content
-    * derived from the superseded baseline OVER the seal — an
-    * acknowledged commit the next reader silently shadows.
+    * `advance = true` declares the content was derived as baseline+1:
+    * if the live manifest already sits AT the target generation,
+    * either a replay of this very instruction landed it (equal
+    * content → success) or another writer's commit/seal consumed it
+    * (→ FENCED) — it must NEVER fall into the sub-slot branch, where a
+    * superseded advance would publish over a takeover's seal.
     *
-    * `cur0` lets a caller that just resolved the live snapshot (and
-    * has run nothing manifest-moving since) pass it in, skipping a
-    * redundant re-resolve; the claim remains the safety arbiter for
-    * anything that moved in between. */
+    * `cur0`: a live snapshot the caller just resolved (the claim
+    * stays the arbiter for anything that moved since). `fromResv`: see
+    * [[writeHistory]]. */
   private def commitSnapshot(s: TsStore.Snapshot,
       recordHistory: Boolean = true,
       advance: Boolean = false,
-      cur0: Option[TsStore.Snapshot] = None): Unit = {
+      cur0: Option[TsStore.Snapshot] = None,
+      fromResv: Boolean = false): Unit = {
     checkFence() // policy gate; the exclusive slot claim below is the
     // SAFETY gate — a takeover landing after this check loses nothing
     val myToken = leaseToken.getOrElse(
@@ -911,9 +758,8 @@ final class TsStore(
     // rewrite (vacuum's removal-record retirement) claims the next
     // sub-slot. Anything else means another writer moved the manifest
     // since this commit's inputs were read — committing would publish
-    // state derived from a superseded corpus, the exact lost update
-    // the old rename-over protocol could only roll back after the
-    // fact. Here it cannot happen: the claim slot would not chain.
+    // state derived from a superseded corpus. It cannot happen: the
+    // claim slot would not chain.
     val cur = cur0.getOrElse(loadSnapshot())
     var alreadyLanded = false
     val target =
@@ -946,15 +792,15 @@ final class TsStore(
       // run the GC round the skipped commit would have run — without
       // it this round's retirable generation waits for the NEXT real
       // commit's range sweep (and leaks for the handle's lifetime if
-      // this was its last commit) — r19 advice
+      // this was its last commit)
       gcManifestSlots(target)
-      if (recordHistory) writeHistory(s)
-    } else commitSnapshotAt(s, target, myToken, recordHistory)
+      if (recordHistory) writeHistory(s, fromResv)
+    } else commitSnapshotAt(s, target, myToken, recordHistory, fromResv)
   }
 
   private def commitSnapshotAt(s: TsStore.Snapshot,
       target: TsStore.SnapSlot, myToken: String,
-      recordHistory: Boolean): Unit = {
+      recordHistory: Boolean, fromResv: Boolean): Unit = {
     // resurrection guard: GC frees retired slot NAMES after recording
     // the floor, so a claimant stalled across takeovers can win a
     // claim of a freed name that no reader would resolve as newest —
@@ -967,33 +813,25 @@ final class TsStore(
         s"$path: commit FENCED — slot $target was already retired by " +
           "GC (this writer stalled across takeovers); this write did " +
           "not land. Re-open the store to continue.")
-    val m = TsStore.Json
-    val root = m.createObjectNode()
-    root.put("v", s.v)
+    // writer identity rides in the manifest for diagnostics; the
+    // equal-content checks below ignore it (a recovery replay of THIS
+    // commit differs only there)
+    val root = TsStore.manifestNode(s)
     root.put("sub", target.k)
-    // writer identity rides in the manifest for diagnostics and for
-    // the equal-content check below (a recovery replay of THIS commit
-    // differs only here)
     val w = root.putObject("writer")
     w.put("token", myToken)
     w.put("epoch", leaseEpoch)
-    val d = root.putObject("days")
-    s.days.toSeq.sortBy(_._1).foreach { case (k, ver) => d.put(k, ver) }
-    val r = root.putObject("removed")
-    s.removed.toSeq.sortBy(_._1).foreach { case (k, ts) => r.put(k, ts) }
     // UNIQUE tmp per writer (token suffix): concurrent claimants must
     // never consume each other's staged bytes
     val tmp = new org.apache.hadoop.fs.Path(
       path.stripSuffix("/") + s"__snapshot.json.tmp.$myToken")
-    val out = fs.create(tmp, true)
-    try out.write(m.writeValueAsBytes(root)) finally out.close()
+    TsStore.writeBytes(fs, tmp, TsStore.Json.writeValueAsBytes(root))
     onBeforeSnapshotClaim()
     // ── THE commit point: an exclusive claim of the slot. Exactly one
     // of N concurrent claimants wins; there is no in-between state, no
-    // rollback, and no verify window — the lost-update race the old
-    // rename-over protocol carried (documented three rounds running)
-    // is structurally gone. A commit that wins is linearized at the
-    // claim instant; a commit that loses provably never published.
+    // rollback, and no verify window. A commit that wins is linearized
+    // at the claim instant; a commit that loses provably never
+    // published.
     val won =
       try TsStore.commitExclusive(fs, tmp, TsStore.slotFile(path, target))
       catch {
@@ -1017,15 +855,15 @@ final class TsStore(
       // adoption, open-time recovery) — replays rebuild the identical
       // content from the same on-disk instruction, so equal content
       // means this commit IS committed, just by another hand.
-      // `removed` compares by KEY SET: its values are removal epochs a
-      // replay re-stamps with its own clock, and the days map already
-      // fully determines the corpus the slot publishes
+      // `removed` compares by KEY SET: its values are removal epochs,
+      // and the days map already fully determines the corpus the slot
+      // publishes
       val there = scala.util.Try(TsStore.readSnapshot(fs,
         TsStore.slotFile(path, target))).toOption
       if (there.exists(t => t.v == s.v && t.days == s.days &&
           t.removed.keySet == s.removed.keySet)) {
         noteCommitted(target, s)
-        if (recordHistory) writeHistory(s)
+        if (recordHistory) writeHistory(s, fromResv)
         return
       }
       val owner = readLease().map(_.path("owner").asText()).getOrElse("unknown")
@@ -1054,7 +892,7 @@ final class TsStore(
     }
     noteCommitted(target, s)
     gcManifestSlots(target)
-    if (recordHistory) writeHistory(s)
+    if (recordHistory) writeHistory(s, fromResv)
   }
 
   /** Record a just-resolved committed slot in the handle's in-memory
@@ -1071,70 +909,23 @@ final class TsStore(
 
   /** Retire manifest machinery the committed slot supersedes: slots
     * and reservations at generations ≤ committed−2 (committed−1 stays
-    * one behind for readers that listed before this claim — and its
-    * survival is what keeps [[loadSnapshot]]'s forward probe-walk
-    * sound for a hint lagging one commit), plus the legacy single-file
-    * manifest once any numbered slot exists. The floor records the
-    * highest retired generation BEFORE anything is freed, so a stale
-    * claimant re-claiming a freed name is always detectable.
-    *
-    * PROBE-DRIVEN, no directory listing: GC always retires generations
-    * newest-retirable-first and contiguously, so "newest retirable
-    * holds nothing" proves there is no backlog below it either — the
-    * steady state is two existence probes per commit, never an
-    * O(root-dir entries) listing (a 10k-table engine root would pay
-    * that listing on EVERY table's every commit). A crash mid-walk
-    * leaves a contiguous backlog the next commit's walk resumes; a
-    * generation's sub-slots are deleted highest-k-first so a partial
-    * sweep still leaves (g,0) as the resume marker. */
+    * for readers that listed before this claim — it keeps
+    * [[loadSnapshot]]'s probe-walk sound for a hint one commit behind),
+    * plus the legacy single-file manifest. No directory listing in
+    * steady state (one range step per commit — a 10k-table root would
+    * pay a listing on every table's every commit); the first GC of a
+    * handle lists once, healing a predecessor's crash backlog. */
   private def gcManifestSlots(committed: TsStore.SnapSlot): Unit = {
     val f = fs
     val g = committed.v - 2
     if (g >= 1 && g >= gcCleanBelow) {
-      if (gcCleanBelow < 0L) {
-        // first GC of this handle: ONE listing sweep of everything
-        // retirable. Besides seeding the watermark, this heals the
-        // backlog a predecessor's crash exactly between finishing one
-        // generation and touching the next left below an EMPTY
-        // generation — the old probe-driven walk stopped there and
-        // orphaned the rest forever.
-        val (slots, resvs) = TsStore.listSlotsAndResvs(f, path)
-        val retireSlots = slots.filter(sl => sl.v >= 1 && sl.v <= g)
-        val retireResvs = resvs.filter(rv => rv >= 1 && rv <= g)
-        if (retireSlots.nonEmpty || retireResvs.nonEmpty) {
-          if (g > cachedFloor) writeFloorCached(f, g)
-          retireSlots.sorted.reverse.foreach(sl =>
-            f.delete(TsStore.slotFile(path, sl), false))
-          retireResvs.foreach(rv =>
-            f.delete(TsStore.resvFile(path, rv), false))
-        }
-      } else {
-        // steady state: retire every generation in [gcCleanBelow, g] —
-        // normally exactly one, but a skipped round (an alreadyLanded
-        // replay, a retaken lease) leaves a contiguous backlog this
-        // range sweep heals instead of leaking for the handle's
-        // lifetime (r19 advice). No downward probing below the
-        // watermark (everything there is already clean). The floor is
-        // written BEFORE any free.
-        if (g > cachedFloor) writeFloorCached(f, g)
-        (math.max(gcCleanBelow, 1L) to g).foreach { gen =>
-          // probe UPWARD from the recorded sub count: after a lease
-          // retake a foreign writer may have minted sub-slots above
-          // what this handle saw (stale recentSubs would leak them).
-          // Steady state pays exactly one false exists-probe.
-          val hi = {
-            var k = recentSubs.getOrElse(gen, 0)
-            while (f.exists(TsStore.slotFile(path, TsStore.SnapSlot(gen, k + 1))))
-              k += 1
-            k
-          }
-          (hi to 0 by -1).foreach { k =>
-            f.delete(TsStore.slotFile(path, TsStore.SnapSlot(gen, k)), false)
-          }
-          f.delete(TsStore.resvFile(path, gen), false)
-          recentSubs -= gen
-        }
-      }
+      val gens: Seq[Long] =
+        if (gcCleanBelow < 0L) {
+          val (slots, resvs) = TsStore.listSlotsAndResvs(f, path)
+          (slots.map(_.v) ++ resvs).filter(x => x >= 1 && x <= g)
+            .distinct.sorted
+        } else math.max(gcCleanBelow, 1L) to g
+      gens.foreach(retireGeneration(f, _))
       gcCleanBelow = g + 1
     } else if (gcCleanBelow < 0L && committed.v >= 1)
       gcCleanBelow = math.max(1L, committed.v - 1)
@@ -1148,26 +939,51 @@ final class TsStore(
     }
   }
 
-  /** [[TsStore.writeFloor]] + cache refresh, advancing only (a floor
-    * regression widens the resurrection window the floor exists to
-    * close — see writeFloor's monotonicity note). */
-  private def writeFloorCached(f: org.apache.hadoop.fs.FileSystem,
-      g: Long): Unit = {
-    TsStore.writeFloor(f, path, g, leaseToken.getOrElse("anon"))
-    floorCache = math.max(floorCache, g)
+  /** Retire one generation's slot and reservation NAMES behind the
+    * floor, which must cover `gen` before any of its names is freed
+    * (so a stalled claimant that later wins a freed name is caught).
+    * The base slot's JSON carries `"v": gen` — the floor record's
+    * shape — so ONE rename of it over the floor record advances the
+    * floor and frees the name atomically; sub-slots (probed upward: a
+    * foreign writer may have minted more than this handle saw) and the
+    * reservation go after. A base slot already gone (a crash
+    * mid-retire) writes the floor record instead. A floor already at
+    * or above `gen` (an overlapping GC pass got further) is not
+    * renamed over — the base slot is deleted instead — so the floor
+    * is best-effort monotonic, as [[TsStore.writeFloor]] keeps it. */
+  private def retireGeneration(f: org.apache.hadoop.fs.FileSystem,
+      gen: Long): Unit = {
+    val hi = {
+      var k = recentSubs.getOrElse(gen, 0)
+      while (f.exists(TsStore.slotFile(path, TsStore.SnapSlot(gen, k + 1))))
+        k += 1
+      k
+    }
+    val base = TsStore.slotFile(path, TsStore.SnapSlot(gen, 0))
+    floorCache = TsStore.readFloor(f, path)
+    if (gen <= floorCache) f.delete(base, false)
+    else if (!scala.util.Try(TsStore.atomicReplace(f, base,
+        TsStore.floorFile(path))).isSuccess)
+      TsStore.writeFloor(f, path, gen, leaseToken.getOrElse("anon"))
+    floorCache = math.max(floorCache, gen)
+    (hi to 1 by -1).foreach(k =>
+      f.delete(TsStore.slotFile(path, TsStore.SnapSlot(gen, k)), false))
+    f.delete(TsStore.resvFile(path, gen), false)
+    recentSubs -= gen
   }
 
   /** Rename a commit's produced day dirs from `tmp` into their
     * `__day=X/__v=targetV` slots. Idempotent from any crash point: a
     * day already renamed out of the tmp is skipped (its dest is in
-    * place), and `targetV` is read from the tmp's commit instruction —
-    * NOT re-derived from the live manifest — so a replay that runs
-    * after the manifest already swapped places (nothing) at the same
-    * version instead of minting a phantom v+2 no dir ever held. */
+    * place), and `targetV` comes from the reservation — NOT
+    * re-derived from the live manifest. `restamp` re-dates the placed
+    * data files to now: a REPLAY places files written long before
+    * (recovery after an outage), and [[TsStore.placedAt]] dates a
+    * version by its files. */
   private def placeVersions(tmp: org.apache.hadoop.fs.Path,
-      days: Seq[String], targetV: Long): Boolean = {
+      days: Seq[String], targetV: Long, restamp: Boolean): Unit = {
     val f = fs
-    var placedAny = false
+    val now = System.currentTimeMillis()
     days.foreach { name =>
       val src = new org.apache.hadoop.fs.Path(tmp, name)
       if (f.exists(src)) {
@@ -1177,136 +993,108 @@ final class TsStore(
         f.delete(dest, true) // partial rename from an interrupted redo
         if (!f.rename(src, dest))
           throw new java.io.IOException(s"snapshot commit: could not place $dest")
-        // placed-at stamp: vacuum's supersededGraceMs measures "time
-        // since this version was superseded-able", which needs the
-        // PLACEMENT instant. Dir mtimes carry it on HDFS/posix but are
-        // meaningless on object stores — so the committer records the
-        // instant in a stamp file inside the version dir (underscore
-        // prefix: hidden from Spark's file listings). A crash between
-        // the rename and the stamp leaves no stamp; vacuum falls back
-        // to the dir mtime then.
-        val stamp = new org.apache.hadoop.fs.Path(dest, TsStore.PlacedStamp)
-        val so = f.create(stamp, true)
-        try so.write(System.currentTimeMillis().toString
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally so.close()
-        placedAny = true
+        if (restamp) f.listStatus(dest).filter(_.isFile)
+          .foreach(s => f.setTimes(s.getPath, now, -1L))
       }
     }
-    placedAny
   }
 
-  /** Shared replay spine of the three snapshot commit routines.
-    * Everything — the placement included — is guarded by
-    * `snap.v < targetV`: once the manifest has swapped past targetV,
-    * a replay must change NOTHING (the online order places every day
-    * before the swap, so a post-swap replay has nothing left to do —
-    * and an unguarded placement would let a stale complete tmp stomp
-    * version slots a LATER commit legitimately re-used, resurrecting
-    * deleted rows). A replay that skips the swap still back-fills the
-    * generation's time-travel record if the crash landed between the
-    * manifest rename and [[writeHistory]] (first-writer-wins, and the
-    * live tombstones were loaded before recovery ran).
-    *
-    * `targetV` rides in the tmp's commit instruction; a LEGACY tmp
-    * (pre-`v` builds) re-derives `snap.v + 1`, which is wrong exactly
-    * when the crash fell after the swap — so for a legacy tmp that
-    * placed nothing (fully drained) whose commit days all sit in the
-    * manifest at the CURRENT generation, the swap already happened
-    * and is skipped rather than re-run at a phantom version no dir
-    * ever held. A legacy tmp that placed nothing and carries NO
-    * produced days at all (a delete whose affected days were all
-    * removed) can't use that day-version evidence — the caller
-    * supplies `legacyNoop`, which checks the commit's own effect
-    * (e.g. every removed day already absent from the manifest) to
-    * the same end: replay after the swap must change NOTHING, not
-    * mint a phantom generation. */
-  private def commitVersioned(tmp: org.apache.hadoop.fs.Path,
-      days: Seq[String], storedV: Option[Long],
-      next: (TsStore.Snapshot, Long) => TsStore.Snapshot,
-      kind: String,
-      legacyNoop: TsStore.Snapshot => Boolean = _ => false): Unit = {
-    val snap0 = loadSnapshot()
-    val targetV = storedV.getOrElse(snap0.v + 1)
-    if (snap0.v < targetV) {
-      if (targetV != snap0.v + 1) throw new IllegalStateException(
+  /** The instruction for a placing commit this handle is about to make. */
+  private def instr(kind: String, tmp: String, place: Seq[String],
+      next: TsStore.Snapshot): TsStore.Instr =
+    TsStore.Instr(leaseToken.get, kind, tmp, place, next, tombstones)
+
+  /** THE placing commit — save, delete, pack and staged finalize,
+    * online or replayed: reserve generation `i.next.v` under the
+    * instruction, rename the produced day dirs into their version
+    * slots, claim the manifest slot, and rename the reservation into
+    * the generation's history record. `snap` is the live manifest the
+    * instruction was derived from (`i.next.v == snap.v + 1`). */
+  private def commitPlaced(i: TsStore.Instr, snap: TsStore.Snapshot,
+      restamp: Boolean = false): Unit = {
+    if (i.kind == "packed") fullVacuumNeeded = true // pack rewrites every day
+    noteDirtyDays(i.place ++ (i.next.removed.keySet -- snap.removed.keySet))
+    if (claimOrAdoptResv(i)) {
+      placeVersions(new org.apache.hadoop.fs.Path(i.tmp), i.place, i.next.v,
+        restamp)
+      try commitSnapshot(i.next, advance = true, cur0 = Some(snap),
+        fromResv = true)
+      catch { case e: IllegalStateException =>
+        // FENCED at the claim: delete the tmp (best-effort) so the
+        // NEW writer's recovery cannot replay this commit later —
+        // "did not land" must stay true. The placed version dirs are
+        // inert orphans vacuum reclaims; the consumed reservation is
+        // sealed by the new writer's first advance.
+        scala.util.Try(fs.delete(new org.apache.hadoop.fs.Path(i.tmp), true))
+        throw e
+      }
+    }
+  }
+
+  /** Roll a pending reservation's instruction forward (takeover
+    * adoption, open-time recovery) and drop its tmp. Everything is
+    * guarded by `live < i.next.v`: once the manifest has moved to or
+    * past the instruction's generation, a replay changes NOTHING —
+    * an unguarded placement would let a stale tmp stomp version slots
+    * a LATER commit legitimately re-used. The handle's watermark
+    * rises to the instruction's: its rows carry that sequence. */
+  private def replay(i: TsStore.Instr): Unit = {
+    checkFence() // a first mutation's lease takeover may land it first
+    seq = math.max(seq, i.next.seq)
+    val snap = loadSnapshot()
+    if (snap.v < i.next.v) {
+      if (i.next.v != snap.v + 1) throw new IllegalStateException(
         s"$path: commit FENCED — the commit instruction targets " +
-          s"generation $targetV but the live manifest is at ${snap0.v}: " +
+          s"generation ${i.next.v} but the live manifest is at ${snap.v}: " +
           "another writer moved the store since this commit was staged; " +
           "this write did not land.")
-      // ── reserve the version slot BEFORE placing a single day dir:
-      // placements happen ahead of the atomic claim (crash-replay
-      // needs them on disk first), so without exclusivity two writers'
-      // placements could interleave inside one __v=N slot and the
-      // claim winner would publish a mix. The reservation makes the
-      // slot single-writer; an identical-instruction replay (takeover
-      // adoption, open-time recovery — recognized by the recorded tmp
-      // path, unique per writer token) re-enters it instead.
-      claimOrAdoptResv(targetV, tmp, kind)
-      // the reservation handshake can COMPLETE this very commit: a
-      // first-mutation lease takeover seals/adopts pending slots, and
-      // adopting replays the same instruction this call is committing
-      val snap = loadSnapshot()
-      if (snap.v >= targetV) { writeHistory(snap); return }
-      val placedAny = placeVersions(tmp, days, targetV)
-      val legacyAlreadySwapped = storedV.isEmpty && !placedAny &&
-        (if (days.nonEmpty) days.forall(d => snap.days.get(d).contains(snap.v))
-         else legacyNoop(snap))
-      if (!legacyAlreadySwapped)
-        try commitSnapshot(next(snap, targetV), advance = true,
-          cur0 = Some(snap))
-        catch { case e: IllegalStateException =>
-          // FENCED at the claim: delete the tmp (best-effort) so the
-          // NEW writer's recovery cannot replay this commit later —
-          // "did not land" must stay true. The placed version dirs
-          // are inert orphans vacuum reclaims; the consumed
-          // reservation is sealed by the new writer's first advance.
-          scala.util.Try(fs.delete(tmp, true))
-          throw e
-        }
-    } else writeHistory(snap0)
+      commitPlaced(i, snap, restamp = true)
+    }
+    fs.delete(new org.apache.hadoop.fs.Path(i.tmp), true)
   }
 
+  /** An instruction is complete while its staged tmp still holds the
+    * job's `_SUCCESS` (placements move day dirs out, never the marker). */
+  private def complete(i: TsStore.Instr): Boolean =
+    fs.exists(new org.apache.hadoop.fs.Path(i.tmp, "_SUCCESS"))
+
   /** Claim the reservation that makes version slot `v`'s placements
-    * exclusive to one commit instruction. Outcomes:
+    * exclusive to one commit instruction — and that RECORDS the
+    * instruction (recovery and takeover adoption replay from it):
     *  - fresh claim wins → the slot is this writer's;
-    *  - already reserved by THIS instruction (same recorded tmp path —
-    *    tmp names are writer-token-unique) → re-enter: a crash replay
-    *    or takeover adoption placing the same bytes;
-    *  - already reserved by a DIFFERENT instruction → a concurrent
-    *    writer is mid-commit at this generation with different data —
-    *    placing would mix bytes inside the slot, so fail loudly
-    *    (FENCED); the lease holder's seal/adopt pass is what resolves
-    *    the pending slot.
-    * The floor guard refuses generations GC already retired (a stale
-    * claimant re-claiming a freed reservation name would otherwise
-    * place fresh bytes into version dirs that time-travel records
-    * still reference). */
-  private def claimOrAdoptResv(v: Long,
-      tmp: org.apache.hadoop.fs.Path, kind: String): Unit = {
+    *  - reserved by THIS instruction (same recorded tmp path — tmp
+    *    names are writer-token-unique) → re-enter: a crash replay or
+    *    takeover adoption placing the same bytes;
+    *  - reserved by a DIFFERENT instruction → a concurrent writer is
+    *    mid-commit at this generation; placing would mix bytes inside
+    *    the slot, so fail loudly (FENCED).
+    * A landed generation's reservation NAME is free again (it became
+    * the history record), so a fresh win is re-verified: the base slot
+    * proves a landing until GC renames it over the floor, after which
+    * the floor covers it — probed in that order. Returns false when
+    * the winner finds its OWN instruction already landed by another
+    * hand (nothing left to do); any other landing is FENCED. */
+  private def claimOrAdoptResv(i: TsStore.Instr): Boolean = {
     checkFence() // acquires the lease on a first mutation — which
     // seals/adopts pending slots before any targetV math trusts them
+    val v = i.next.v
     val myToken = leaseToken.get
     // pre-claim resurrection check against the CACHED floor (cheap);
     // the authoritative fresh read runs after the claim is won
     if (v <= cachedFloor) throw new IllegalStateException(
       s"$path: commit FENCED — generation $v was already retired by GC " +
         "(this writer stalled across takeovers); this write did not land.")
-    val root = TsStore.Json.createObjectNode()
-    root.put("v", v)
-    root.put("token", myToken)
-    root.put("tmp", tmp.toString)
-    root.put("kind", kind)
-    val bytes = TsStore.Json.writeValueAsBytes(root)
+    val bytes = TsStore.Json.writeValueAsBytes(
+      TsStore.instrNode(i.copy(token = myToken)))
     val ctmp = new org.apache.hadoop.fs.Path(path.stripSuffix("/") +
       s"__resv.$v.json.tmp.$myToken")
-    val out = fs.create(ctmp, true)
-    try out.write(bytes) finally out.close()
+    onBeforeResvClaim()
+    TsStore.writeBytes(fs, ctmp, bytes)
     if (!TsStore.commitExclusive(fs, ctmp, TsStore.resvFile(path, v))) {
-      val there = scala.util.Try(TsStore.Json.readTree(
-        TsStore.readJsonBytes(fs, TsStore.resvFile(path, v)))).toOption
+      val there = scala.util.Try(TsStore.readJsonOpt(fs,
+        TsStore.resvFile(path, v))).toOption.flatten
       val sameWriter = there.exists(_.path("token").asText() == myToken)
-      val sameInstruction = there.exists(_.path("tmp").asText() == tmp.toString)
+      val sameInstruction = there.exists(_.path("tmp").asText() == i.tmp)
       if (!sameInstruction && sameWriter) {
         // this writer's OWN reservation from a DIFFERENT, aborted
         // instruction (a commit that failed after reserving, same
@@ -1319,8 +1107,7 @@ final class TsStore(
         // reservation as this instruction.
         there.map(_.path("tmp").asText()).filter(_.nonEmpty).foreach(old =>
           scala.util.Try(fs.delete(new org.apache.hadoop.fs.Path(old), true)))
-        val out2 = fs.create(ctmp, true)
-        try out2.write(bytes) finally out2.close()
+        TsStore.writeBytes(fs, ctmp, bytes)
         TsStore.atomicReplace(fs, ctmp, TsStore.resvFile(path, v))
       } else if (!sameInstruction) {
         val owner = readLease().map(_.path("owner").asText()).getOrElse("unknown")
@@ -1330,93 +1117,41 @@ final class TsStore(
             s"commit ('$owner' holds the lease); this write did not " +
             "land. Re-open the store to take the root back.")
       }
+      true
     } else {
-      // post-claim resurrection RE-VERIFY (fresh read): a writer
+      // post-claim resurrection RE-VERIFY (fresh reads): a writer
       // stalled between the cached check and the claim could have
-      // won a reservation name GC freed — placements under it would
-      // write into version dirs time-travel records still reference
-      floorCache = TsStore.readFloor(fs, path)
-      if (v <= floorCache) {
+      // won the name of a generation that already landed — placements
+      // under it would write into version dirs live and time-travel
+      // manifests reference
+      val landed = scala.util.Try(TsStore.readJsonOpt(fs,
+        TsStore.slotFile(path, TsStore.SnapSlot(v, 0)))).toOption.flatten
+        .map(TsStore.parseSnapshot)
+      if (landed.nonEmpty || { floorCache = TsStore.readFloor(fs, path)
+          v <= floorCache }) {
         scala.util.Try(fs.delete(TsStore.resvFile(path, v), false))
-        throw new IllegalStateException(
-          s"$path: commit FENCED — generation $v was retired by GC " +
-            "while this reservation was in flight; the claim was " +
-            "withdrawn and this write did not land.")
-      }
+        // the landing is THIS instruction only if its history record
+        // (the reservation renamed at landing) names this tmp: a
+        // takeover saving the same days lands an equal days map, and
+        // acknowledging on equal content would drop these rows silently
+        if (landed.nonEmpty && scala.util.Try(TsStore.readJsonOpt(fs,
+            new org.apache.hadoop.fs.Path(histDir, s"v=$v.json"))).toOption
+            .flatten.exists(_.path("tmp").asText() == i.tmp)) false
+        else throw new IllegalStateException(
+          s"$path: commit FENCED — generation $v was committed or " +
+            "retired while this reservation was in flight; the claim " +
+            "was withdrawn and this write did not land.")
+      } else true
     }
   }
 
-  /** Commit a save tmp as a snapshot: produced days advance to the
-    * instruction's `targetV`, untouched days keep their versions. The
-    * commit instruction is the tmp's [[TsStore.CommitManifest]]
-    * (written after the job's `_SUCCESS`), so recovery knows the FULL
-    * day list — and the version to commit AT — even after a crash
-    * mid-rename emptied part of the tmp or a crash after the manifest
-    * swap left only the undeleted tmp behind; in the latter replay
-    * `snap.v >= targetV` and the swap is skipped (it already
-    * happened — re-deriving v+1 from the bumped manifest is how a
-    * replay would point days at dirs that never existed). */
-  private def commitSavingSnapshot(tmp: org.apache.hadoop.fs.Path): Unit = {
-    val (days, storedV) = TsStore.readCommitDays(fs,
-      new org.apache.hadoop.fs.Path(tmp, TsStore.CommitManifest))
-    noteDirtyDays(days)
-    commitVersioned(tmp, days, storedV, (snap, targetV) =>
-      TsStore.Snapshot(targetV,
-        snap.days ++ days.map(_ -> targetV),
-        snap.removed -- days),
-      kind = "saving")
-  }
-
-  /** Commit a delete tmp as a snapshot: `replaced` days advance to
-    * the instruction's `targetV`, `removed` days leave the manifest
-    * (their old version dirs linger for pinned readers, stamped with
-    * a removal time so [[vacuum]] can reclaim them once the grace
-    * window passes). Replay-idempotent exactly as
-    * [[commitSavingSnapshot]]. */
-  private def commitDeletingSnapshot(tmp: org.apache.hadoop.fs.Path): Unit = {
-    val (replaced, removed, storedV) = TsStore.readAffected(fs,
-      new org.apache.hadoop.fs.Path(tmp, TsStore.AffectedManifest))
-    noteDirtyDays(replaced ++ removed)
-    commitVersioned(tmp, replaced, storedV, (snap, targetV) =>
-      TsStore.Snapshot(targetV,
-        snap.days ++ replaced.map(_ -> targetV) -- removed,
-        snap.removed -- replaced ++
-          removed.map(_ -> System.currentTimeMillis())),
-      kind = "deleting",
-      // a legacy all-days-removed delete (replaced empty) placed no
-      // dirs, so the only replay evidence is the removal itself:
-      // every removed day already out of the manifest ⇒ the swap
-      // committed — skip, don't re-stamp removal epochs at v+1
-      legacyNoop = snap => removed.forall(d => !snap.days.contains(d)))
-  }
-
-  /** Commit a pack tmp as a snapshot: the manifest becomes EXACTLY the
-    * produced days (a day whose rows were all tombstoned vanishes —
-    * recorded as removed so vacuum reclaims it after the grace).
-    * Replay-idempotent exactly as [[commitSavingSnapshot]]. */
-  private def commitPackedSnapshot(tmp: org.apache.hadoop.fs.Path): Unit = {
-    val (days, storedV) = TsStore.readCommitDays(fs,
-      new org.apache.hadoop.fs.Path(tmp, TsStore.CommitManifest))
-    // pack rewrites every day — the next scheduled vacuum must sweep
-    // the whole store (pack itself is O(store), so this adds nothing)
-    fullVacuumNeeded = true
-    commitVersioned(tmp, days, storedV, (snap, targetV) => {
-      val gone = snap.days.keySet -- days
-      TsStore.Snapshot(targetV, days.map(_ -> targetV).toMap,
-        snap.removed -- days ++
-          gone.map(_ -> System.currentTimeMillis()))
-    }, kind = "packed")
-  }
-
   /** The committed manifest's (day dir name, version) pairs, sorted by
-    * day — the catalog-pinning surface behind snapshot-mode SQL
-    * exposure (each day partition's location is
-    * `path/<dayDir>/__v=<version>`). Empty outside snapshot mode or
+    * day — the catalog-pinning surface behind SQL exposure (each day
+    * partition's location is `path/<dayDir>/__v=<version>`). Empty
     * before the first commit. Day names carry parquet's
     * partition-value escaping, exactly as stored in the manifest. */
   private[graft] def snapshotDays: Seq[(String, Long)] = synchronized {
-    if (!snapshots) Seq.empty
-    else loadSnapshot().days.toSeq.sortBy(_._1)
+    loadSnapshot().days.toSeq.sortBy(_._1)
   }
 
   /** Version subdirs of one day dir, (name, version) sorted by version. */
@@ -1440,10 +1175,11 @@ final class TsStore(
     * removal's epoch-ms ([[TsStore.Snapshot.removed]]) and vacuum
     * reclaims the whole day once `removedDayGraceMs` has passed since
     * the removal COMMITTED (not since the data was written — a reader
-    * can pin a manifest long after that). Run it on the writer's
-    * cadence with both graces ≥ the longest reader runtime — the
-    * vacuum side of the snapshot contract. No-op outside snapshot
-    * mode. */
+    * can pin a manifest long after that). `supersededGraceMs` keeps
+    * superseded live-day versions whose data was written within the
+    * grace ([[TsStore.placedAt]]). Run it on the writer's cadence with both
+    * graces ≥ the longest reader runtime — the vacuum side of the
+    * snapshot contract. */
   def vacuum(keepSuperseded: Int = TsStore.DefaultKeepSuperseded,
       removedDayGraceMs: Long = TsStore.DefaultRemovedDayGraceMs,
       keepHistory: Int = TsStore.DefaultKeepHistory,
@@ -1461,7 +1197,6 @@ final class TsStore(
   private def vacuumScoped(keepSuperseded: Int, removedDayGraceMs: Long,
       keepHistory: Int, supersededGraceMs: Long, scoped: Boolean)
       : Unit = synchronized {
-    if (!snapshots) return
     checkFence() // vacuum deletes live-store dirs — writers only
     invalidateCold() // cached cold/pinned plans may reference dirs or
     // history records this run reclaims
@@ -1472,7 +1207,7 @@ final class TsStore(
     // Recovery is idempotent and this store owns the write lock.
     // (Recovery can itself commit, adding dirty days — so the scope
     // is read AFTER it.)
-    recoverSnapshotSwaps()
+    recover()
     val scope: Option[Set[String]] =
       if (scoped && !fullVacuumNeeded) Some(dirtyDaysSinceVacuum) else None
     val f = fs
@@ -1524,10 +1259,9 @@ final class TsStore(
             // it cannot express "readers run for ≤ T". supersededGraceMs
             // adds the TIME guarantee for live days: a superseded
             // version survives while it is younger than the grace,
-            // measured from the committer's placed-at stamp inside the
-            // version dir (dir mtime as fallback for pre-stamp dirs —
-            // mtimes are meaningless on object stores, which is why
-            // the stamp exists).
+            // dated by when its data files were written
+            // ([[TsStore.placedAt]] — dir mtimes are meaningless on
+            // object stores).
             val countKeep = older.takeRight(keepSuperseded).toSet + ref
             val timeKeep: Set[Long] =
               if (supersededGraceMs <= 0L) Set.empty
@@ -1589,189 +1323,58 @@ final class TsStore(
     if (scope.isEmpty) fullVacuumNeeded = false
   }
 
-  // ── crash recovery: every cold rewrite commits through an on-disk
-  // marker (`__saving`/`__deleting` per-day tmp dirs, `__packed` +
-  // `__old` for pack's whole-store swap — the reference's safe-dir
-  // save protocol, workers/sisdb/sisdb.h:184-189: merge under safe,
-  // swap on success, restore on failure). A store opened over a path
-  // with leftover markers finishes or rolls back the interrupted swap
-  // BEFORE serving any read, so a crash can never silently lose the
-  // only copy of the cold data.
-  //
-  // Snapshot mode has no swaps to unwind — the manifest either
+  // ── crash recovery — the ONE procedure, run at open and before every
+  // vacuum. There are no swaps to unwind: the manifest either
   // committed (the change is fully visible) or didn't (invisible).
-  // Recovery there only finishes an acknowledged commit whose renames
-  // were interrupted: a tmp with BOTH `_SUCCESS` and its commit
-  // manifest re-runs the idempotent versioned commit; anything less
-  // is discarded, live snapshot untouched.
-  private def recoverSnapshotSwaps(): Unit = {
+  // Recovery only finishes what a crashed writer's reservation
+  // already made a complete, replayable instruction, and sweeps what
+  // can never commit:
+  //  1. crashed sidecar tmps (manifest-slot, reservation-claim, floor,
+  //     meta and history tmps) — a LIVE lease holder's token-suffixed
+  //     tmps are spared: it may be mid-claim with them;
+  //  2. pending reservations (above the live generation) a non-live
+  //     writer left with a complete tmp roll forward ([[replay]] —
+  //     which takes the lease: replaying IS writing); the live
+  //     holder's own pending reservation waits for the next lease
+  //     takeover's seal/adopt pass;
+  //  3. a reservation whose generation landed but whose move into the
+  //     history record was cut short is moved now;
+  //  4. staging tmps no live writer owns are discarded — nothing
+  //     pending names them any more, so they were never acknowledged.
+  // Finally the watermark rises to the live manifest's.
+  private def recover(): Unit = {
     val f = fs
-    // token-suffixed manifest tmps from crashed commits are swept
-    // FIRST, while the lease still names the writer whose tmp must be
-    // spared: the marker replays below can themselves commit (taking
-    // the lease over), after which a live writer's staged tmp would
-    // look stale and be swept out from under its in-flight rename.
-    locally {
-      val snapName = snapFile.getName
-      val parent = snapFile.getParent
-      val liveToken = readLease().map(_.path("token").asText()).getOrElse("")
-      if (parent != null && f.exists(parent))
-        f.listStatus(parent)
-          .filter(s => s.isFile &&
-            s.getPath.getName.startsWith(snapName + ".tmp.") &&
-            s.getPath.getName != s"$snapName.tmp.$liveToken")
+    val p = new org.apache.hadoop.fs.Path(path.stripSuffix("/"))
+    val parent = p.getParent
+    val leaf = p.getName
+    val liveTok = readLease().map(_.path("token").asText()).getOrElse("")
+    def sweep(dir: org.apache.hadoop.fs.Path, junk: String => Boolean): Unit =
+      if (dir != null && f.exists(dir))
+        f.listStatus(dir).filter(s => s.isFile && junk(s.getPath.getName) &&
+          !(liveTok.nonEmpty && s.getPath.getName.endsWith("." + liveTok)))
           .foreach(s => f.delete(s.getPath, false))
-    }
-    def complete(tmp: org.apache.hadoop.fs.Path, manifest: String): Boolean =
-      f.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")) &&
-        f.exists(new org.apache.hadoop.fs.Path(tmp, manifest))
-    // staging tmps are writer-token-suffixed — process every writer's
-    // (the legacy fixed names included), but SPARE the live lease
-    // holder's: an active writer's in-flight stage must not be
-    // replayed-and-deleted (or discarded half-written) out from under
-    // it by a concurrent open of the same root.
-    val liveTok8 = readLease().map(_.path("token").asText().take(8))
-    def ownedByLiveWriter(t: org.apache.hadoop.fs.Path): Boolean =
-      liveTok8.exists(tok => t.getName.endsWith("." + tok))
-    def sweep(kind: String, manifest: String,
-        replay: org.apache.hadoop.fs.Path => Unit): Unit =
-      stagingTmps(kind).filterNot(ownedByLiveWriter).foreach { t =>
-        if (complete(t, manifest)) replay(t)
-        f.delete(t, true)
+    sweep(parent, n => n.startsWith(leaf + "__snapshot.json.tmp") ||
+      n.startsWith(leaf + "__snapfloor.json.tmp") ||
+      n == leaf + "__meta.json.tmp" ||
+      (n.startsWith(leaf + "__resv.") && n.contains(".json.tmp")))
+    sweep(histDir, _.contains(".json.tmp"))
+    val live = loadSnapshot()
+    TsStore.listSlotsAndResvs(f, path)._2.filter(_ >= live.v - 1).sorted
+      .flatMap(TsStore.readInstr(f, path, _)).foreach { i =>
+        if (i.next.v > live.v) {
+          if (i.token != liveTok && complete(i)) replay(i)
+        } else if (!f.exists(new org.apache.hadoop.fs.Path(histDir,
+            s"v=${i.next.v}.json")) &&
+          scala.util.Try(TsStore.readSnapshot(f, TsStore.slotFile(path,
+            TsStore.SnapSlot(i.next.v, 0)))).toOption
+            .exists(_.days == i.next.days))
+          writeHistory(i.next, fromResv = true)
       }
-    sweep("saving", TsStore.CommitManifest, commitSavingSnapshot)
-    sweep("deleting", TsStore.AffectedManifest, commitDeletingSnapshot)
-    sweep("packed", TsStore.CommitManifest, commitPackedSnapshot)
-    f.delete(new org.apache.hadoop.fs.Path(
-      path.stripSuffix("/") + "__snapshot.json.tmp"), false)
-    f.delete(new org.apache.hadoop.fs.Path(
-      path.stripSuffix("/") + "__meta.json.tmp"), false)
-    f.delete(new org.apache.hadoop.fs.Path(
-      path.stripSuffix("/") + "__snapfloor.json.tmp"), false)
-    // reservation-claim tmps from a crash between create and link
-    locally {
-      val p = new org.apache.hadoop.fs.Path(path.stripSuffix("/"))
-      val parent = p.getParent
-      val rPre = p.getName + "__resv."
-      if (parent != null && f.exists(parent))
-        f.listStatus(parent)
-          .filter(s => s.isFile && s.getPath.getName.startsWith(rPre) &&
-            s.getPath.getName.contains(".json.tmp."))
-          .foreach(s => f.delete(s.getPath, false))
-    }
-    // a writeHistory that died between create and rename leaves a
-    // v=N.json.tmp no later pass touches (vacuum deletes exact names,
-    // HistFile excludes .tmp) — sweep them here or they accumulate
-    if (f.exists(histDir))
-      f.listStatus(histDir)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".json.tmp"))
-        .foreach(s => f.delete(s.getPath, false))
-  }
-
-  private def recoverSwaps(): Unit = if (snapshots) recoverSnapshotSwaps() else {
-    val f = fs
-    val p = new org.apache.hadoop.fs.Path(path)
-    val oldP = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__old")
-    val packedP = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__packed")
-    if (f.exists(oldP)) {
-      if (f.exists(p)) {
-        // pack got past rename-in (live IS the packed output; `__old`
-        // is the superseded pre-pack store) — finish: drop the backup
-        f.delete(oldP, true)
-      } else if (f.exists(packedP)) {
-        // crashed between rename-aside and rename-in: the packed
-        // replacement is complete by protocol order (pack renames
-        // aside only after the packed write commits) — roll forward
-        if (!f.rename(packedP, p))
-          throw new java.io.IOException(s"swap recovery: could not commit $p")
-        f.delete(oldP, true)
-      } else {
-        // no replacement to roll forward — restore the original
-        if (!f.rename(oldP, p))
-          throw new java.io.IOException(s"swap recovery: could not restore $p")
-      }
-    } else if (f.exists(packedP)) {
-      // pack crashed during (or right after) the packed WRITE, before
-      // touching the live store — live is authoritative, tmp is trash
-      f.delete(packedP, true)
-    }
-    // per-day swaps. save's tmp holds the merged rows for each
-    // still-unswapped day: `_SUCCESS` distinguishes a completed write
-    // (roll the remaining days forward — this also recovers the hot
-    // rows being flushed) from a write that died midway (live store
-    // untouched — discard the tmp). save never REMOVES a day, so the
-    // produced dirs are the complete commit instruction.
-    val saving = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__saving")
-    if (f.exists(saving)) {
-      if (f.exists(new org.apache.hadoop.fs.Path(saving, "_SUCCESS"))) {
-        f.mkdirs(p)
-        dayDirs(saving).foreach { case (name, _) =>
-          val dest = new org.apache.hadoop.fs.Path(p, name)
-          f.delete(dest, true)
-          if (!f.rename(new org.apache.hadoop.fs.Path(saving, name), dest))
-            throw new java.io.IOException(
-              s"swap recovery: could not commit day partition $dest")
-        }
-      }
-      f.delete(saving, true)
-    }
-    // deleteWhere's tmp is NOT self-describing: a day the delete
-    // emptied is absent from it, indistinguishable from a day the
-    // delete never touched — rolling forward from the dirs alone
-    // commits half the delete (rewritten days lose their rows, emptied
-    // days keep all of theirs). So the commit instruction is the
-    // affected-day MANIFEST deleteWhere writes after the job commits;
-    // only _SUCCESS + manifest together mean "acknowledgeable", and
-    // [[commitDeleting]] (shared with the online path) applies it
-    // idempotently from any crash point. _SUCCESS without the manifest
-    // = crashed before acknowledgement — live store untouched, discard.
-    val deleting = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__deleting")
-    if (f.exists(deleting)) {
-      if (f.exists(new org.apache.hadoop.fs.Path(deleting, "_SUCCESS")) &&
-        f.exists(new org.apache.hadoop.fs.Path(deleting, TsStore.AffectedManifest)))
-        commitDeleting(deleting)
-      f.delete(deleting, true)
-    }
-    // a persistMeta interrupted mid-write leaves only this tmp; the
-    // committed meta (if any) is intact because the rename is atomic
-    f.delete(new org.apache.hadoop.fs.Path(
-      path.stripSuffix("/") + "__meta.json.tmp"), false)
-  }
-
-  /** Apply a delete tmp's affected-day manifest to the live store —
-    * the single commit routine for BOTH the online deleteWhere and
-    * crash recovery, idempotent from any interruption point:
-    * a `replaced` day still in the tmp swaps in (delete-dest +
-    * rename); one already renamed out of the tmp was committed by a
-    * previous attempt (no-op); a `removed` day is deleted from the
-    * live store (re-deleting is a no-op). */
-  private def commitDeleting(tmp: org.apache.hadoop.fs.Path): Unit = {
-    val f = fs
-    val p = new org.apache.hadoop.fs.Path(path)
-    val in = f.open(new org.apache.hadoop.fs.Path(tmp, TsStore.AffectedManifest))
-    val bytes =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-        buf.toByteArray
-      } finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
-    def names(k: String): Seq[String] =
-      (0 until node.path(k).size()).map(node.path(k).get(_).asText())
-    f.mkdirs(p)
-    names("replaced").foreach { name =>
-      val src = new org.apache.hadoop.fs.Path(tmp, name)
-      if (f.exists(src)) {
-        val dest = new org.apache.hadoop.fs.Path(p, name)
-        f.delete(dest, true)
-        if (!f.rename(src, dest))
-          throw new java.io.IOException(
-            s"delete commit: could not swap day partition $dest")
-      }
-    }
-    names("removed").foreach { name =>
-      f.delete(new org.apache.hadoop.fs.Path(p, name), true)
-    }
+    val owner8 = leaseToken.getOrElse(liveTok).take(8)
+    Seq("saving", "deleting", "packed").flatMap(stagingTmps)
+      .filterNot(t => owner8.nonEmpty && t.getName.endsWith("." + owner8))
+      .foreach(f.delete(_, true))
+    seq = math.max(seq, loadSnapshot().seq)
   }
 
   /** Rows KILLED by an active tombstone (cold side only — hot batches
@@ -1803,10 +1406,10 @@ final class TsStore(
   // Cache the constructed DataFrame keyed on (manifest slot, era
   // count, explicit invalidation epoch) — a plan/metadata reuse only:
   // every action still scans the parquet, nothing row-level is
-  // persisted. Flat mode keys on the epoch alone (its commits bump
-  // it; snapshot-mode commits move the slot, so the epoch is a
-  // belt for paths that change layout without moving it — restore,
-  // vacuum, recovery).
+  // persisted. Commits move the slot; the epoch is a belt for paths
+  // that change what a slot resolves to without moving it (restore,
+  // vacuum, recovery). Another writer's commit moves the slot too, so
+  // a second handle never serves a frame over deleted files.
   private def invalidateCold(): Unit = synchronized {
     coldEpoch += 1
     coldCacheKey = None
@@ -1828,56 +1431,25 @@ final class TsStore(
     }
   }
 
-  def cold: Option[DataFrame] = synchronized {
-    if (snapshots) {
-      // resolve the manifest ONCE; the returned frame reads immutable
-      // version dirs (basePath recovers __day as a partition column,
-      // so day pruning fires exactly as in the flat layout). An
-      // evolved store's dirs span schema eras — each era group is
-      // read self-described and aligned to the LIVE era (see the
-      // `eraRecords` block above); a single-era store takes the
-      // plain-read path unchanged.
-      val snap = loadSnapshot()
-      if (snap.days.isEmpty) None
-      else {
-        val key = (coldEpoch, snap.v, snap.sub, eraRecords.size)
-        if (!coldCacheKey.contains(key)) {
-          coldCacheFrame = Some(TsStore.readVersionedAligned(
-            spark, path, snap.days, eraRecords, currentEra))
-          coldCacheKey = Some(key)
-        }
-        coldCacheFrame
+  def cold: Option[DataFrame] = synchronized(coldAt(loadSnapshot()))
+
+  /** The cold frame of manifest `snap`: immutable version dirs
+    * (basePath recovers __day as a partition column, so day pruning
+    * fires). An evolved store's dirs span schema eras — each era group
+    * is read self-described and aligned to the LIVE era (see the
+    * `eraRecords` block above); a single-era store takes the
+    * plain-read path unchanged. */
+  private def coldAt(snap: TsStore.Snapshot): Option[DataFrame] =
+    if (snap.days.isEmpty) None
+    else {
+      val key = (coldEpoch, snap.v, snap.sub, eraRecords.size)
+      if (!coldCacheKey.contains(key)) {
+        coldCacheFrame = Some(TsStore.readVersionedAligned(
+          spark, path, snap.days, eraRecords, currentEra))
+        coldCacheKey = Some(key)
       }
-    } else {
-      // flat mode has no manifest slot to act as an external freshness
-      // signal, and the handle-private epoch only sees THIS handle's
-      // mutations — a second writer's flush or in-place day rewrite
-      // left a cached frame referencing deleted files (r19 advice).
-      // Key on a one-level listing fingerprint of the day dirs
-      // (name + mtime): every flat commit path swaps whole day dirs
-      // via rename, so any external change moves the fingerprint. One
-      // listStatus per call, vs the recursive listing + parquet footer
-      // schema inference the cache exists to avoid.
-      val root = new org.apache.hadoop.fs.Path(path)
-      val f = fs
-      val sig: Seq[(String, Long)] =
-        if (!f.exists(root)) Nil
-        else f.listStatus(root)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("__day="))
-          .map(s => s.getPath.getName -> s.getModificationTime)
-          .toSeq.sortBy(_._1)
-      if (sig.isEmpty) None
-      else {
-        val key = (coldEpoch, -1L, -1, eraRecords.size)
-        if (!coldCacheKey.contains(key) || flatColdSig != sig) {
-          coldCacheFrame = Some(spark.read.parquet(path))
-          coldCacheKey = Some(key)
-          flatColdSig = sig
-        }
-        coldCacheFrame
-      }
+      coldCacheFrame
     }
-  }
 
   /** The owning handle's [[TsStore.openSnapshot]] (live pinned cold
     * view + live tombstones): identical contract to the static
@@ -1885,8 +1457,7 @@ final class TsStore(
     * in-memory tombstone map (which the meta sidecar mirrors — every
     * drop persists it). */
   private[graft] def openLive(): Option[DataFrame] = synchronized {
-    if (!snapshots) None
-    else cold.map(c => tombFiltered(c).drop("__seq"))
+    cold.map(c => tombFiltered(c).drop("__seq"))
   }
 
   /** M1/M3 `set`: stage rows into the hot tail (upsert semantics apply
@@ -2002,103 +1573,85 @@ final class TsStore(
     }
   }
 
-  // resolved once: FileSystem.get consults Hadoop's global cache
-  // under a lock on every call, and the commit path touches fs
-  // dozens of times per commit
-  private lazy val fs = org.apache.hadoop.fs.FileSystem.get(
-    spark.sparkContext.hadoopConfiguration)
+  // resolved once, from the root path itself: FileSystem.get(conf)
+  // would return the DEFAULT filesystem, and a root on any other
+  // scheme would then fail Hadoop's wrong-FS check. (The lookup also
+  // takes Hadoop's global cache lock on every call, and the commit
+  // path touches fs dozens of times per commit.)
+  private lazy val fs = new org.apache.hadoop.fs.Path(path)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Day-partition dirs under a root, as (escaped dir name → partition
-    * value). Parquet %-escapes special chars in partition dir names;
-    * day values here are dates/day-ints so the decode is a formality,
-    * but comparing by DIR NAME (same escaping both sides) is what the
-    * swap logic relies on. */
-  private def dayDirs(root: org.apache.hadoop.fs.Path)
-      : Seq[(String, String)] = {
-    val f = fs
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__day="))
-      .map { s =>
-        val name = s.getPath.getName
-        name -> java.net.URLDecoder.decode(name.stripPrefix("__day="), "UTF-8")
-      }.toSeq.sortBy(_._1)
+  /** Day-partition dir names under a root, sorted — as the parquet
+    * writer produced them, with its partition-value escaping (the
+    * commit logic compares BY NAME, never by hand-built strings). */
+  private def dayDirs(root: org.apache.hadoop.fs.Path): Seq[String] =
+    try fs.listStatus(root).map(_.getPath.getName)
+      .filter(_.startsWith("__day=")).toSeq.sorted
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** The hot tail merged over the cold rows of its dirty days, stamped
+    * with the CURRENT ingest sequence (any tombstone recorded before
+    * this flush — strictly lower sequence — cannot kill rows a later
+    * `set` legitimately re-created) and written day-partitioned into
+    * `tmp`. Returns the produced day dir names (carrying parquet's
+    * partition-value escaping — never hand-built from the raw day
+    * strings); a produced count other than the dirty count fails
+    * loudly. */
+  private def writeMerged(h: DataFrame, snap: TsStore.Snapshot,
+      tmp: String): Seq[String] = {
+    // day set tracked at set() time when exact (zero Spark jobs); a
+    // distributed batch or a hot-tail filter falls back to compute
+    val dirtyDays = hotDays.map(_.toSeq.sorted).getOrElse(
+      h.select(col("__day").cast("string")).distinct()
+        .collect().map(_.getString(0)).toSeq)
+    val merged = coldAt(snap) match {
+      case Some(c) =>
+        Write.upsert(
+          tombFiltered(c).filter(col("__day").isin(dirtyDays: _*))
+            .drop("__seq"),
+          h, subject, soleCols :+ "__day", time, "__seq")
+      case None =>
+        Write.upsert(h.limit(0).drop("__seq"), h, subject,
+          soleCols :+ "__day", time, "__seq")
+    }
+    merged.withColumn("__seq", lit(seq))
+      .repartition(col("__day"))
+      .sortWithinPartitions(col(subject), col(time))
+      .write.mode("overwrite").partitionBy("__day").parquet(tmp)
+    val produced = dayDirs(new org.apache.hadoop.fs.Path(tmp))
+    require(produced.length == dirtyDays.length,
+      s"save produced ${produced.length} day dirs for ${dirtyDays.length} dirty days")
+    produced
   }
+
+  private def decodeDay(name: String): String =
+    java.net.URLDecoder.decode(name.stripPrefix("__day="), "UTF-8")
 
   /** `save`: merge hot into the cold store and clear the tail —
     * incrementally. Only the day partitions the hot tail touches are
-    * re-merged and swapped in (tmp write + per-day dir rename); a day
-    * the tail never wrote is never read or rewritten. This is what
-    * keeps `save` O(dirty days), not O(store) — at 100 TB the store
-    * holds years of days and the tail touches one or two. */
+    * re-merged and committed as new versions; a day the tail never
+    * wrote is never read or rewritten. This is what keeps `save`
+    * O(dirty days), not O(store) — at 100 TB the store holds years of
+    * days and the tail touches one or two. */
   def save(): Unit = fenced {
     // fence FIRST (via [[fenced]]) — before any plan reads the
     // manifest: a first mutation acquires the lease, whose seal/adopt
     // pass may advance the live generation (rolling a crashed
     // predecessor's commit forward); the merge below must plan
-    // against the post-adoption corpus or it would rebuild dirty
-    // days from the superseded one
+    // against the post-adoption corpus. The manifest is resolved
+    // ONCE: the merge's baseline IS the commit's baseline.
     hotUnion.foreach { h =>
-      // day set tracked at set() time when exact (zero Spark jobs);
-      // a distributed batch or a hot-tail filter falls back to compute
-      val dirtyDays = hotDays.map(_.toSeq.sorted).getOrElse(
-        h.select(col("__day").cast("string")).distinct()
-          .collect().map(_.getString(0)).toSeq)
-      val merged = cold match {
-        case Some(c) =>
-          Write.upsert(
-            tombFiltered(c).filter(col("__day").isin(dirtyDays: _*))
-              .drop("__seq"),
-            h, subject, soleCols :+ "__day", time, "__seq")
-        case None =>
-          Write.upsert(h.limit(0).drop("__seq"), h, subject,
-            soleCols :+ "__day", time, "__seq")
-      }
-      val tmp = stagingTmp("saving") // token-suffixed in snapshot mode
-      // durable watermark BEFORE the tmp write — not merely before the
-      // swap: the tmp becomes roll-forward-able the instant its job
-      // commits _SUCCESS, so a crash in the gap would otherwise install
-      // rows stamped with a sequence the restarted store never reloads
-      // (and a later tombstone would rank below them). Persisting a
-      // higher-than-used sequence is always safe — monotonicity is all
-      // sequences need.
-      persistMeta()
-      // cold rows are stamped with the CURRENT ingest sequence: any
-      // tombstone recorded before this save (strictly lower sequence)
-      // cannot kill rows a later `set` legitimately re-created
-      merged.withColumn("__seq", lit(seq))
-        .repartition(col("__day"))
-        .sortWithinPartitions(col(subject), col(time))
-        .write.mode("overwrite").partitionBy("__day").parquet(tmp)
-      val f = fs
-      f.mkdirs(new org.apache.hadoop.fs.Path(path))
-      // swap in the day dirs the write ACTUALLY produced (their names
-      // carry parquet's partition-value escaping — never hand-build
-      // them from the raw day strings), and fail loudly on a rename
-      // that didn't happen rather than dropping the merged output
-      val dayDirs = f.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("__day="))
-      require(dayDirs.length == dirtyDays.length,
-        s"save produced ${dayDirs.length} day dirs for ${dirtyDays.length} dirty days")
-      if (snapshots) {
-        // the commit manifest (day list) makes the tmp a complete,
-        // idempotently-replayable commit instruction; written AFTER
-        // the job's _SUCCESS, and recovery requires both
-        TsStore.writeCommitDays(f,
-          new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(tmp),
-            TsStore.CommitManifest),
-          dayDirs.map(_.getPath.getName).toSeq, loadSnapshot().v + 1)
-        commitSavingSnapshot(new org.apache.hadoop.fs.Path(tmp))
-      } else dayDirs.foreach { s =>
-        val dest = new org.apache.hadoop.fs.Path(path, s.getPath.getName)
-        f.delete(dest, true)
-        if (!f.rename(s.getPath, dest))
-          throw new java.io.IOException(s"could not commit day partition $dest")
-      }
-      f.delete(new org.apache.hadoop.fs.Path(tmp), true)
+      val snap = loadSnapshot()
+      val tmp = stagingTmp("saving")
+      val produced = writeMerged(h, snap, tmp)
+      val v = snap.v + 1
+      commitPlaced(instr("saving", tmp, produced, TsStore.Snapshot(v,
+        snap.days ++ produced.map(_ -> v), snap.removed -- produced,
+        seq = math.max(snap.seq, seq))), snap)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
       invalidateCold()
       clearHot()
-      onColdChange(TsStore.DaysUpserted(dirtyDays))
+      onColdChange(TsStore.DaysUpserted(produced.map(decodeDay)))
       maybeAutoVacuum()
     }
   }
@@ -2117,23 +1670,14 @@ final class TsStore(
   // ([[graft.api.Engine.saveAll]]).
 
   /** Staging-tmp path for `kind` (`saving`/`deleting`/`packed`/
-    * `staged_save`). In snapshot mode the name carries the writer's
-    * lease-token prefix, so two writers' staged bytes can NEVER share
-    * a path — a takeover mid-stage used to clobber the old writer's
-    * tmp in place (both wrote to the one fixed name), leaving its
-    * in-flight commit instruction pointing at the new writer's
-    * half-written job. With unique names the reservation protocol's
-    * adoption identity ("same recorded tmp path = same instruction")
-    * is exact. Acquires the lease on a first mutation (the token IS
-    * the name). Flat mode keeps the fixed names — its recovery
-    * markers predate the lease and stay byte-compatible. */
+    * `staged_save`). The name carries the writer's lease-token prefix,
+    * so two writers' staged bytes can NEVER share a path — the
+    * reservation protocol's adoption identity ("same recorded tmp path
+    * = same instruction") is exact. Acquires the lease on a first
+    * mutation (the token IS the name). */
   private def stagingTmp(kind: String): String = {
-    val base = path.stripSuffix("/") + "__" + kind
-    if (!snapshots) base
-    else {
-      checkFence()
-      base + "." + leaseToken.get.take(8)
-    }
+    checkFence()
+    path.stripSuffix("/") + "__" + kind + "." + leaseToken.get.take(8)
   }
 
   /** Every on-disk staging tmp of `kind`, any writer's: the fixed
@@ -2153,12 +1697,12 @@ final class TsStore(
   }
 
   /** Stage the hot tail as a durable, inert commit instruction under
-    * `__staged_save` — everything [[save]] does up to (and including)
-    * the commit manifest, nothing after it. Returns false when there
-    * is nothing hot to stage (finalize is then a no-op). Snapshot
-    * mode only: without generations there is no inert staging point. */
+    * `__staged_save` — the merged day dirs plus a [[TsStore
+    * .CommitManifest]] naming them, the generation they target and the
+    * watermark their rows carry; nothing is reserved or placed. Returns
+    * false when there is nothing hot to stage (finalize is then a
+    * no-op). */
   private[graft] def stageSave(): Boolean = fenced {
-    require(snapshots, "staged commits are a snapshot-mode primitive")
     hotUnion match {
       case None =>
         // stale leftovers never linger — any writer's (a crashed
@@ -2168,40 +1712,14 @@ final class TsStore(
         stagingTmps("staged_save").foreach(fs.delete(_, true))
         false
       case Some(h) =>
-        val stagedTmp = new org.apache.hadoop.fs.Path(
-          stagingTmp("staged_save"))
-        val dirtyDays = hotDays.map(_.toSeq.sorted).getOrElse(
-          h.select(col("__day").cast("string")).distinct()
-            .collect().map(_.getString(0)).toSeq)
-        val merged = cold match {
-          case Some(c) =>
-            Write.upsert(
-              tombFiltered(c).filter(col("__day").isin(dirtyDays: _*))
-                .drop("__seq"),
-              h, subject, soleCols :+ "__day", time, "__seq")
-          case None =>
-            Write.upsert(h.limit(0).drop("__seq"), h, subject,
-              soleCols :+ "__day", time, "__seq")
-        }
-        persistMeta() // durable watermark BEFORE the tmp (save's rule)
-        merged.withColumn("__seq", lit(seq))
-          .repartition(col("__day"))
-          .sortWithinPartitions(col(subject), col(time))
-          .write.mode("overwrite").partitionBy("__day")
-          .parquet(stagedTmp.toString)
-        val f = fs
-        f.mkdirs(new org.apache.hadoop.fs.Path(path))
-        val dayDirs = f.listStatus(stagedTmp)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("__day="))
-        require(dayDirs.length == dirtyDays.length,
-          s"stage produced ${dayDirs.length} day dirs for " +
-            s"${dirtyDays.length} dirty days")
+        val snap = loadSnapshot()
+        val stagedTmp = stagingTmp("staged_save")
+        val produced = writeMerged(h, snap, stagedTmp)
         // the commit manifest completes the instruction — staged-tmp
         // completeness is exactly "manifest present" (written last)
-        TsStore.writeCommitDays(f,
-          new org.apache.hadoop.fs.Path(stagedTmp,
-            TsStore.CommitManifest),
-          dayDirs.map(_.getPath.getName).toSeq, loadSnapshot().v + 1)
+        TsStore.writeCommitDays(fs, new org.apache.hadoop.fs.Path(
+          stagedTmp, TsStore.CommitManifest),
+          TsStore.Staged(produced, snap.v + 1, seq))
         true
     }
   }
@@ -2211,34 +1729,41 @@ final class TsStore(
       fs.exists(new org.apache.hadoop.fs.Path(t, "_SUCCESS")) &&
         fs.exists(new org.apache.hadoop.fs.Path(t, TsStore.CommitManifest)))
 
-  /** True when a staged-save tmp (this writer's token-suffixed one,
-    * a crashed predecessor's, or the legacy fixed name) holds a
-    * COMPLETE commit instruction (job `_SUCCESS` + commit manifest,
-    * both written before the engine's marker can exist). */
-  private[graft] def hasStagedSave: Boolean = completeStagedSaves.nonEmpty
-
   /** Turn every complete staged instruction into a real commit —
     * [[save]]'s second half over the staged tmp, idempotently
-    * replayable from any crash point exactly like open-time `__saving`
-    * recovery (placed days skip, the stored target generation pins the
-    * version). A restarted engine finalizes its crashed predecessor's
-    * token-suffixed tmp here the same way (ordered by target
-    * generation when several pend). No-op when nothing (complete) is
-    * staged. */
+    * replayable from any crash point (placed days skip, the staged
+    * target generation pins the version, a generation the live
+    * manifest already reached is not committed again). A restarted
+    * engine finalizes its crashed predecessor's token-suffixed tmp
+    * here the same way (ordered by target generation when several
+    * pend). No-op when nothing (complete) is staged. */
   private[graft] def finalizeStagedSave(): Unit = synchronized {
     val staged = completeStagedSaves
-      .map { t => (t, TsStore.readCommitDays(fs,
-        new org.apache.hadoop.fs.Path(t, TsStore.CommitManifest))) }
-      .sortBy(_._2._2.getOrElse(Long.MaxValue))
-    staged.foreach { case (t, (days, _)) =>
-      commitSavingSnapshot(t)
-      fs.delete(t, true)
-      invalidateCold()
-      clearHot()
-      onColdChange(TsStore.DaysUpserted(days.map(n =>
-        java.net.URLDecoder.decode(n.stripPrefix("__day="), "UTF-8"))))
+      .map(t => (t, TsStore.readCommitDays(fs,
+        new org.apache.hadoop.fs.Path(t, TsStore.CommitManifest))))
+      .sortBy(_._2.v)
+    if (staged.nonEmpty) fenced {
+      staged.foreach { case (t, c) =>
+        seq = math.max(seq, c.seq)
+        val snap = loadSnapshot()
+        if (snap.v < c.v) {
+          if (c.v != snap.v + 1) throw new IllegalStateException(
+            s"$path: commit FENCED — the staged commit targets generation " +
+              s"${c.v} but the live manifest is at ${snap.v}: another " +
+              "writer moved the store since it was staged; this write " +
+              "did not land.")
+          commitPlaced(instr("saving", t.toString, c.days,
+            TsStore.Snapshot(c.v, snap.days ++ c.days.map(_ -> c.v),
+              snap.removed -- c.days, seq = math.max(snap.seq, seq))),
+            snap, restamp = true)
+        }
+        fs.delete(t, true)
+        invalidateCold()
+        clearHot()
+        onColdChange(TsStore.DaysUpserted(c.days.map(decodeDay)))
+      }
+      maybeAutoVacuum()
     }
-    if (staged.nonEmpty) maybeAutoVacuum()
   }
 
   /** Roll every staged-but-unmarked commit BACK (crash before the
@@ -2252,8 +1777,8 @@ final class TsStore(
     * one scale-killer; the reference likewise erases only the blocks a
     * delete lands in, sisdb_fmap_write.c:135-196). Hot batches are
     * anti-filtered in place (no forced flush); a day partition left
-    * row-less by the delete is removed. A NULL predicate result keeps
-    * the row (only a definite match deletes). */
+    * row-less by the delete leaves the manifest. A NULL predicate
+    * result keeps the row (only a definite match deletes). */
   def deleteWhere(cond: org.apache.spark.sql.Column,
       affectsDay: String => Boolean): Unit = fenced {
     val defMatch = coalesce(cond, lit(false))
@@ -2261,66 +1786,36 @@ final class TsStore(
     // earlier than strictly needed, which is the safe direction
     hotFrames = hotFrames.map(_.filter(!defMatch))
     if (hotFrames.nonEmpty) hotDays = None // a filter can empty a day
-    if (coldExists) {
-      val f = fs
-      val byName =
-        if (snapshots) loadSnapshot().days.keys.toSeq.sorted.map(name =>
-          name -> java.net.URLDecoder.decode(
-            name.stripPrefix("__day="), "UTF-8"))
-        else dayDirs(new org.apache.hadoop.fs.Path(path))
-      val affected = byName.filter { case (_, v) => affectsDay(v) }
-      if (affected.nonEmpty) {
-        val affectedDays = affected.map(_._2)
-        // the rewrite stamps cold rows with the CURRENT sequence —
-        // persist the watermark BEFORE the tmp write, not merely before
-        // the swap: once the tmp job commits its _SUCCESS (and the
-        // manifest lands), recovery rolls it forward at restart, so the
-        // rows' sequence must already be durable or a restarted store
-        // reloads a lower watermark and a later tombstone ranks below
-        // them. Persisting a higher-than-used sequence is always safe —
-        // sequences only need monotonicity.
-        persistMeta()
-        val kept = tombFiltered(cold.get)
-          .filter(col("__day").isin(affectedDays: _*))
-          .filter(!defMatch)
-          .withColumn("__seq", lit(seq))
-        val tmp = stagingTmp("deleting") // token-suffixed in snapshot mode
-        kept.repartition(col("__day"))
-          .sortWithinPartitions(col(subject), col(time))
-          .write.mode("overwrite").partitionBy("__day").parquet(tmp)
-        val produced = dayDirs(new org.apache.hadoop.fs.Path(tmp)).toMap
-        // the affected-day manifest is the commit point (written AFTER
-        // the job's _SUCCESS — mode("overwrite") would wipe it first):
-        // it records which days are REPLACED by a tmp dir and which the
-        // delete EMPTIED, so the shared [[commitDeleting]] (and crash
-        // recovery re-running it) can also remove produced-empty days
-        // instead of silently committing half the delete
-        val m = new com.fasterxml.jackson.databind.ObjectMapper()
-        val mroot = m.createObjectNode()
-        // snapshot replays must commit AT the version this run places
-        // dirs under, never one re-derived from a possibly-bumped
-        // manifest — see writeCommitDays
-        if (snapshots) mroot.put("v", loadSnapshot().v + 1)
-        val rep = mroot.putArray("replaced")
-        val rem = mroot.putArray("removed")
-        affected.foreach { case (name, _) =>
-          if (produced.contains(name)) rep.add(name) else rem.add(name)
-        }
-        val mout = f.create(
-          new org.apache.hadoop.fs.Path(tmp, TsStore.AffectedManifest), true)
-        try mout.write(m.writeValueAsBytes(mroot)) finally mout.close()
-        if (snapshots) commitDeletingSnapshot(new org.apache.hadoop.fs.Path(tmp))
-        else commitDeleting(new org.apache.hadoop.fs.Path(tmp))
-        f.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        invalidateCold()
-        val removed = affected.collect {
-          case (name, v) if !produced.contains(name) => v
-        }
-        onColdChange(TsStore.DaysReplaced(
-          affected.collect { case (name, v) if produced.contains(name) => v },
-          removed))
-        maybeAutoVacuum()
-      }
+    val snap = loadSnapshot()
+    val affected = snap.days.keys.toSeq.sorted.map(n => n -> decodeDay(n))
+      .filter { case (_, v) => affectsDay(v) }
+    if (affected.nonEmpty) {
+      // the rewrite stamps cold rows with the CURRENT sequence; the
+      // watermark rides in the reservation and manifest that commit them
+      val kept = tombFiltered(coldAt(snap).get)
+        .filter(col("__day").isin(affected.map(_._2): _*))
+        .filter(!defMatch)
+        .withColumn("__seq", lit(seq))
+      val tmp = stagingTmp("deleting")
+      kept.repartition(col("__day"))
+        .sortWithinPartitions(col(subject), col(time))
+        .write.mode("overwrite").partitionBy("__day").parquet(tmp)
+      // the tmp holds the REPLACED days; a day the delete emptied is
+      // absent from it — the instruction records both, which the tmp's
+      // dirs alone could never tell apart
+      val produced = dayDirs(new org.apache.hadoop.fs.Path(tmp)).toSet
+      val (replaced, removed) = affected.partition(a => produced.contains(a._1))
+      val v = snap.v + 1
+      val now = System.currentTimeMillis()
+      commitPlaced(instr("deleting", tmp, replaced.map(_._1),
+        TsStore.Snapshot(v,
+          snap.days ++ replaced.map(_._1 -> v) -- removed.map(_._1),
+          snap.removed -- replaced.map(_._1) ++ removed.map(_._1 -> now),
+          seq = math.max(snap.seq, seq))), snap)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+      invalidateCold()
+      onColdChange(TsStore.DaysReplaced(replaced.map(_._2), removed.map(_._2)))
+      maybeAutoVacuum()
     }
   }
 
@@ -2351,96 +1846,57 @@ final class TsStore(
   /** [[pack]] with an optional Z-ORDER layout for the rewritten days:
     * `zorderBy = Some((dimA, dimB))` lays each day's rows out by the
     * Morton interleave of the two dims' bucket ranks (`targetFiles`
-    * range partitions PER DAY instead of one hash partition), so
-    * every file covers a compact rectangle of (dimA, dimB) space and
-    * parquet footer min/max stats prune on BOTH dims — see
-    * [[graft.ops.Layout]]. The natural pair for a series store is
-    * (subject, time). Pack rewrites everything anyway (the
-    * reference's weekly pack does too, sisdb.c:586-602), so the
-    * better layout costs only the rank derivation: a bounded
-    * sorted-distinct dictionary for string dims, two scalars for
-    * numeric ones. Default `None` keeps the (subject, time)
-    * sort-within-day layout (the O1 sorted-series contract). */
+    * range partitions PER DAY), so every file covers a compact
+    * rectangle of (dimA, dimB) space and parquet footer stats prune on
+    * BOTH dims — see [[graft.ops.Layout]]; the natural pair is
+    * (subject, time). Default `None` keeps the (subject, time)
+    * sort-within-day layout (the O1 sorted-series contract). The
+    * rewrite (compaction + tombstone materialization) lands as one new
+    * generation — pinned readers keep the pre-pack versions until
+    * [[vacuum]]. Tombstones left by a crash between the commit and the
+    * meta rewrite are harmless: they re-filter rows already gone. */
   def pack(targetFiles: Int, zorderBy: Option[(String, String)])
       : Unit = fenced {
-    if (!coldExists) return // nothing flushed yet — benign, like save
-    if (snapshots) {
-      packSnapshot(targetFiles, zorderBy); maybeAutoVacuum(); return
-    }
-    if (tombstones.isEmpty && zorderBy.isEmpty) {
-      Write.pack(spark, path, Seq("__day"), targetFiles)
+    val snap = loadSnapshot()
+    coldAt(snap).foreach { c => // nothing flushed yet — benign, like save
+      val tmp = stagingTmp("packed")
+      packedLayout(tombFiltered(c).withColumn("__seq", lit(seq)),
+          targetFiles, zorderBy)
+        .write.mode("overwrite").partitionBy("__day").parquet(tmp)
+      // the manifest becomes EXACTLY the produced days: a day whose
+      // rows were all tombstoned vanishes, recorded as removed so
+      // vacuum reclaims it after the grace
+      val produced = dayDirs(new org.apache.hadoop.fs.Path(tmp))
+      val v = snap.v + 1
+      val now = System.currentTimeMillis()
+      commitPlaced(instr("packed", tmp, produced, TsStore.Snapshot(v,
+        produced.map(_ -> v).toMap,
+        snap.removed -- produced ++ (snap.days.keySet -- produced).map(_ -> now),
+        seq = math.max(snap.seq, seq))), snap)
+      // every other generation-minting mutator invalidates here; without
+      // it the pinnedCache can keep serving a cached None for exactly the
+      // generation this pack mints
       invalidateCold()
-      onColdChange(TsStore.Compacted)
-    } else cold.foreach { c =>
-      flatRewriteSwap(tombFiltered(c).withColumn("__seq", lit(seq)),
-        targetFiles, zorderBy)
-      invalidateCold()
+      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
       tombstones = Map.empty
       persistMeta()
-      // materializing tombstones may have removed whole days → full
-      // partition re-list for any mirrored catalogs
       onColdChange(TsStore.Rewritten)
+      maybeAutoVacuum()
     }
-  }
-
-  /** Whole-store rename-aside rewrite shared by the flat pack branch
-    * and the flat-mode schema migration ([[evolveSchema]]): write the
-    * replacement under `__packed`, then swap it in. The live store is
-    * never deleted before its replacement is committed; a crash at
-    * ANY point leaves a marker state [[recoverSwaps]] finishes or
-    * rolls back — the reference's safe-dir save (sisdb.h:184-189). */
-  private def flatRewriteSwap(rows: DataFrame, targetFiles: Int,
-      zorderBy: Option[(String, String)]): Unit = {
-    val tmp = path.stripSuffix("/") + "__packed"
-    packedLayout(rows, targetFiles, zorderBy)
-      .write.mode("overwrite").partitionBy("__day").parquet(tmp)
-    // durable watermark BEFORE the swap: a rewrite that stamped rows
-    // with the current sequence must never restart into a lower
-    // watermark (see deleteWhere)
-    persistMeta()
-    val f = fs
-    val p = new org.apache.hadoop.fs.Path(path)
-    val oldP = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__old")
-    f.delete(oldP, true)
-    if (!f.rename(p, oldP))
-      throw new java.io.IOException(s"could not stage swap of $p")
-    if (!f.rename(new org.apache.hadoop.fs.Path(tmp), p))
-      throw new java.io.IOException(s"could not commit packed store $p")
-    f.delete(oldP, true)
   }
 
   /** Evolve the table to a NEW schema version, preserving history —
     * the store face of the reference's version-tolerant convert
-    * (sis_dynamic.h:12-51; the field-by-field bridge rule is
+    * (sis_dynamic.h:12-51; the bridge rule is
     * [[graft.ops.Convert.align]]'s). `from` must be the schema the
-    * store currently writes (the latest recorded era, or the declared
-    * schema of a never-evolved store); the caller (the engine)
-    * guarantees the main index and solely fields are unchanged — the
-    * store's keys, day partitioning and upsert identity do not move.
-    *
-    * SNAPSHOT mode is lazy: the hot tail is flushed (committing a
-    * final old-era generation), then the new era is recorded with
-    * `fromGeneration = live generation + 1` — one tiny sidecar write,
-    * no data rewrite. Old-era day dirs stay on disk as written and
-    * every read aligns them on the fly; time travel to a pre-evolve
-    * generation serves the OLD schema exactly ([[TsStore
-    * .openSnapshotAt]] aligns to the era live at that generation).
-    *
-    * FLAT mode migrates eagerly: one aligned whole-store rewrite
-    * through the pack swap. Flat commits can't bind "these files
-    * changed era" to a metadata record atomically (data dirs and
-    * sidecars land in separate renames, and there is no manifest
-    * generation to derive an era from), so keeping flat stores
-    * single-era is the correct trade — the rewrite preserves each
-    * row's `__seq` (tombstones keep ranking exactly as before) and
-    * is crash-safe via [[recoverSwaps]]'s `__packed`/`__old`
-    * protocol. A crash between the migration swap and the era-record
-    * write is healed by re-running evolve before the next write
-    * (align is idempotent on already-aligned rows).
-    *
-    * The era-record write (tmp + atomic rename, first-writer-wins) is
-    * the commit point; [[latestEraSdb]] is how an owning engine
-    * re-derives the live declaration after any crash. */
+    * store currently writes; the caller (the engine) guarantees the
+    * main index and solely fields are unchanged. Lazy: the hot tail is
+    * flushed (a final old-era generation), then the new era is
+    * recorded with `fromGeneration = live generation + 1` — no data
+    * rewrite; reads align old-era dirs on the fly and time travel to
+    * a pre-evolve generation serves the OLD schema. The era-record
+    * write (first-writer-wins) is the commit point; [[latestEraSdb]]
+    * is how an owning engine re-derives the declaration after a crash. */
   def evolveSchema(from: graft.schema.SdbSchema.Sdb,
       to: graft.schema.SdbSchema.Sdb): Unit = fenced {
     eraRecords.lastOption.foreach { last =>
@@ -2450,42 +1906,22 @@ final class TsStore(
     }
     require(from != to, "evolveSchema: schemas are identical")
     // flush first: hot rows were typed under the old schema and must
-    // land in old-era files (snapshot mode) or be part of the
-    // migration input (flat mode)
+    // land in old-era files
     save()
-    if (!snapshots && coldExists) cold.foreach { c =>
-      // flat migration: align every row to the new schema, carrying
-      // the system columns (incl. each row's own __seq) unchanged
-      val system = c.columns.filter(cn =>
-        !from.fields.exists(_.name == cn) && !to.fields.exists(_.name == cn))
-      flatRewriteSwap(
-        graft.ops.Convert.alignKeeping(c, from, to, system.toSeq),
-        TsStore.MigrateTargetFiles, None)
-      invalidateCold()
-      onColdChange(TsStore.Rewritten)
-    }
     val f = fs
     if (eraRecords.isEmpty)
       TsStore.writeEraRecord(f, path, TsStore.EraRecord(0, 0L, from))
     val nextEra = eraRecords.lastOption.map(_.era).getOrElse(0) + 1
-    val fromGen = if (snapshots) loadSnapshot().v + 1 else 0L
     TsStore.writeEraRecord(f, path,
-      TsStore.EraRecord(nextEra, fromGen, to))
+      TsStore.EraRecord(nextEra, loadSnapshot().v + 1, to))
     eraRecords = TsStore.readEras(f, path)
     liveReadSchema = Some(TsStore.withSystemCols(to))
   }
 
-  /** Snapshot-mode pack: the full rewrite (compaction + tombstone
-    * materialization) lands as one new manifest generation — pinned
-    * readers keep the pre-pack versions until [[vacuum]]. Leftover
-    * tombstones after a crash between the manifest commit and the
-    * meta rewrite are harmless: they re-filter rows the pack already
-    * removed (and the next pack clears them). */
-  /** The pack rewrite's physical layout — shared by the flat and
-    * snapshot commit halves. Default: one hash partition per day,
-    * rows sorted (subject, time). Z-order: `targetFiles` range
-    * partitions per day on the Morton code of the two dims' bucket
-    * ranks (see [[pack]]'s zorderBy overload). */
+  /** The pack rewrite's physical layout. Default: one hash partition
+    * per day, rows sorted (subject, time). Z-order: `targetFiles`
+    * range partitions per day on the Morton code of the two dims'
+    * bucket ranks (see [[pack]]'s zorderBy overload). */
   private def packedLayout(rows: DataFrame, targetFiles: Int,
       zorderBy: Option[(String, String)]): DataFrame = zorderBy match {
     case None =>
@@ -2532,35 +1968,6 @@ final class TsStore(
         graft.ops.Layout.uniformRank(col(dim),
           mm.getDouble(0), mm.getDouble(1), 256), lit(0L)))
   }
-
-  private def packSnapshot(targetFiles: Int,
-      zorderBy: Option[(String, String)] = None): Unit = cold.foreach { c =>
-    // durable watermark BEFORE the tmp write — the rewrite stamps rows
-    // with the current sequence and the tmp becomes replayable the
-    // moment its commit manifest lands (see save)
-    persistMeta()
-    val tmp = stagingTmp("packed") // token-suffixed (snapshot mode)
-    packedLayout(tombFiltered(c).withColumn("__seq", lit(seq)),
-        targetFiles, zorderBy)
-      .write.mode("overwrite").partitionBy("__day").parquet(tmp)
-    val f = fs
-    val tmpP = new org.apache.hadoop.fs.Path(tmp)
-    val produced = f.listStatus(tmpP)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__day="))
-      .map(_.getPath.getName).toSeq
-    TsStore.writeCommitDays(f,
-      new org.apache.hadoop.fs.Path(tmpP, TsStore.CommitManifest), produced,
-      loadSnapshot().v + 1)
-    commitPackedSnapshot(tmpP)
-    // every other generation-minting mutator invalidates here; without
-    // it the pinnedCache can keep serving a cached None for exactly the
-    // generation this pack mints (r19 advice)
-    invalidateCold()
-    f.delete(tmpP, true)
-    tombstones = Map.empty
-    persistMeta()
-    onColdChange(TsStore.Rewritten)
-  }
 }
 
 object TsStore {
@@ -2587,25 +1994,20 @@ object TsStore {
 
   private[store] val HistFile = "^v=(\\d+)\\.json$".r
 
-  /** Placed-at stamp file written inside every version dir by the
-    * committer ([[TsStore!.placeVersions]]): the placement instant as
-    * epoch-ms text. Underscore-prefixed so Spark's file listings hide
-    * it. Exists because [[vacuum]]'s `supersededGraceMs` needs "time
-    * since placement" and directory mtimes don't survive object
-    * stores. */
-  private[store] val PlacedStamp = "_placed"
-
-  /** A version dir's placement instant: the committer's stamp when
-    * present, the dir mtime otherwise (pre-stamp dirs, or a crash
-    * between the placing rename and the stamp write — HDFS/posix
-    * mtimes are correct there; object-store deployments re-commit
-    * through the stamped path). */
+  /** The instant `supersededGraceMs` counts from: the newest mtime of
+    * a version dir's data files (the dir's own when it holds none) —
+    * when the data was WRITTEN, which precedes placement by the
+    * commit's own duration (job commit, reservation, renames, slot
+    * claim; longer for a large pack): size the grace as the longest
+    * reader runtime plus that margin. A replayed placement re-dates the
+    * files ([[TsStore!.placeVersions]]); nothing else rewrites them, so
+    * they date the version on object stores too (a dir mtime means
+    * nothing there) and live exactly as long as the version does. */
   private[store] def placedAt(f: org.apache.hadoop.fs.FileSystem,
       verDir: org.apache.hadoop.fs.FileStatus): Long = {
-    val stamp = new org.apache.hadoop.fs.Path(verDir.getPath, PlacedStamp)
-    scala.util.Try(new String(readJsonBytes(f, stamp),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      .getOrElse(verDir.getModificationTime)
+    val files = f.listStatus(verDir.getPath).filter(_.isFile)
+    if (files.isEmpty) verDir.getModificationTime
+    else files.map(_.getModificationTime).max
   }
 
   /** The ONE tombstone kill predicate — `subject` dropped at sequence
@@ -2621,7 +2023,7 @@ object TsStore {
 
   /** The ONE manifest→frame read: the union of a day→version map's
     * version dirs, with `basePath` recovering `__day` as a partition
-    * column (so day predicates prune exactly as in the flat layout)
+    * column (so day predicates prune as partition filters)
     * and the internal `__v` dropped. */
   private[store] def readVersioned(spark: SparkSession, path: String,
       days: Map[String, Long]): DataFrame =
@@ -2643,10 +2045,6 @@ object TsStore {
   private[graft] final case class EraRecord(era: Int, fromGeneration: Long,
       sdb: graft.schema.SdbSchema.Sdb)
 
-  /** Per-day file-count dial for the flat-mode migration rewrite —
-    * the same default the engine's `pack` uses. */
-  private[store] val MigrateTargetFiles = 4
-
   private val EraFile = "^e=(\\d+)\\.json$".r
 
   private def schemasDir(path: String) =
@@ -2659,9 +2057,8 @@ object TsStore {
     else f.listStatus(dir).map(_.getPath.getName)
       .collect { case EraFile(e) => e.toInt }.toSeq.sorted
       .map { e =>
-        val node = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(readJsonBytes(f,
-            new org.apache.hadoop.fs.Path(dir, s"e=$e.json")))
+        val node = Json.readTree(readJsonBytes(f,
+          new org.apache.hadoop.fs.Path(dir, s"e=$e.json")))
         EraRecord(e, node.path("fromGeneration").asLong(0L),
           graft.schema.SdbSchema.parse(node.path("dsl").asText()))
       }
@@ -2673,14 +2070,12 @@ object TsStore {
     f.mkdirs(dir)
     val dest = new org.apache.hadoop.fs.Path(dir, s"e=${rec.era}.json")
     if (f.exists(dest)) return // immutable: first writer wins
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = m.createObjectNode()
+    val root = Json.createObjectNode()
     root.put("era", rec.era)
     root.put("fromGeneration", rec.fromGeneration)
     root.put("dsl", rec.sdb.toDsl)
     val tmp = new org.apache.hadoop.fs.Path(dir, s"e=${rec.era}.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(m.writeValueAsBytes(root)) finally out.close()
+    writeBytes(f, tmp, Json.writeValueAsBytes(root))
     if (!f.rename(tmp, dest)) f.delete(tmp, false) // lost the race: fine
   }
 
@@ -2738,13 +2133,10 @@ object TsStore {
     }.reduce(_.unionByName(_))
   }
 
-  /** The delete tmp's commit-point manifest (see
-    * [[TsStore.deleteWhere]] / swap recovery): which affected days the
-    * tmp REPLACES and which the delete EMPTIED. */
-  private[store] val AffectedManifest = "__affected.json"
-
-  /** Snapshot mode: the save/pack tmp's day list — with it, the tmp is
-    * a complete commit instruction replayable from any crash point. */
+  /** A staged save's instruction file inside its tmp ([[TsStore!
+    * .stageSave]]): with it, the staged tmp is a complete commit
+    * instruction the engine's marker can finalize from any crash
+    * point. */
   private[store] val CommitManifest = "__commit.json"
 
   /** A committed snapshot: generation counter + (escaped day dir name
@@ -2753,20 +2145,61 @@ object TsStore {
     * reclaim a removed day's final version dirs after the reader
     * grace passes (a count-based keep can never reclaim them: no
     * later version ever supersedes a day that left the manifest).
+    * `seq` is the ingest-sequence watermark at commit: the rows a
+    * commit stamps and the watermark covering them land in one claim.
     * Immutable; the manifest file swaps atomically. */
   private[store] final case class Snapshot(v: Long, days: Map[String, Long],
-      removed: Map[String, Long] = Map.empty, sub: Int = 0)
+      removed: Map[String, Long] = Map.empty, sub: Int = 0, seq: Long = 0L)
+
+  /** A placing commit's instruction — recorded as the generation's
+    * reservation (`__resv.<v>.json`), it is everything recovery and a
+    * takeover's adoption need to replay the commit from any crash
+    * point: the staged `tmp`, the day dirs to `place` from it at
+    * version `next.v`, the `next` manifest itself (removal epochs and
+    * watermark included), and the `tombstones` of the generation's
+    * time-travel record — which is this very file, renamed into
+    * `__snaphist` once the slot claim lands. */
+  private[store] final case class Instr(token: String, kind: String,
+      tmp: String, place: Seq[String], next: Snapshot,
+      tombstones: Map[String, Long])
+
+  private[store] def instrNode(i: Instr)
+      : com.fasterxml.jackson.databind.node.ObjectNode = {
+    val root = manifestNode(i.next)
+    root.put("token", i.token)
+    root.put("tmp", i.tmp)
+    root.put("kind", i.kind)
+    val pl = root.putArray("place")
+    i.place.sorted.foreach(pl.add)
+    val tb = root.putObject("tombstones")
+    i.tombstones.toSeq.sortBy(_._1).foreach { case (k, g) => tb.put(k, g) }
+    root
+  }
+
+  /** Generation `v`'s reservation as an instruction; None when absent,
+    * unreadable, or written by a build whose reservations carried no
+    * instruction (a pending one of those is sealed, never replayed). */
+  private[store] def readInstr(f: org.apache.hadoop.fs.FileSystem,
+      path: String, v: Long): Option[Instr] =
+    scala.util.Try(readJsonOpt(f, resvFile(path, v))).toOption.flatten
+      .filter(_.has("place")).map { n =>
+        import scala.jdk.CollectionConverters._
+        Instr(n.path("token").asText(), n.path("kind").asText(),
+          n.path("tmp").asText(),
+          n.path("place").elements().asScala.map(_.asText()).toSeq,
+          parseSnapshot(n), longMap(n, "tombstones"))
+      }
+
+  /** Shared JSON mapper: ObjectMapper construction is not free and
+    * the commit path serializes several sidecars per commit.
+    * Jackson's read/write surface is thread-safe after config. */
+  private[graft] val Json = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** A committed manifest's position in the claim sequence:
     * generation `v` plus a same-generation bookkeeping counter `k`
     * (vacuum's removal-record retirement rewrites the manifest
     * without advancing the generation). Total order: readers resolve
     * the MAX slot; writers claim exactly one slot per commit. */
-  /** Shared JSON mapper: ObjectMapper construction is not free and
-    * the commit path serializes several sidecars per commit.
-    * Jackson's read/write surface is thread-safe after config. */
-  private[graft] val Json = new com.fasterxml.jackson.databind.ObjectMapper()
-
   private[store] final case class SnapSlot(v: Long, k: Int)
       extends Ordered[SnapSlot] {
     def compare(o: SnapSlot): Int =
@@ -2825,12 +2258,9 @@ object TsStore {
     * slot) is detectable: any claim at `v <= floor` is a resurrection
     * and must not stand. 0 when GC never freed anything. */
   private[graft] def readFloor(f: org.apache.hadoop.fs.FileSystem,
-      path: String): Long = {
-    val p = floorFile(path)
-    if (!f.exists(p)) 0L
-    else scala.util.Try(new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readJsonBytes(f, p)).path("v").asLong(0L)).getOrElse(0L)
-  }
+      path: String): Long =
+    scala.util.Try(readJsonOpt(f, floorFile(path))).toOption.flatten
+      .map(_.path("v").asLong(0L)).getOrElse(0L)
 
   /** Best-effort monotonic: the recorded value is max(old, new) and
     * the tmp name carries the writer token, so two racing GC passes
@@ -2848,18 +2278,9 @@ object TsStore {
     root.put("v", math.max(prior, v))
     val tmp = new org.apache.hadoop.fs.Path(
       path.stripSuffix("/") + s"__snapfloor.json.tmp.$token")
-    val out = f.create(tmp, true)
-    try out.write(Json.writeValueAsBytes(root)) finally out.close()
+    writeBytes(f, tmp, Json.writeValueAsBytes(root))
     atomicReplace(f, tmp, floorFile(path))
   }
-
-  /** True when the root carries ANY committed manifest — numbered
-    * slot or the legacy single file. The open-time mode probe. */
-  private[store] def anyManifest(f: org.apache.hadoop.fs.FileSystem,
-      path: String): Boolean =
-    f.exists(new org.apache.hadoop.fs.Path(
-      path.stripSuffix("/") + "__snapshot.json")) ||
-      listSlotsAndResvs(f, path)._1.nonEmpty
 
   /** Resolve the LIVE committed snapshot: the max numbered slot, with
     * the legacy single-file manifest as fallback while no numbered
@@ -2901,6 +2322,21 @@ object TsStore {
     sys.error("unreachable")
   }
 
+  /** A sidecar's JSON, or None when the file does not exist — one
+    * `open`, no separate existence probe. */
+  private[graft] def readJsonOpt(f: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path)
+      : Option[com.fasterxml.jackson.databind.JsonNode] =
+    try Some(Json.readTree(readJsonBytes(f, p)))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** Create (or overwrite) `p` with `bytes`. */
+  private[graft] def writeBytes(f: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, bytes: Array[Byte]): Unit = {
+    val out = f.create(p, true)
+    try out.write(bytes) finally out.close()
+  }
+
   private[graft] def readJsonBytes(f: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Array[Byte] = {
     val in = f.open(p)
@@ -2912,28 +2348,16 @@ object TsStore {
   }
 
   /** Replace `dest` with the already-written `tmp` in ONE rename —
-    * every sidecar commit in the engine (manifests, leases, cursors,
-    * markers, catalogs) funnels through here, because "atomic
-    * replace" is filesystem-specific:
-    *
-    *  - HDFS and object-store FileContexts implement
-    *    `Rename.OVERWRITE` as a single namespace op — used as-is;
-    *  - the LOCAL FileContext (`file://`) delegates to
-    *    `FileSystem.rename(Path,Path,Rename...)`, which is
-    *    delete-then-rename — a crash between the two leaves NO file
-    *    at `dest`, and for a cursor/manifest "absent" reads as
-    *    "never initialized" (e.g. a bar root with no cursor passes
-    *    `bootstrapRollup`'s guard and re-seeds slot 0 over live
-    *    slots). Local roots therefore go through `java.nio`
-    *    `ATOMIC_MOVE|REPLACE_EXISTING` — one `rename(2)`, which
-    *    POSIX guarantees replaces atomically.
-    *
-    * LocalFileSystem is checksummed, so both files' `.crc` sidecars
-    * are dropped first: a stale `dest` checksum surviving the move
-    * would fail every later read of the NEW bytes. Dropping the crc
-    * before the move is safe in every crash ordering — a checksum
-    * sidecar is optional on read, so `dest` stays readable as either
-    * the old or the new content, never unreadable and never absent. */
+    * every sidecar commit in the engine (leases, metas, floors,
+    * cursors, markers, catalogs) funnels through here. HDFS and
+    * object-store FileContexts implement `Rename.OVERWRITE` as one
+    * namespace op. The LOCAL FileContext is delete-then-rename — a
+    * crash between the two leaves NO `dest`, which for a cursor or
+    * manifest reads as "never initialized" — so `file://` goes through
+    * `java.nio` `ATOMIC_MOVE|REPLACE_EXISTING`, one `rename(2)`. Both
+    * `.crc` sidecars are dropped first (a stale `dest` checksum would
+    * fail every read of the NEW bytes; a checksum is optional on read,
+    * so `dest` stays readable in every crash ordering). */
   private[graft] def atomicReplace(f: org.apache.hadoop.fs.FileSystem,
       tmp: org.apache.hadoop.fs.Path,
       dest: org.apache.hadoop.fs.Path): Unit = {
@@ -2959,34 +2383,19 @@ object TsStore {
   /** Claim `dest` with the fully-written `tmp`'s content — atomically
     * and EXCLUSIVELY: exactly one of N concurrent claimants of the
     * same `dest` returns true; the rest return false with their tmp
-    * cleaned up. This is the compare-and-swap primitive the engine
-    * catalog's numbered generations build on ([[atomicReplace]] is
-    * last-writer-wins and so can NEVER detect a lost race).
+    * cleaned up (the compare-and-swap every numbered generation here
+    * builds on — [[atomicReplace]] is last-writer-wins). `file://`
+    * uses `link(2)`, which fails EEXIST atomically; elsewhere Hadoop's
+    * plain `rename`, which HDFS refuses onto an existing dst — a false
+    * return counts as a lost race ONLY when `dest` exists (vanished
+    * sources or missing parents are real I/O failures, not races).
     *
-    *  - `file://`: `java.nio` `createLink` — `link(2)` fails EEXIST
-    *    atomically, and the linked content is the tmp's fully-written
-    *    bytes, so no reader ever sees a partial dest;
-    *  - elsewhere: Hadoop's plain `rename(src, dst)`, which HDFS
-    *    implements as an atomic namespace op that refuses an existing
-    *    dst (returns false / throws FileAlreadyExists). A false
-    *    return is reported as a lost race ONLY when `dest` actually
-    *    exists — rename also returns false for vanished sources or
-    *    missing parents, and looping on those would masquerade a real
-    *    I/O failure as an endless claim race.
-    *
-    * DEPLOYMENT REQUIREMENT (adjudicated): this primitive needs an
-    * HDFS-CLASS filesystem — one whose rename is an atomic namespace
-    * operation that refuses an existing destination (HDFS, posix
-    * via the link(2) branch, Azure ABFS). Bare S3A/GCS connectors
-    * implement rename as copy+delete with no exclusivity, so two
-    * claimants could both "win" — running the claim protocol
-    * directly on such a store is NOT supported. Object-store
-    * deployments must either mount an HDFS-class layer over the
-    * bucket (consistent rename semantics) or extend this method with
-    * a conditional-put branch (S3 `If-None-Match:*` / GCS
-    * `ifGenerationMatch=0` preconditions give the same
-    * exactly-one-winner guarantee); the scheme dispatch below is the
-    * seam where such a branch plugs in. */
+    * DEPLOYMENT REQUIREMENT: an HDFS-CLASS filesystem (HDFS, posix,
+    * Azure ABFS). Bare S3A/GCS rename is copy+delete with no
+    * exclusivity, so two claimants could both "win"; object stores
+    * need an HDFS-class layer or a conditional-put branch here (S3
+    * `If-None-Match:*` / GCS `ifGenerationMatch=0`) — the scheme
+    * dispatch below is the seam. */
   private[graft] def commitExclusive(f: org.apache.hadoop.fs.FileSystem,
       tmp: org.apache.hadoop.fs.Path,
       dest: org.apache.hadoop.fs.Path): Boolean = {
@@ -3021,64 +2430,75 @@ object TsStore {
   }
 
   private[store] def readSnapshot(f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Snapshot = {
-    if (!f.exists(p)) return Snapshot(0L, Map.empty)
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readJsonBytes(f, p))
+      p: org.apache.hadoop.fs.Path): Snapshot =
+    readJsonOpt(f, p).map(parseSnapshot).getOrElse(Snapshot(0L, Map.empty))
+
+  private[store] def parseSnapshot(node: com.fasterxml.jackson.databind.JsonNode)
+      : Snapshot =
+    Snapshot(node.path("v").asLong(0L), longMap(node, "days"),
+      longMap(node, "removed"), seq = node.path("seq").asLong(0L))
+
+  /** A JSON object field of longs as a map (absent → empty). */
+  private[graft] def longMap(node: com.fasterxml.jackson.databind.JsonNode,
+      field: String): Map[String, Long] = {
     import scala.jdk.CollectionConverters._
-    Snapshot(node.path("v").asLong(0L),
-      node.path("days").properties().asScala
-        .map(e => e.getKey -> e.getValue.asLong()).toMap,
-      node.path("removed").properties().asScala
-        .map(e => e.getKey -> e.getValue.asLong()).toMap)
+    node.path(field).properties().asScala
+      .map(e => e.getKey -> e.getValue.asLong(0L)).toMap
   }
 
-  /** `targetV` rides inside the commit instruction so a crash-replay
-    * commits AT the version the original run placed dirs under —
-    * never one re-derived from a manifest the original run may
-    * already have bumped. */
+  /** A manifest's JSON body: generation, days, removals, watermark. */
+  private[store] def manifestNode(s: Snapshot)
+      : com.fasterxml.jackson.databind.node.ObjectNode = {
+    val root = Json.createObjectNode()
+    root.put("v", s.v)
+    val d = root.putObject("days")
+    s.days.toSeq.sortBy(_._1).foreach { case (k, ver) => d.put(k, ver) }
+    val r = root.putObject("removed")
+    s.removed.toSeq.sortBy(_._1).foreach { case (k, ts) => r.put(k, ts) }
+    root.put("seq", s.seq)
+    root
+  }
+
+  /** A staged save's instruction: the produced day dirs, the
+    * generation they target (finalize commits AT it — never one
+    * re-derived from a manifest that may have moved) and the
+    * watermark their rows carry. */
+  private[store] final case class Staged(days: Seq[String], v: Long, seq: Long)
+
   private[store] def writeCommitDays(f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, days: Seq[String],
-      targetV: Long): Unit = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = m.createObjectNode()
-    root.put("v", targetV)
+      p: org.apache.hadoop.fs.Path, st: Staged): Unit = {
+    val root = Json.createObjectNode()
+    root.put("v", st.v)
+    root.put("seq", st.seq)
     val arr = root.putArray("days")
-    days.sorted.foreach(arr.add)
-    val out = f.create(p, true)
-    try out.write(m.writeValueAsBytes(root)) finally out.close()
+    st.days.sorted.foreach(arr.add)
+    writeBytes(f, p, Json.writeValueAsBytes(root))
   }
 
   private[store] def readCommitDays(f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): (Seq[String], Option[Long]) = {
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readJsonBytes(f, p))
-    val days =
-      (0 until node.path("days").size()).map(node.path("days").get(_).asText())
-    (days, if (node.has("v")) Some(node.path("v").asLong()) else None)
+      p: org.apache.hadoop.fs.Path): Staged = {
+    val node = Json.readTree(readJsonBytes(f, p))
+    Staged((0 until node.path("days").size()).map(node.path("days").get(_).asText()),
+      node.path("v").asLong(), node.path("seq").asLong(0L))
   }
 
-  private[store] def readAffected(f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): (Seq[String], Seq[String], Option[Long]) = {
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readJsonBytes(f, p))
-    def names(k: String): Seq[String] =
-      (0 until node.path(k).size()).map(node.path(k).get(_).asText())
-    (names("replaced"), names("removed"),
-      if (node.has("v")) Some(node.path("v").asLong()) else None)
-  }
+  /** The filesystem a store root lives on — resolved from the root
+    * path, never the session's default filesystem. */
+  private[graft] def rootFs(spark: SparkSession, path: String)
+      : org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The OUT-OF-PROCESS reader for a snapshot-mode store: pin the
+  /** The OUT-OF-PROCESS reader for a store: pin the
     * current manifest and return the cold view as of that instant —
     * every referenced dir is immutable, so the frame stays whole
     * through any number of concurrent saves/deletes/packs (until a
     * [[TsStore.vacuum]] whose grace the deployment sets longer than
-    * this reader runs). None = store empty (or not in snapshot mode).
+    * this reader runs). None = store empty.
     * Hot (unflushed) rows are process-private by design — this is the
     * cold contract, same as any external engine reading the parquet. */
   def openSnapshot(spark: SparkSession, path: String): Option[DataFrame] = {
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val f = rootFs(spark, path)
     val snap = readLiveSnapshot(f, path)
     if (snap.days.isEmpty) return None
     // tombstones are a (subject, sequence) predicate and the manifest
@@ -3104,19 +2524,10 @@ object TsStore {
   def openSnapshot(spark: SparkSession, path: String, subject: String)
       : Option[DataFrame] = {
     openSnapshot(spark, path).map { df =>
-      val f = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      val meta = new org.apache.hadoop.fs.Path(
-        path.stripSuffix("/") + "__meta.json")
-      val tombstones: Map[String, Long] =
-        if (!f.exists(meta)) Map.empty
-        else {
-          val node = new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(readJsonBytes(f, meta))
-          import scala.jdk.CollectionConverters._
-          node.path("tombstones").properties().asScala
-            .map(e => e.getKey -> e.getValue.asLong(0L)).toMap
-        }
+      val f = rootFs(spark, path)
+      val tombstones = readJsonOpt(f, new org.apache.hadoop.fs.Path(
+        path.stripSuffix("/") + "__meta.json"))
+        .fold(Map.empty[String, Long])(longMap(_, "tombstones"))
       tombstoneFilter(tombstones, subject)
         .fold(df)(dead => df.filter(!dead))
         // the ingest-sequence column is internal (needed above for the
@@ -3144,8 +2555,7 @@ object TsStore {
     * deleting the record FIRST (no record ⇒ no read). */
   def openSnapshotAt(spark: SparkSession, path: String, v: Long,
       subject: String): Option[DataFrame] = {
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val f = rootFs(spark, path)
     readHistRecord(f, path, v).flatMap { case (days, tombstones) =>
       if (days.isEmpty) None
       else {
@@ -3170,18 +2580,10 @@ object TsStore {
     * exactly this map. */
   private[graft] def readHistRecord(f: org.apache.hadoop.fs.FileSystem,
       path: String, v: Long)
-      : Option[(Map[String, Long], Map[String, Long])] = {
-    val rec = new org.apache.hadoop.fs.Path(
-      path.stripSuffix("/") + "__snaphist", s"v=$v.json")
-    if (!f.exists(rec)) return None
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readJsonBytes(f, rec))
-    import scala.jdk.CollectionConverters._
-    Some((node.path("days").properties().asScala
-        .map(e => e.getKey -> e.getValue.asLong()).toMap,
-      node.path("tombstones").properties().asScala
-        .map(e => e.getKey -> e.getValue.asLong(0L)).toMap))
-  }
+      : Option[(Map[String, Long], Map[String, Long])] =
+    readJsonOpt(f, new org.apache.hadoop.fs.Path(
+      path.stripSuffix("/") + "__snaphist", s"v=$v.json"))
+      .map(n => (longMap(n, "days"), longMap(n, "tombstones")))
 
   /** What a cold rewrite did — the contract behind [[TsStore.onColdChange]]. */
   sealed trait ColdChange
@@ -3199,10 +2601,7 @@ object TsStore {
     * a FILE-level mirror (the engine's SQL view) must refresh their
     * tombstone predicate from [[TsStore.tombstoneList]]. */
   case object Tombstoned extends ColdChange
-  /** Wholesale rewrite (pack materializing tombstones): partitions may
-    * have appeared or vanished — a full partition re-list is required. */
+  /** Wholesale rewrite (pack, restore): partitions may have appeared
+    * or vanished — a full partition re-list is required. */
   case object Rewritten extends ColdChange
-  /** `pack`: files rewritten inside existing partitions; the day set is
-    * unchanged, only cached file listings are stale. */
-  case object Compacted extends ColdChange
 }

@@ -606,7 +606,7 @@ class EngineSpec extends SparkSpec {
 
   test("snapshot-mode engine: pinned reader across del, mode checked on reopen") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create(stkDay)
     e.set("SH600600.stk_day",
       """[{"time":"2021-01-04","open":10.10,"close":10.50,"vol":100},
@@ -629,19 +629,49 @@ class EngineSpec extends SparkSpec {
     // emptied days' version dirs are reclaimed, reads unchanged
     e.vacuum("stk_day", keepSuperseded = 0, removedDayGraceMs = 0L)
     assert(e.get("SH600600.stk_day", "{}").count() == 1)
-    // a wrong-mode reopen of the same root fails at open, not lazily
-    assertThrows[IllegalArgumentException] { new Engine(spark, root) }
-    // the matching mode rehydrates and still serves the post-del state
-    assert(new Engine(spark, root, snapshots = true)
+    // a root of the retired flat layout (its catalog recorded
+    // "snapshots": false) fails at open, not lazily per table
+    val flatRoot = Files.createTempDirectory("graft_engine").toString
+    Files.write(java.nio.file.Paths.get(flatRoot, "__catalog.json"),
+      s"""{"snapshots":false,"tables":{"stk_day":"$stkDay"},"exposed":{}}"""
+        .getBytes("UTF-8"))
+    assertThrows[IllegalArgumentException] { new Engine(spark, flatRoot) }
+    // a reopen rehydrates and still serves the post-del state
+    assert(new Engine(spark, root)
       .get("SH600600.stk_day", "{}").count() == 1)
     // an unknown table throws like every other command — never a
     // silent None a typo would read as "no data"
     assertThrows[IllegalArgumentException] { e.openSnapshot("stk_dya") }
   }
 
+  test("a file:// root works while fs.defaultFS names another scheme") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val saved = Seq("fs.defaultFS", "fs.otherscheme.impl")
+      .map(k => k -> Option(conf.get(k)))
+    val root = "file://" + Files.createTempDirectory("graft_engine").toString
+    try {
+      conf.set("fs.otherscheme.impl", classOf[OtherSchemeFs].getName)
+      conf.set("fs.defaultFS", "otherscheme:///")
+      // the default filesystem would refuse every file:// path with
+      // Hadoop's wrong-FS check — the engine must resolve the root's own
+      assert(org.apache.hadoop.fs.FileSystem.get(conf).getScheme == "otherscheme")
+      val e = new Engine(spark, root)
+      e.create(stkDay)
+      e.set("SH600600.stk_day",
+        """{"time":"2021-01-04","open":10.10,"close":10.50,"vol":100}""")
+      e.save("stk_day")
+      assert(e.get("SH600600.stk_day", "{}").count() == 1)
+      val reopened = new Engine(spark, root)
+      assert(reopened.get("SH600600.stk_day", "{}").count() == 1)
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   test("snapshot-mode exposeSql pins partitions to the committed manifest") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create(stkDay)
     e.set("SH600600.stk_day",
       """[{"time":"2021-01-04","open":10.10,"close":10.50,"vol":100},
@@ -685,14 +715,14 @@ class EngineSpec extends SparkSpec {
     // registered nothing
     spark.sql(s"DROP VIEW $qn")
     spark.sql(s"DROP TABLE graft_snapsql.stk_day__files")
-    val e2 = new Engine(spark, root, snapshots = true)
+    val e2 = new Engine(spark, root)
     assert(spark.sql(s"SELECT sum(vol) FROM $qn").collect()(0).getLong(0)
       == 300, "rehydrated exposure lost the pinned partitions")
   }
 
   test("auto-vacuum bounds version dirs across many commits; pinned reader within grace unaffected") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create(stkDay)
     // every 2 generations, keep 1 superseded version per day but give
     // live-superseded versions a LONG time grace — so a reader pinned
@@ -729,7 +759,7 @@ class EngineSpec extends SparkSpec {
 
   test("saveAll: staged-but-unmarked commits roll BACK at the next open") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create(stkDay)
     e.set("SH600600.stk_day",
       """{"time":"2021-01-04","open":10.10,"close":10.50,"vol":100}""")
@@ -745,7 +775,7 @@ class EngineSpec extends SparkSpec {
     assert(e.storeHandle("stk_day").stageSave(),
       "the hot tail must stage")
     assert(stagedTmps.nonEmpty)
-    val e2 = new Engine(spark, root, snapshots = true)
+    val e2 = new Engine(spark, root)
     assert(e2.atomicMarker().isEmpty)
     // all-pre: the staged round is invisible and its tmp discarded
     assert(e2.get("SH600600.stk_day", "{}").count() == 1,
@@ -757,7 +787,7 @@ class EngineSpec extends SparkSpec {
 
   test("atomic marker pins pre-commit generations past aggressive auto-vacuum") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create(stkDay)
     e.create("{stk_two:{fields:{time:[D,4],open:[P,4,1,2]," +
       "close:[P,4,1,2],vol:[U,4]}}}")
@@ -792,7 +822,7 @@ class EngineSpec extends SparkSpec {
 
   test("auto-vacuum with a cutMaxAgeMs dial surfaces stale-cut warnings") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create(stkDay)
     e.set("SH600600.stk_day",
       """{"time":"2021-01-04","open":10.10,"close":10.50,"vol":100}""")
@@ -825,7 +855,7 @@ class EngineSpec extends SparkSpec {
 
   test("exposeSqlAt: frozen time-travel view across later delete and pack; live view moves") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create(stkDay)
     e.set("SH600600.stk_day",
       """[{"time":"2021-01-04","open":10.10,"close":10.50,"vol":100},
@@ -867,7 +897,7 @@ class EngineSpec extends SparkSpec {
 
   test("exposeSqlAt after engine restart: the rehydrated catalog re-derives the identical pinned view") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create(stkDay)
     e.set("SH600600.stk_day",
       """[{"time":"2021-01-04","open":10.10,"close":10.50,"vol":100},
@@ -885,7 +915,7 @@ class EngineSpec extends SparkSpec {
     // so the assertion can only pass off a RE-derivation, then restart
     spark.sql(s"DROP VIEW $at")
     spark.sql(s"DROP TABLE graft_tt_restart.stk_day__v${v1}__files")
-    val e2 = new Engine(spark, root, snapshots = true)
+    val e2 = new Engine(spark, root)
     val at2 = e2.exposeSqlAt("stk_day", v1, db = "graft_tt_restart")
     assert(at2 == at)
     val after = spark.sql(
@@ -897,7 +927,7 @@ class EngineSpec extends SparkSpec {
 
   test("snapshotAll: one cut across two drifting tables survives vacuum; dropping it releases the pin") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create(stkDay)
     e.create(
       "{stk_wk:{fields:{time:[D,4],open:[P,4,1,2],close:[P,4,1,2],vol:[U,4]}}}")
@@ -948,7 +978,7 @@ class EngineSpec extends SparkSpec {
 
   test("listCuts audits age + pinned generations; cutMaxAgeMs flags forgotten cuts") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create(stkDay)
     e.set("SH600600.stk_day",
       """{"time":"2021-01-04","open":10.10,"close":10.50,"vol":100}""")
@@ -983,7 +1013,7 @@ class EngineSpec extends SparkSpec {
 
   test("snapshotAll after a tombstone-only drop mints a generation: the cut never resurrects the dropped subject") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create(stkDay)
     e.set("SH600600.stk_day",
       """{"time":"2021-01-04","open":10.10,"close":10.50,"vol":100}""")
@@ -1012,7 +1042,7 @@ class EngineSpec extends SparkSpec {
 
   test("cut records are cached as immutable: repeat vacuums pay the listing, never re-reads") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create(stkDay)
     e.set("SH600600.stk_day",
       """{"time":"2021-01-04","open":10.10,"close":10.50,"vol":100}""")
@@ -1032,7 +1062,7 @@ class EngineSpec extends SparkSpec {
         s"(${e.cutRecordLoads - before} loads)")
     // a fresh engine loads each record exactly ONCE across any number
     // of vacuums
-    val e2 = new Engine(spark, root, snapshots = true)
+    val e2 = new Engine(spark, root)
     e2.vacuum("stk_day", keepSuperseded = 0, keepHistory = 1)
     val warm = e2.cutRecordLoads
     assert(warm == 2, s"expected one load per record, got $warm")
@@ -1058,7 +1088,7 @@ class EngineSpec extends SparkSpec {
 
   test("cut pins survive an engine restart: a fresh engine's vacuum re-derives them from the on-disk cut records") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create(stkDay)
     e.set("SH600600.stk_day",
       """{"time":"2021-01-04","open":10.10,"close":10.50,"vol":100}""")
@@ -1069,7 +1099,7 @@ class EngineSpec extends SparkSpec {
     e.save("stk_day") // generation 2
     // the pin must not live in the recording engine's memory: a FRESH
     // engine over the same root runs the aggressive vacuum
-    val e2 = new Engine(spark, root, snapshots = true)
+    val e2 = new Engine(spark, root)
     e2.vacuum("stk_day", keepSuperseded = 0, keepHistory = 1)
     val pair = e2.openSnapshotAllAt(cut)
     assert(pair("stk_day").exists(_.count() == 1),
@@ -1078,7 +1108,7 @@ class EngineSpec extends SparkSpec {
 
   test("restoreToCut: rolls every table back, skips never-committed tables, refuses unknown cuts") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create(stkDay)
     e.create("{stk_min:{fields:{time:[T,8],open:[F,8],close:[F,8],vol:[I,4]}}}")
     e.set("SH600600.stk_day",
@@ -1102,7 +1132,7 @@ class EngineSpec extends SparkSpec {
   test("restoreToCut is crash-recoverable: the marker rolls forward at open; the atomic view never mixes") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create("{a:{fields:{t:[T,8],value:[F,8]}}}")
     e.create("{b:{fields:{t:[T,8],value:[F,8]}}}")
     e.set("u1.a", """{"t":"2024-01-01T01:00:00Z","value":1.0}""")
@@ -1133,7 +1163,7 @@ class EngineSpec extends SparkSpec {
       s"the atomic view leaked the half-restored middle: $atomic")
     stB.onBeforeSnapshotClaim = () => ()
     // a new engine over the root rolls the restore FORWARD at open
-    val e2 = new Engine(spark, root, snapshots = true)
+    val e2 = new Engine(spark, root)
     assert(e2.restoreMarker().isEmpty,
       "open-time recovery did not complete and release the restore")
     assert(e2.get("*.a", "{}").count() == 1 &&
@@ -1145,7 +1175,7 @@ class EngineSpec extends SparkSpec {
 
   test("saveAll holds store monitors: a concurrent set blocks for the span and is never lost") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create("{a:{fields:{t:[T,8],value:[F,8]}}}")
     e.create("{b:{fields:{t:[T,8],value:[F,8]}}}")
     e.set("u1.a", """{"t":"2024-01-01T00:00:00Z","value":1.0}""")
@@ -1187,7 +1217,7 @@ class EngineSpec extends SparkSpec {
   test("saveAll x evolve: unmarked stages roll back before an evolve; a marker rolls forward under the pre-evolve era") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create("{a:{fields:{t:[T,8],value:[F,8]}}}")
     e.create("{b:{fields:{t:[T,8],value:[F,8]}}}")
     e.set("u1.a", """{"t":"2024-01-01T01:00:00Z","value":1.0}""")
@@ -1199,7 +1229,7 @@ class EngineSpec extends SparkSpec {
     // evolve proceeds on the committed state
     e.set("u2.a", """{"t":"2024-01-02T01:00:00Z","value":3.0}""")
     assert(e.storeHandle("a").stageSave())
-    val e2 = new Engine(spark, root, snapshots = true)
+    val e2 = new Engine(spark, root)
     e2.evolve("{a:{fields:{t:[T,8],value:[F,8],score:[F,8]}}}")
     val subjectsA = e2.get("*.a", "{}")
       .select("subject").collect().map(_.getString(0)).toSet
@@ -1225,7 +1255,7 @@ class EngineSpec extends SparkSpec {
     assert(e2.atomicMarker().nonEmpty,
       "the crashed saveAll must leave its marker")
     stB.onBeforeSnapshotClaim = () => ()
-    val e3 = new Engine(spark, root, snapshots = true) // rolls forward
+    val e3 = new Engine(spark, root) // rolls forward
     assert(e3.atomicMarker().isEmpty,
       "open-time recovery did not release the marker")
     e3.evolve("{b:{fields:{t:[T,8],value:[F,8],score:[F,8]}}}")
@@ -1242,7 +1272,7 @@ class EngineSpec extends SparkSpec {
   test("maintainRollup: refuses without a bootstrap, no-ops when the store has not moved") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create("{ev:{fields:{t:[T,8],value:[F,8]}}}")
     e.set("u1.ev", """[{"t":"2024-01-01T01:00:00Z","value":1.0},
       {"t":"2024-01-02T01:00:00Z","value":3.0}]""")
@@ -1283,14 +1313,14 @@ class EngineSpec extends SparkSpec {
   test("writer fence at the engine seam: a second engine on one root supersedes the first, manifests stay whole") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_engine").toString
-    val e1 = new Engine(spark, root, snapshots = true)
+    val e1 = new Engine(spark, root)
     e1.create("{ev:{fields:{t:[T,8],value:[F,8]}}}")
     e1.set("u1.ev", """{"t":"2024-01-01T01:00:00Z","value":1.0}""")
     e1.save("ev")
     // a second engine over the SAME root (the lease lives on the
     // shared filesystem, so the mechanism is identical for a second
     // process): opening and READING must not fence the active writer
-    val e2 = new Engine(spark, root, snapshots = true)
+    val e2 = new Engine(spark, root)
     assert(e2.get("*.ev", "{}").count() == 1)
     e1.set("u1.ev", """{"t":"2024-01-02T01:00:00Z","value":2.0}""")
     e1.save("ev") // still the sole writer — must not throw
@@ -1321,7 +1351,7 @@ class EngineSpec extends SparkSpec {
     assert(e2.openSnapshotAllAt(cut)("ev").get.count() == 4)
     // a RESTART of the fenced engine (a fresh handle, the documented
     // recovery) takes the root back and can write again
-    val e3 = new Engine(spark, root, snapshots = true)
+    val e3 = new Engine(spark, root)
     e3.set("u3.ev", """{"t":"2024-01-06T01:00:00Z","value":5.0}""")
     e3.save("ev")
     assert(e3.get("*.ev", "{}").count() == 5)
@@ -1330,13 +1360,13 @@ class EngineSpec extends SparkSpec {
   test("catalog sidecar fence and merge: a superseded engine cannot shadow the winner's declarations") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_engine").toString
-    val e1 = new Engine(spark, root, snapshots = true)
+    val e1 = new Engine(spark, root)
     e1.create("{ev:{fields:{t:[T,8],value:[F,8]}}}")
     e1.set("u1.ev", """{"t":"2024-01-01T01:00:00Z","value":1.0}""")
     e1.save("ev")
     // e2 takes the root over AND creates a new table the stale e1
     // cannot know about
-    val e2 = new Engine(spark, root, snapshots = true)
+    val e2 = new Engine(spark, root)
     e2.set("u2.ev", """{"t":"2024-01-02T01:00:00Z","value":2.0}""")
     e2.save("ev")
     e2.create("{won:{fields:{t:[T,8],score:[F,8]}}}")
@@ -1350,7 +1380,7 @@ class EngineSpec extends SparkSpec {
     assert(ex.getMessage.contains("FENCED"), ex.getMessage)
     intercept[IllegalStateException] { e1.exposeSql("ev", "graftdb") }
     // a fresh engine sees the winner's full catalog, nothing shadowed
-    val e3 = new Engine(spark, root, snapshots = true)
+    val e3 = new Engine(spark, root)
     assert(e3.catalog.tables.toSet == Set("ev", "won"),
       s"the winner's declarations were shadowed: ${e3.catalog.tables}")
     // catalog-only divergence between engines that never wrote a
@@ -1358,18 +1388,18 @@ class EngineSpec extends SparkSpec {
     // are never removed, so a name-union is always safe) — two admin
     // engines creating different tables no longer last-wins-erase
     // each other
-    val a = new Engine(spark, root, snapshots = true)
-    val b = new Engine(spark, root, snapshots = true) // opened pre-'ta'
+    val a = new Engine(spark, root)
+    val b = new Engine(spark, root) // opened pre-'ta'
     a.create("{ta:{fields:{t:[T,8],x:[F,8]}}}")
     b.create("{tb:{fields:{t:[T,8],y:[F,8]}}}") // must carry 'ta' through
-    val e4 = new Engine(spark, root, snapshots = true)
+    val e4 = new Engine(spark, root)
     assert(e4.catalog.tables.toSet == Set("ev", "won", "ta", "tb"),
       s"catalog-only divergence erased a declaration: ${e4.catalog.tables}")
   }
 
   test("catalog CAS: a persist that loses the claim race re-merges and retries — both concurrent creates survive") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val a = new Engine(spark, root, snapshots = true)
+    val a = new Engine(spark, root)
     a.create("{ta:{fields:{t:[T,8],x:[F,8]}}}")
     // inject the exact lost-update interleaving the old read-merge-
     // write could never detect: BETWEEN a's merge-read and a's commit,
@@ -1380,13 +1410,13 @@ class EngineSpec extends SparkSpec {
     var fired = false
     a.onBeforeCatalogClaim = () => if (!fired) {
       fired = true
-      val b = new Engine(spark, root, snapshots = true)
+      val b = new Engine(spark, root)
       b.create("{tb:{fields:{t:[T,8],y:[F,8]}}}")
     }
     a.create("{tc:{fields:{t:[T,8],z:[F,8]}}}")
     a.onBeforeCatalogClaim = () => ()
     assert(fired, "the race injection never fired")
-    val check = new Engine(spark, root, snapshots = true)
+    val check = new Engine(spark, root)
     assert(check.catalog.tables.toSet == Set("ta", "tb", "tc"),
       s"the lost claim race erased a declaration: ${check.catalog.tables}")
     // committed generations stay bounded: the winner's GC keeps the
@@ -1405,7 +1435,7 @@ class EngineSpec extends SparkSpec {
     val barRoot = s"$root/bars"
     val grp = Seq(lit("all").as("g"))
     val okey = unix_millis(col("t"))
-    val e1 = new Engine(spark, root, snapshots = true)
+    val e1 = new Engine(spark, root)
     e1.create("{ev:{fields:{t:[T,8],value:[F,8]}}}")
     e1.set("u1.ev", """{"t":"2024-01-01T01:00:00Z","value":1.0}""")
     e1.bootstrapRollup("ev", barRoot, grp, okey, col("value"),
@@ -1416,7 +1446,7 @@ class EngineSpec extends SparkSpec {
     // a SECOND engine starts maintaining the same bar root: its first
     // round takes the lease over (takeover, not mutex — a crashed
     // maintainer must never brick the root)
-    val e2 = new Engine(spark, root, snapshots = true)
+    val e2 = new Engine(spark, root)
     e2.maintainRollup("ev", barRoot, grp, okey, col("value"), col("value"))
     // the superseded maintainer's next round fails LOUDLY at round
     // start — before any marker or placement
@@ -1442,7 +1472,7 @@ class EngineSpec extends SparkSpec {
   test("writer fence across a process boundary: a foreign lease token injected on disk fences this engine, manifests stay whole") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create("{ev:{fields:{t:[T,8],value:[F,8]}}}")
     e.set("u1.ev", """{"t":"2024-01-01T01:00:00Z","value":1.0}""")
     e.save("ev") // first write: e takes the table's writer lease
@@ -1461,7 +1491,7 @@ class EngineSpec extends SparkSpec {
     assert(ex.getMessage.contains("FENCED"), ex.getMessage)
     // no manifest corruption: a fresh engine (the "other process")
     // serves exactly the pre-takeover committed corpus and can write
-    val e2 = new Engine(spark, root, snapshots = true)
+    val e2 = new Engine(spark, root)
     val rows = e2.get("u1.ev", "{}").select("value").collect()
       .map(_.getDouble(0)).toSeq
     assert(rows == Seq(1.0),
@@ -1474,7 +1504,7 @@ class EngineSpec extends SparkSpec {
   test("maintainRollup: slots derive from the generation — interleaved rounds cannot collide") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create("{ev:{fields:{t:[T,8],value:[F,8]}}}")
     e.set("u1.ev", """{"t":"2024-01-01T01:00:00Z","value":1.0}""")
     val barRoot = s"$root/bars"
@@ -1512,7 +1542,7 @@ class EngineSpec extends SparkSpec {
   test("maintainRollup recovery: a completed round's stale marker is released, never re-run over") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create("{ev:{fields:{t:[T,8],value:[F,8]}}}")
     e.set("u1.ev", """{"t":"2024-01-01T01:00:00Z","value":1.0}""")
     val barRoot = s"$root/bars"
@@ -1558,7 +1588,7 @@ class EngineSpec extends SparkSpec {
   test("maintainRollup recovery: an old-scheme marker is rebuilt, never released by a generation compare") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create("{ev:{fields:{t:[T,8],value:[F,8]}}}")
     e.set("u1.ev", """[{"t":"2024-01-01T01:00:00Z","value":1.0},
       {"t":"2024-01-02T01:00:00Z","value":2.0}]""")
@@ -1598,7 +1628,7 @@ class EngineSpec extends SparkSpec {
   test("maintainRollup recovery: an unschemed marker on an IDLE store is rebuilt and cleared, not pended forever") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create("{ev:{fields:{t:[T,8],value:[F,8]}}}")
     e.set("u1.ev", """[{"t":"2024-01-01T01:00:00Z","value":1.0},
       {"t":"2024-01-02T01:00:00Z","value":2.0}]""")
@@ -1649,7 +1679,7 @@ class EngineSpec extends SparkSpec {
   test("maintainRollup recovery: a CRASHED recovery round's non-advancing marker rebuilds again — never released by the cursor compare") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create("{ev:{fields:{t:[T,8],value:[F,8]}}}")
     e.set("u1.ev", """[{"t":"2024-01-01T01:00:00Z","value":1.0},
       {"t":"2024-01-02T01:00:00Z","value":2.0}]""")
@@ -1688,7 +1718,7 @@ class EngineSpec extends SparkSpec {
 
   test("catalog CAS: a claim of a GC-retired slot number is detected and retried (the ABA window)") {
     val root = Files.createTempDirectory("graft_engine").toString
-    val a = new Engine(spark, root, snapshots = true)
+    val a = new Engine(spark, root)
     a.create("{ta:{fields:{t:[T,8],x:[F,8]}}}")
     // a stalls between its merge-read and its claim while another
     // engine commits THREE more generations — the GC of the third
@@ -1699,7 +1729,7 @@ class EngineSpec extends SparkSpec {
     var fired = false
     a.onBeforeCatalogClaim = () => if (!fired) {
       fired = true
-      val b = new Engine(spark, root, snapshots = true)
+      val b = new Engine(spark, root)
       b.create("{b1:{fields:{t:[T,8],x:[F,8]}}}")
       b.create("{b2:{fields:{t:[T,8],x:[F,8]}}}")
       b.create("{b3:{fields:{t:[T,8],x:[F,8]}}}")
@@ -1707,7 +1737,7 @@ class EngineSpec extends SparkSpec {
     a.create("{tx:{fields:{t:[T,8],z:[F,8]}}}")
     a.onBeforeCatalogClaim = () => ()
     assert(fired)
-    val check = new Engine(spark, root, snapshots = true)
+    val check = new Engine(spark, root)
     assert(check.catalog.tables.toSet ==
       Set("ta", "b1", "b2", "b3", "tx"),
       s"the ABA claim lost a declaration: ${check.catalog.tables}")
@@ -1720,7 +1750,7 @@ class EngineSpec extends SparkSpec {
   test("maintainRollup recovery: a crashed round's recorded days rebuild even when the feed nets them out") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create("{ev:{fields:{t:[T,8],value:[F,8]}}}")
     e.set("u1.ev", """{"t":"2024-01-01T01:00:00Z","value":1.0}""")
     val barRoot = s"$root/bars"
@@ -1763,7 +1793,7 @@ class EngineSpec extends SparkSpec {
   test("restoreToCut × maintained bars: one round after the restore converges bars to the restored corpus") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     e.create("{ev:{fields:{t:[T,8],value:[F,8]}}}")
     val barRoot = s"$root/bars"
     val grp = Seq(lit("all").as("g"))
@@ -1824,7 +1854,7 @@ class EngineSpec extends SparkSpec {
   test("factor tables ride CDC and restore like any sdb table") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     val t1 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
     val t2 = java.time.Instant.parse("2024-01-02T00:00:00Z").toEpochMilli
     e.fset("u1.macd", t1, 1.0)
@@ -1852,7 +1882,7 @@ class EngineSpec extends SparkSpec {
   test("changesBetween keys include solely fields: same-timestamp rows diff cleanly") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft_engine").toString
-    val e = new Engine(spark, root, snapshots = true)
+    val e = new Engine(spark, root)
     // a solely field: two legitimate rows per (subject, t)
     e.create("{tr:{fields:{t:[T,8],side:[C,4,1,0,O],px:[F,8]}}}")
     e.set("u1.tr", """[{"t":"2024-01-01T01:00:00Z","side":"buy","px":1.0},
@@ -1872,4 +1902,11 @@ class EngineSpec extends SparkSpec {
     assert(r.getAs[String]("op") == "update" &&
       r.getAs[String]("side") == "sell")
   }
+}
+
+/** A local filesystem answering to another scheme — a stand-in default
+  * filesystem that needs no service behind it. */
+class OtherSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("otherscheme:///")
+  override def getScheme: String = "otherscheme"
 }

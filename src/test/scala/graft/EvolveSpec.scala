@@ -21,8 +21,7 @@ import org.apache.spark.sql.types._
   *    commit and the catalog persist (healed from the store's own
   *    era records);
   *  - identity invariants (main index, solely set) are refused;
-  *  - flat mode migrates once through the crash-safe pack swap,
-  *    preserving tombstone ranking.
+  *  - a drop issued before an evolve keeps ranking after it.
   */
 class EvolveSpec extends SparkSpec {
 
@@ -59,7 +58,7 @@ class EvolveSpec extends SparkSpec {
 
   test("snapshot mode: evolve aligns live reads, time travel serves the old schema") {
     val root = Files.createTempDirectory("graft_evolve").toString + "/e"
-    val eng = new graft.api.Engine(spark, root, snapshots = true)
+    val eng = new graft.api.Engine(spark, root)
     eng.create(V0)
     seedOldRows(eng)
     eng.save("ev")
@@ -102,7 +101,7 @@ class EvolveSpec extends SparkSpec {
 
   test("changesBetween spans the evolve boundary: aligned, no phantom ops") {
     val root = Files.createTempDirectory("graft_evolve").toString + "/e"
-    val eng = new graft.api.Engine(spark, root, snapshots = true)
+    val eng = new graft.api.Engine(spark, root)
     eng.create(V0)
     seedOldRows(eng) // u1@01-08, u1@01-09, u2@01-08
     eng.save("ev")
@@ -144,13 +143,13 @@ class EvolveSpec extends SparkSpec {
 
   test("evolved declaration survives restart and heals a torn catalog") {
     val root = Files.createTempDirectory("graft_evolve").toString + "/r"
-    val eng = new graft.api.Engine(spark, root, snapshots = true)
+    val eng = new graft.api.Engine(spark, root)
     eng.create(V0)
     seedOldRows(eng)
     eng.save("ev")
     eng.evolve(V1)
     // plain restart: catalog sidecar carries the evolved DSL
-    val eng2 = new graft.api.Engine(spark, root, snapshots = true)
+    val eng2 = new graft.api.Engine(spark, root)
     assert(eng2.catalog.get("ev").map(_.toDsl) ==
       Some(SdbSchema.parse(V1).toDsl))
     seedNewRows(eng2)
@@ -171,7 +170,7 @@ class EvolveSpec extends SparkSpec {
       .put("ev", SdbSchema.parse(V0, "ev").toDsl)
     val out = f.create(catFile, true)
     try out.write(m.writeValueAsBytes(node)) finally out.close()
-    val eng3 = new graft.api.Engine(spark, root, snapshots = true)
+    val eng3 = new graft.api.Engine(spark, root)
     assert(eng3.catalog.get("ev").map(_.toDsl) ==
       Some(SdbSchema.parse(V0).toDsl), "precondition: sidecar is stale")
     // a write heals the catalog from the store's era records BEFORE
@@ -189,7 +188,7 @@ class EvolveSpec extends SparkSpec {
 
   test("first retry of an interrupted evolve is an idempotent no-op") {
     val root = Files.createTempDirectory("graft_evolve").toString + "/rt"
-    val eng = new graft.api.Engine(spark, root, snapshots = true)
+    val eng = new graft.api.Engine(spark, root)
     eng.create(V0)
     seedOldRows(eng)
     eng.save("ev")
@@ -207,7 +206,7 @@ class EvolveSpec extends SparkSpec {
       .put("ev", SdbSchema.parse(V0, "ev").toDsl)
     val out = f.create(catFile, true)
     try out.write(m.writeValueAsBytes(node)) finally out.close()
-    val eng2 = new graft.api.Engine(spark, root, snapshots = true)
+    val eng2 = new graft.api.Engine(spark, root)
     assert(eng2.catalog.get("ev").map(_.toDsl) ==
       Some(SdbSchema.parse(V0).toDsl), "precondition: sidecar is stale")
     // the retry: evolve must heal the catalog from the store's era
@@ -222,7 +221,7 @@ class EvolveSpec extends SparkSpec {
 
   test("identity invariants and SQL exposure are refused; unexpose+pack unblocks") {
     val root = Files.createTempDirectory("graft_evolve").toString + "/g"
-    val eng = new graft.api.Engine(spark, root, snapshots = true)
+    val eng = new graft.api.Engine(spark, root)
     eng.create(V0)
     seedOldRows(eng)
     eng.save("ev")
@@ -257,13 +256,13 @@ class EvolveSpec extends SparkSpec {
     eng.unexposeSql("ev")
   }
 
-  test("flat mode: evolve migrates once, preserves tombstone ranking") {
+  test("a drop before an evolve keeps ranking across the era bump") {
     val root = Files.createTempDirectory("graft_evolve").toString + "/f"
-    val eng = new graft.api.Engine(spark, root) // flat
+    val eng = new graft.api.Engine(spark, root)
     eng.create(V0)
     seedOldRows(eng)
     eng.save("ev")
-    eng.drop("u2.ev") // tombstone BEFORE the migration
+    eng.drop("u2.ev") // tombstone BEFORE the evolve
     eng.evolve(V1)
     seedNewRows(eng)
     eng.save("ev")
@@ -272,18 +271,13 @@ class EvolveSpec extends SparkSpec {
     val subjects = live.select("subject").distinct()
       .collect().map(_.getString(0)).toSet
     assert(subjects == Set("u1", "u3"),
-      "the pre-evolve tombstone must keep ranking after the migration")
+      "the pre-evolve tombstone must keep ranking after the evolve")
     assert(live.count() == 4)
-    // the migration rewrote the store to a single (new) era: every
-    // data file self-describes the new layout
-    val raw = spark.read.parquet(s"$root/ev")
-    assert(fieldTypes(raw)("qty") == LongType &&
-      fieldTypes(raw)("flag") == StringType)
   }
 
   test("three eras: groups align DIRECTLY to the target era, not through intermediates") {
     val root = Files.createTempDirectory("graft_evolve").toString + "/c"
-    val eng = new graft.api.Engine(spark, root, snapshots = true)
+    val eng = new graft.api.Engine(spark, root)
     // qty: I in v0 -> C in vMid -> I back in vEnd. The reference's
     // converter bridges a stored record's schema and the LIVE schema
     // pairwise (sis_dynamic.h:12-51 — no chaining through versions a
@@ -331,7 +325,7 @@ class EvolveSpec extends SparkSpec {
 
   test("a cross-era cut stays readable via openSnapshotAllAt but refuses raw manifest export") {
     val root = Files.createTempDirectory("graft_evolve").toString + "/x"
-    val eng = new graft.api.Engine(spark, root, snapshots = true)
+    val eng = new graft.api.Engine(spark, root)
     eng.create(V0)
     seedOldRows(eng)
     eng.save("ev")
@@ -354,7 +348,7 @@ class EvolveSpec extends SparkSpec {
 
   test("evolve composes with the degenerate table classes: factor, ONE and MUL KV") {
     val root = Files.createTempDirectory("graft_evolve").toString + "/kv"
-    val eng = new graft.api.Engine(spark, root, snapshots = true)
+    val eng = new graft.api.Engine(spark, root)
     // factor table auto-created by fset; MUL list by kpush
     eng.fset("u1.macd", 1000L, 1.5)
     eng.kpush("watch", "a")
@@ -391,7 +385,7 @@ class EvolveSpec extends SparkSpec {
 
   test("empty evolved store serves the new struct; evolve is idempotent") {
     val root = Files.createTempDirectory("graft_evolve").toString + "/m"
-    val eng = new graft.api.Engine(spark, root, snapshots = true)
+    val eng = new graft.api.Engine(spark, root)
     eng.create(V0)
     eng.evolve(V1)
     eng.evolve(V1) // no-op, not an error
@@ -403,7 +397,7 @@ class EvolveSpec extends SparkSpec {
 
   test("maintained rollup × evolve: bars converge across the era bump; era-0 zero-fill flows into rebuilt partials") {
     val root = Files.createTempDirectory("graft_evolve").toString
-    val eng = new graft.api.Engine(spark, root, snapshots = true)
+    val eng = new graft.api.Engine(spark, root)
     eng.create("{ev:{fields:{t:[T,8],value:[F,8],qty:[I,4]}}}")
     val barRoot = s"$root/bars"
     val grp = Seq(lit("all").as("g"))

@@ -304,6 +304,37 @@ class SimilaritySpec extends SparkSpec {
     assert(mean > 0.7 && mean < 1.3, s"JL mean distortion $mean")
   }
 
+  test("randomProjection input contract: a null element, a wrong length or a null vector gives a null array") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dim = 4
+    val planes = graft.functions.VectorFunctions.randomPlanes(3, dim, seed = 9L)
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(DoubleType, containsNull = true))))
+    val rows = Seq(
+      Row(0L, Seq[java.lang.Double](1.0, null, 2.0, 3.0)), // null element
+      Row(1L, Seq[java.lang.Double](1.0, 2.0, 3.0)),       // short vector
+      Row(2L, null),                                        // null vector
+      Row(3L, Seq[java.lang.Double](1.0, 2.0, 3.0, 4.0)))   // well-formed
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+    // both evaluation paths: generated code and the interpreted fallback
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try {
+        val got = Similarity.randomProjection(df, "vec_id", "embedding", planes)
+          .collect().map(r => r.getLong(0) ->
+            Option(r.getSeq[java.lang.Double](1))).toMap
+        Seq(0L, 1L, 2L).foreach { id =>
+          assert(got(id).isEmpty,
+            s"$mode: vector $id must project to a null array, got ${got(id)}")
+        }
+        assert(got(3L).exists(p => p.size == 3 && p.forall(_ != null)),
+          s"$mode: a well-formed vector must project to 3 non-null " +
+            s"values, got ${got(3L)}")
+      } finally spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
+
   test("PQ: encode matches driver argmin, ADC = table lookups, full-shortlist search = exact") {
     val books = Similarity.trainPqCodebooks(emb, "embedding",
       m = 4, ksub = 8, seed = 5L)

@@ -4,9 +4,9 @@ import graft.store.TsStore
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
-/** Snapshot-mode TsStore: versioned day dirs + manifest commit point.
-  * The contract under test is the one the flat layout cannot give:
-  * a reader pinned to a committed manifest sees that snapshot IN FULL
+/** TsStore's versioned day dirs + manifest commit point. The contract
+  * under test: a reader pinned to a committed manifest sees that
+  * snapshot IN FULL
   * for as long as it runs — through multi-day deletes, saves, packs —
   * because commits only ADD version dirs and swap the manifest;
   * a writer crash before the manifest swap changes nothing visible;
@@ -16,11 +16,26 @@ class SnapshotStoreSpec extends SparkSpec {
 
   private def mkStore(path: String) =
     new TsStore(spark, path, subject = "code", time = "t",
-      soleCols = Nil, dayCol = col("day"), snapshots = true)
+      soleCols = Nil, dayCol = col("day"))
 
   private def hfs = org.apache.hadoop.fs.FileSystem.get(
     spark.sparkContext.hadoopConfiguration)
   private def hp(s: String) = new org.apache.hadoop.fs.Path(s)
+
+  /** Fabricate generation `v`'s reservation — the commit instruction a
+    * writer records before placing (a crash leaves it behind). */
+  private def writeInstr(root: String, v: Long, tmp: String,
+      place: Seq[String], days: Map[String, Long], kind: String = "saving",
+      tombstones: String = "{}"): Unit = {
+    def obj(m: Map[String, Long]) =
+      m.toSeq.sorted.map { case (k, x) => s""""$k":$x""" }.mkString("{", ",", "}")
+    val json = s"""{"v":$v,"token":"crashed-writer","tmp":"$tmp",""" +
+      s""""kind":"$kind","place":${place.map("\"" + _ + "\"")
+        .mkString("[", ",", "]")},"days":${obj(days)},"removed":{},""" +
+      s""""seq":99,"tombstones":$tombstones}"""
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"${root}__resv.$v.json"),
+      json.getBytes("UTF-8"))
+  }
 
   private def rows3days = Seq(
     ("A", 1L, 10.0, "d1"), ("B", 2L, 20.0, "d1"),
@@ -28,24 +43,32 @@ class SnapshotStoreSpec extends SparkSpec {
     ("A", 5L, 50.0, "d3"), ("B", 6L, 60.0, "d3"))
     .toDF("code", "t", "v", "day")
 
-  test("snapshot round-trip: save versions days, reads equal flat mode, upsert wins") {
+  test("snapshot round-trip: save versions days, reads the upserted corpus, upsert wins") {
     val base = Files.createTempDirectory("graft_snap").toString
     val snap = mkStore(s"$base/snap")
-    val flat = new TsStore(spark, s"$base/flat", subject = "code",
-      time = "t", soleCols = Nil, dayCol = col("day"))
-    for (st <- Seq(snap, flat)) { st.set(rows3days); st.save() }
+    snap.set(rows3days); snap.save()
     // second-generation write: replace one row, add one
-    val more = Seq(("A", 1L, 11.0, "d1"), ("C", 7L, 70.0, "d1"))
-      .toDF("code", "t", "v", "day")
-    for (st <- Seq(snap, flat)) { st.set(more); st.save() }
-    def dump(st: TsStore) = st.read().orderBy("code", "t")
+    snap.set(Seq(("A", 1L, 11.0, "d1"), ("C", 7L, 70.0, "d1"))
+      .toDF("code", "t", "v", "day"))
+    snap.save()
+    val dump = snap.read().orderBy("code", "t")
       .select("code", "t", "v", "day").collect().toSeq
-    assert(dump(snap) == dump(flat) && dump(snap).length == 7)
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getString(3)))
+    assert(dump == Seq(("A", 1L, 11.0, "d1"), ("A", 3L, 30.0, "d2"),
+      ("A", 5L, 50.0, "d3"), ("B", 2L, 20.0, "d1"), ("B", 4L, 40.0, "d2"),
+      ("B", 6L, 60.0, "d3"), ("C", 7L, 70.0, "d1")), s"$dump")
     // layout: d1 has two versions (both generations), d2/d3 one
     assert(hfs.exists(hp(s"$base/snap/__day=d1/__v=1")) &&
       hfs.exists(hp(s"$base/snap/__day=d1/__v=2")))
     assert(hfs.exists(hp(s"$base/snap/__day=d2/__v=1")) &&
       !hfs.exists(hp(s"$base/snap/__day=d2/__v=2")))
+    // a placing commit writes its reservation and manifest slot and
+    // nothing else: no stamp inside version dirs, no instruction file
+    // left in them, the reservation became the history record
+    assert(!new java.io.File(s"$base/snap/__day=d1/__v=2").list()
+      .exists(_.startsWith("_placed")))
+    assert(hfs.exists(hp(s"$base/snap__snaphist/v=2.json")) &&
+      !hfs.exists(hp(s"$base/snap__resv.2.json")))
     // day-pruned read still hits PartitionFilters through basePath
     val pruned = snap.read(day = Some("d2"))
     assert(pruned.count() == 2)
@@ -95,8 +118,9 @@ class SnapshotStoreSpec extends SparkSpec {
     st.set(rows3days.filter(col("day") === "d1")); st.save()
     assert(st.read().count() == 2)
     // fabricate a save tmp for day d9 that crashed AFTER the parquet
-    // job (_SUCCESS) but BEFORE the commit manifest was written —
-    // recovery must discard it (the save was never acknowledgeable)
+    // job (_SUCCESS) but BEFORE its reservation (the commit
+    // instruction) was claimed — recovery must discard it (the save
+    // was never acknowledgeable)
     def writeTmp(): Unit =
       Seq(("C", 9L, 90.0, "d9")).toDF("code", "t", "v", "day")
         .withColumn("__day", col("day")).withColumn("__seq", lit(99L))
@@ -107,12 +131,11 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(reopened.read().count() == 2 &&
       !hfs.exists(hp(root + "__saving")),
       "unacknowledged save tmp was not discarded")
-    // now the same crash WITH the commit manifest (written after
+    // now the same crash WITH the reservation (claimed after
     // _SUCCESS) — acknowledged: recovery must finish the commit
     writeTmp()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root + "__saving", "__commit.json"),
-      """{"days":["__day=d9"]}""".getBytes("UTF-8"))
+    writeInstr(root, 2L, root + "__saving", Seq("__day=d9"),
+      Map("__day=d1" -> 1L, "__day=d9" -> 2L))
     val recovered = mkStore(root)
     assert(recovered.read().count() == 3 &&
       recovered.read().filter(col("code") === "C").count() == 1,
@@ -130,9 +153,8 @@ class SnapshotStoreSpec extends SparkSpec {
       .withColumn("__day", col("day")).withColumn("__seq", lit(99L))
       .write.mode("overwrite").partitionBy("__day")
       .parquet(root + "__saving")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root + "__saving", "__commit.json"),
-      """{"days":["__day=d8","__day=d9"]}""".getBytes("UTF-8"))
+    writeInstr(root, 2L, root + "__saving", Seq("__day=d8", "__day=d9"),
+      Map("__day=d1" -> 1L, "__day=d8" -> 2L, "__day=d9" -> 2L))
     // ...whose commit crashed after placing ONE of the two days
     hfs.mkdirs(hp(s"$root/__day=d8"))
     assert(hfs.rename(hp(root + "__saving/__day=d8"),
@@ -177,16 +199,15 @@ class SnapshotStoreSpec extends SparkSpec {
     // fabricate the one crash state the placed/swapped dirs cannot
     // distinguish from "never committed": the save fully committed
     // (days renamed out, manifest at v=1) but the process died before
-    // deleting the tmp — recovery replays the commit instruction.
-    // Re-deriving targetV from the (already bumped) manifest here would
-    // commit days -> v=2, dirs that do not exist, and a later vacuum
-    // would then delete the real v=1 dirs as "superseded".
+    // deleting the tmp or moving its reservation into the history
+    // record — recovery sees the commit instruction again. Re-deriving
+    // the target from the (already bumped) manifest here would commit
+    // days -> v=2, dirs that do not exist, and a later vacuum would
+    // then delete the real v=1 dirs as "superseded".
+    val all = Map("__day=d1" -> 1L, "__day=d2" -> 1L, "__day=d3" -> 1L)
     hfs.mkdirs(hp(root + "__saving"))
     hfs.create(hp(root + "__saving/_SUCCESS"), true).close()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root + "__saving", "__commit.json"),
-      """{"v":1,"days":["__day=d1","__day=d2","__day=d3"]}"""
-        .getBytes("UTF-8"))
+    writeInstr(root, 1L, root + "__saving", all.keys.toSeq, all)
     val re = mkStore(root)
     assert(re.read().count() == 6, "post-swap replay lost the store")
     assert(!hfs.exists(hp(s"$root/__day=d1/__v=2")),
@@ -199,10 +220,7 @@ class SnapshotStoreSpec extends SparkSpec {
     // its recorded version, not a re-derived one
     hfs.mkdirs(hp(root + "__packed"))
     hfs.create(hp(root + "__packed/_SUCCESS"), true).close()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root + "__packed", "__commit.json"),
-      """{"v":1,"days":["__day=d1","__day=d2","__day=d3"]}"""
-        .getBytes("UTF-8"))
+    writeInstr(root, 1L, root + "__packed", all.keys.toSeq, all, "packed")
     val re2 = mkStore(root)
     assert(re2.read().count() == 6, "post-swap pack replay lost the store")
     assert(!hfs.exists(hp(s"$root/__day=d1/__v=2")))
@@ -271,51 +289,22 @@ class SnapshotStoreSpec extends SparkSpec {
 
   test("meta mode record guards a store with zero committed day dirs") {
     val base = Files.createTempDirectory("graft_snap").toString
-    // the crashed-first-save shape: meta persisted (it always is,
-    // before the tmp write), no committed day dirs — the day-dir
-    // layout probe has nothing to inspect, so without the meta mode
-    // record a wrong-mode open would pass the guard and its recovery
-    // would destroy (or re-layout) a roll-forward-able first-save tmp
-    val flat = new TsStore(spark, s"$base/flat", subject = "code",
-      time = "t", soleCols = Nil, dayCol = col("day"))
-    flat.set(rows3days); flat.save()
-    hfs.listStatus(hp(s"$base/flat"))
-      .filter(_.getPath.getName.startsWith("__day="))
-      .foreach(s => hfs.delete(s.getPath, true))
-    assertThrows[IllegalArgumentException] { mkStore(s"$base/flat") }
-    // reverse direction: a snapshot store stripped to just its meta
-    // (manifest gone too — the flat guard's snapFile probe is blind)
+    // a root of the retired flat layout: its meta sidecar recorded the
+    // mode, and it may hold no day dirs (a crashed first save) — the
+    // record alone must refuse the open, before recovery touches it
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/flat__meta.json"),
+      """{"seq":3,"snapshots":false,"tombstones":{}}""".getBytes("UTF-8"))
+    val err = intercept[IllegalArgumentException] { mkStore(s"$base/flat") }
+    assert(err.getMessage.contains("flat"), err.getMessage)
+    // sidecars of the one layout (with or without the old mode field)
+    // open fine
     val snap = mkStore(s"$base/snap")
-    snap.set(rows3days); snap.save()
-    hfs.listStatus(hp(s"$base/snap"))
-      .filter(_.getPath.getName.startsWith("__day="))
-      .foreach(s => hfs.delete(s.getPath, true))
-    hfs.listStatus(hp(base))
-      .filter(_.getPath.getName.startsWith("snap__snapshot."))
-      .foreach(s => hfs.delete(s.getPath, false))
-    assertThrows[IllegalArgumentException] {
-      new TsStore(spark, s"$base/snap", subject = "code", time = "t",
-        soleCols = Nil, dayCol = col("day"))
-    }
-  }
-
-  test("mode/layout mismatch fails loudly at open, both directions") {
-    val base = Files.createTempDirectory("graft_snap").toString
-    val snap = mkStore(s"$base/snap")
-    snap.set(rows3days); snap.save()
-    val flat = new TsStore(spark, s"$base/flat", subject = "code",
-      time = "t", soleCols = Nil, dayCol = col("day"))
-    flat.set(rows3days); flat.save()
-    // a snapshot store opened flat would scan superseded versions as
-    // data; a flat store opened in snapshot mode would read as empty
-    // and bury live day dirs on the next save — both must throw
-    assertThrows[IllegalArgumentException] {
-      new TsStore(spark, s"$base/snap", subject = "code", time = "t",
-        soleCols = Nil, dayCol = col("day"))
-    }
-    assertThrows[IllegalArgumentException] { mkStore(s"$base/flat") }
-    // the matching modes still open fine
-    assert(mkStore(s"$base/snap").read().count() == 6)
+    snap.set(rows3days); snap.save(); snap.dropSubject("A")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/snap__meta.json"),
+      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+        s"$base/snap__meta.json")), "UTF-8")
+        .replaceFirst("\\{", "{\"snapshots\":true,").getBytes("UTF-8"))
+    assert(mkStore(s"$base/snap").read().count() == 3)
   }
 
   test("restart: snapshot store reloads manifest, watermark, tombstones") {
@@ -401,13 +390,8 @@ class SnapshotStoreSpec extends SparkSpec {
     // fabricate the crash residue: a day dir created by placeVersions'
     // mkdirs whose rename never ran (no __v= inside, no files at all)
     hfs.mkdirs(hp(s"$root/__day=d0aaa"))
-    val re = mkStore(root) // must not misread the empty dir as flat
+    val re = mkStore(root) // must not trip over the empty dir
     assert(re.read().count() == 6)
-    // and the inverse mode still fails loudly off the REAL layout
-    assertThrows[IllegalArgumentException] {
-      new TsStore(spark, root, subject = "code", time = "t",
-        soleCols = Nil, dayCol = col("day"))
-    }
   }
 
   test("a stale complete tmp replay never stomps a version slot a later commit reused") {
@@ -425,9 +409,8 @@ class SnapshotStoreSpec extends SparkSpec {
       .withColumn("__day", col("day")).withColumn("__seq", lit(1L))
       .write.mode("overwrite").partitionBy("__day")
       .parquet(root + "__saving")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root + "__saving", "__commit.json"),
-      """{"days":["__day=d1"],"v":2}""".getBytes("UTF-8"))
+    writeInstr(root, 2L, root + "__saving", Seq("__day=d1"),
+      Map("__day=d1" -> 2L))
     val re = mkStore(root)
     val a1 = re.read().filter(col("code") === "A" && col("t") === 1)
       .select("v").collect().map(_.getDouble(0)).toSeq
@@ -479,18 +462,17 @@ class SnapshotStoreSpec extends SparkSpec {
     val st = mkStore(root)
     st.set(rows3days.filter(col("day") === "d1")); st.save() // gen 1
     st.dropSubject("B") // tombstone persisted to the meta sidecar
-    // fabricate an acknowledged save tmp (crash after the commit
-    // manifest landed, before the commit ran) — the REOPEN replays
-    // the commit and mints generation 2's history record; it must
-    // embed B's tombstone exactly as an uncrashed save would
-    Seq(("C", 9L, 90.0, "d9")).toDF("code", "t", "v", "day")
-      .withColumn("__day", col("day")).withColumn("__seq", lit(99L))
-      .write.mode("overwrite").partitionBy("__day")
-      .parquet(root + "__saving")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root + "__saving", "__commit.json"),
-      """{"days":["__day=d9"],"v":2}""".getBytes("UTF-8"))
+    // crash a save after its reservation and placements, before the
+    // slot claim — the NEXT writer adopts the commit and mints
+    // generation 2's history record; it must embed B's tombstone
+    // exactly as an uncrashed save would
+    st.onBeforeSnapshotClaim = () =>
+      throw new RuntimeException("injected crash before the slot claim")
+    st.set(Seq(("C", 9L, 90.0, "d9")).toDF("code", "t", "v", "day"))
+    assert(scala.util.Try(st.save()).isFailure)
     val recovered = mkStore(root)
+    recovered.set(Seq(("D", 9L, 91.0, "d8")).toDF("code", "t", "v", "day"))
+    recovered.save() // first mutation: adopt generation 2, commit gen 3
     assert(recovered.snapshotVersions.contains(2L))
     val at2 = TsStore.openSnapshotAt(spark, root, 2L, "code").get
     assert(at2.filter(col("code") === "B").count() == 0,
@@ -516,11 +498,9 @@ class SnapshotStoreSpec extends SparkSpec {
   }
 
   test("writer fence: a second WRITER takes over the root; the superseded handle fails loudly; readers never fence") {
-    for (snapMode <- Seq(true, false)) {
-      val root = Files.createTempDirectory("graft_snap").toString +
-        s"/fence_$snapMode"
-      def open() = new TsStore(spark, root, subject = "code", time = "t",
-        soleCols = Nil, dayCol = col("day"), snapshots = snapMode)
+    locally {
+      val root = Files.createTempDirectory("graft_snap").toString + "/fence"
+      def open() = mkStore(root)
       val a = open()
       a.set(rows3days); a.save()
       // a second handle that only READS must not fence the active
@@ -545,7 +525,7 @@ class SnapshotStoreSpec extends SparkSpec {
       assert(ex.getMessage.contains("FENCED"), ex.getMessage)
       intercept[IllegalStateException] { a.dropSubject("A") }
       intercept[IllegalStateException] { a.pack(1) }
-      if (snapMode) intercept[IllegalStateException] { a.vacuum() }
+      intercept[IllegalStateException] { a.vacuum() }
       // the store's content is the takeover's view plus its own write —
       // nothing from the fenced handle's rejected writes leaked in
       assert(b.read().orderBy("code", "t")
@@ -636,6 +616,35 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(b.read().count() == 8)
   }
 
+  test("takeover saving the same day before the reservation claim: the superseded save is FENCED, not acknowledged") {
+    val root = Files.createTempDirectory("graft_snap").toString + "/s"
+    val a = mkStore(root)
+    a.set(rows3days); a.save() // generation 1; a holds the lease
+    // a has staged its merge of d1 but not yet claimed generation 2's
+    // reservation. b takes over and saves the SAME day: generation 2
+    // lands with the days map a's instruction also carries, and b's
+    // reservation is renamed into the history record — freeing the
+    // name a claims next. Equal content is not a's commit landing.
+    var b: TsStore = null
+    a.onBeforeResvClaim = () => if (b == null) {
+      b = mkStore(root)
+      b.set(Seq(("E", 7L, 70.0, "d1")).toDF("code", "t", "v", "day"))
+      b.save()
+    }
+    a.set(Seq(("A", 1L, 99.0, "d1")).toDF("code", "t", "v", "day"))
+    val ex = intercept[IllegalStateException] { a.save() }
+    a.onBeforeResvClaim = () => ()
+    assert(ex.getMessage.contains("FENCED"), ex.getMessage)
+    // the refused save kept its hot tail: nothing was dropped unseen
+    assert(a.hotSize == 1, s"a FENCED save cleared ${1 - a.hotSize} hot rows")
+    assert(!hfs.exists(hp(root + "__resv.2.json")),
+      "the withdrawn reservation claim was left behind")
+    val live = TsStore.openSnapshot(spark, root, "code").get
+    assert(live.filter(col("code") === "E").count() == 1 &&
+      live.filter(col("v") === 99.0).count() == 0 && live.count() == 7)
+    assert(b.currentGeneration == 2L)
+  }
+
   test("claimed generations: a crashed in-flight commit is ADOPTED when its instruction is complete, SEALED when not") {
     // CASE 1 — complete instruction: crash between placement and the
     // slot claim. The next writer's first mutation rolls the commit
@@ -662,7 +671,7 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(live1.filter(col("code") === "C").count() == 1 &&
       live1.count() == 7)
 
-    // CASE 2 — incomplete instruction (tmp's commit manifest gone):
+    // CASE 2 — incomplete instruction (the tmp's job marker gone):
     // the reserved generation is SEALED with an empty advance; the
     // crashed data is discarded (it was never acknowledged), the next
     // writer's own commits proceed cleanly above the sealed slot.
@@ -673,11 +682,11 @@ class SnapshotStoreSpec extends SparkSpec {
       throw new RuntimeException("injected crash before the slot claim")
     a2.set(Seq(("A", 1L, 99.0, "d1")).toDF("code", "t", "v", "day"))
     assert(scala.util.Try(a2.save()).isFailure)
-    // mutilate the instruction: the staged tmp loses its manifest
+    // mutilate the instruction: the staged tmp loses its _SUCCESS
     hfs.listStatus(hp(root2).getParent)
       .filter(_.getPath.getName.startsWith("s__saving."))
       .foreach(t => hfs.delete(
-        new org.apache.hadoop.fs.Path(t.getPath, "__commit.json"), false))
+        new org.apache.hadoop.fs.Path(t.getPath, "_SUCCESS"), false))
     val b2 = mkStore(root2)
     b2.set(Seq(("C", 9L, 90.0, "d9")).toDF("code", "t", "v", "day"))
     b2.save() // seal gen 2 (empty advance), commit own data at gen 3
@@ -785,27 +794,36 @@ class SnapshotStoreSpec extends SparkSpec {
       s"manual vacuum listed ${st.lastVacuumDaysListed} of 12 days")
   }
 
-  test("supersededGraceMs reads the committer's placed-at stamp, not dir mtime") {
+  test("supersededGraceMs dates a version by its data files, not the dir mtime") {
     val root = Files.createTempDirectory("graft_snap").toString + "/s"
     val st = mkStore(root)
     st.set(Seq(("A", 1L, 1.0, "d1")).toDF("code", "t", "v", "day")); st.save()
     st.set(Seq(("A", 1L, 2.0, "d1")).toDF("code", "t", "v", "day")); st.save()
     val v1 = s"$root/__day=d1/__v=1"
-    assert(hfs.exists(hp(s"$v1/_placed")),
-      "the committer did not write the placed-at stamp")
+    val files = new java.io.File(v1).listFiles().filter(_.isFile)
+    assert(files.exists(_.getName.endsWith(".parquet")))
     // object-store scenario: dir mtimes are meaningless — make the dir
-    // LOOK ancient while the stamp carries the true placement instant;
+    // LOOK ancient while its data files carry the true write instant;
     // the grace must still hold the version
     new java.io.File(v1).setLastModified(1000L)
     st.vacuum(keepSuperseded = 0, supersededGraceMs = 3600L * 1000)
     assert(hfs.exists(hp(v1)),
-      "grace trusted the dir mtime over the placed-at stamp")
-    // an ancient STAMP means the grace really has passed → reclaimed
-    val out = hfs.create(hp(s"$v1/_placed"), true)
-    try out.write("1000".getBytes("UTF-8")) finally out.close()
+      "grace trusted the dir mtime over the version's data files")
+    // the grace counts from the NEWEST data file's write instant: one
+    // file still inside the grace holds the version, however old the
+    // others are
+    val grace = 3600L * 1000
+    files.foreach(_.setLastModified(1000L))
+    files.find(_.getName.endsWith(".parquet")).get
+      .setLastModified(System.currentTimeMillis() - grace + 600000L)
+    st.vacuum(keepSuperseded = 0, supersededGraceMs = grace)
+    assert(hfs.exists(hp(v1)),
+      "grace did not count from the newest data file's write instant")
+    // ancient DATA FILES mean the grace really has passed → reclaimed
+    files.foreach(_.setLastModified(1000L))
     st.vacuum(keepSuperseded = 0, supersededGraceMs = 3600L * 1000)
     assert(!hfs.exists(hp(v1)),
-      "an expired stamp did not release the version")
+      "an expired version was not released")
   }
 
   test("restoreTo: rollback is roll-forward, discards hot, survives restart, refuses vacuumed targets") {

@@ -14,6 +14,21 @@ class StoreSpec extends SparkSpec {
     new TsStore(spark, path, subject = "code", time = "t",
       soleCols = Nil, dayCol = col("day"))
 
+  /** A day's LIVE version dir (the one the manifest references). */
+  private def liveDir(st: TsStore, day: String): java.io.File = {
+    val v = st.snapshotDays.toMap.getOrElse(s"__day=$day",
+      throw new AssertionError(s"$day is not in the manifest"))
+    new java.io.File(s"${st.path}/__day=$day/__v=$v")
+  }
+
+  /** The live manifest's data files as (name, mtime) per day. */
+  private def liveFiles(st: TsStore, day: String): Seq[(String, Long)] =
+    liveDir(st, day).listFiles().filter(_.getName.endsWith(".parquet"))
+      .map(f => (f.getName, f.lastModified)).toSeq
+
+  /** The live manifest's physical rows (tombstoned ones included). */
+  private def liveRaw(root: String) = TsStore.openSnapshot(spark, root).get
+
   test("hot-only read, save, cold read, hot-shadows-cold upsert") {
     val root = Files.createTempDirectory("graft_store").toString + "/t1"
     val st = mkStore(root)
@@ -36,26 +51,6 @@ class StoreSpec extends SparkSpec {
     assert(after.map(_.getAs[Double]("v")).toSeq == Seq(11.0, 20.0))
   }
 
-  test("flat cold plan cache: a second handle sees another writer's flush and day rewrite") {
-    val root = Files.createTempDirectory("graft_store").toString + "/t_fresh"
-    val writer = mkStore(root)
-    writer.set(Seq(("A", 1L, 10.0, "d1")).toDF("code", "t", "v", "day"))
-    writer.save()
-    // second handle on the same root builds (and caches) its cold plan
-    val reader = mkStore(root)
-    assert(reader.read().count() == 1)
-    // external in-place rewrite of day d1 (save deletes the dest dir and
-    // renames over it) PLUS a brand-new day — the reader's handle-private
-    // epoch never moves; the listing fingerprint must catch both
-    writer.set(Seq(("A", 1L, 11.0, "d1"), ("B", 2L, 20.0, "d2"))
-      .toDF("code", "t", "v", "day"))
-    writer.save()
-    val after = reader.read().orderBy("code").collect()
-    assert(after.map(r => (r.getAs[String]("code"), r.getAs[Double]("v")))
-      .toSeq == Seq(("A", 11.0), ("B", 20.0)),
-      "stale cached cold frame served after an external writer's flush")
-  }
-
   test("day-pruned read hits PartitionFilters; pack bounds file count") {
     val root = Files.createTempDirectory("graft_store").toString + "/t2"
     val st = mkStore(root)
@@ -69,8 +64,7 @@ class StoreSpec extends SparkSpec {
       s"no pruning in:\n$plan")
     st.pack(targetFiles = 1)
     assert(st.read(day = Some("d1")).count() == 50) // unchanged answers
-    val files = new java.io.File(s"$root/__day=d1")
-      .listFiles().count(_.getName.endsWith(".parquet"))
+    val files = liveFiles(st, "d1").size
     assert(files == 1, s"pack left $files files")
   }
 
@@ -125,15 +119,18 @@ class StoreSpec extends SparkSpec {
     st.set(Seq(("A", 1L, 1.0, "d1"), ("B", 1L, 2.0, "d2"))
       .toDF("code", "t", "v", "day"))
     st.save()
-    val d2Before = new java.io.File(s"$root/__day=d2").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(f => (f.getName, f.lastModified)).toSeq
+    val d2Before = liveFiles(st, "d2")
+    assert(d2Before.nonEmpty)
     // second save only stages d1 rows → the d2 partition's files must
     // be byte-identical (never read, never rewritten)
     st.set(Seq(("A", 2L, 3.0, "d1")).toDF("code", "t", "v", "day"))
     st.save()
-    val d2After = new java.io.File(s"$root/__day=d2").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(f => (f.getName, f.lastModified)).toSeq
-    assert(d2After == d2Before, "clean day partition was rewritten by save")
+    // the manifest still points d2 at its first version, whose files
+    // are untouched; only d1 moved to a new version
+    assert(liveDir(st, "d2").getName == "__v=1" &&
+      liveDir(st, "d1").getName == "__v=2")
+    assert(liveFiles(st, "d2") == d2Before,
+      "clean day partition was rewritten by save")
     assert(st.read().count() == 3)
     assert(st.read(day = Some("d2")).count() == 1)
   }
@@ -144,26 +141,22 @@ class StoreSpec extends SparkSpec {
     st.set(Seq(("A", 1L, 1.0, "d1"), ("A", 2L, 2.0, "d2"), ("A", 3L, 3.0, "d3"),
       ("B", 2L, 9.0, "d2")).toDF("code", "t", "v", "day"))
     st.save()
-    val untouched = Seq("d1", "d3").map { d =>
-      d -> new java.io.File(s"$root/__day=$d").listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.lastModified)).toSeq
-    }
+    val untouched = Seq("d1", "d3").map(d => d -> liveFiles(st, d))
     // delete A's row in d2 only — d1/d3 files must be byte-identical
     st.deleteWhere(col("code") === "A" && col("t") === 2L, _ == "d2")
     untouched.foreach { case (d, before) =>
-      val after = new java.io.File(s"$root/__day=$d").listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.lastModified)).toSeq
-      assert(after == before, s"unaffected day $d was rewritten by delete")
+      assert(before.nonEmpty && liveDir(st, d).getName == "__v=1" &&
+        liveFiles(st, d) == before,
+        s"unaffected day $d was rewritten by delete")
     }
     val left = st.read().orderBy("code", "t").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(left == Seq(("A", 1L), ("A", 3L), ("B", 2L)))
 
-    // deleting the last row of a day removes its partition entirely
+    // deleting the last row of a day removes its partition from the
+    // manifest (its version dirs wait for vacuum, like any superseded one)
     st.deleteWhere(col("code") === "B", _ == "d2")
-    assert(!new java.io.File(s"$root/__day=d2").exists(),
+    assert(!st.snapshotDays.exists(_._1 == "__day=d2"),
       "emptied day partition was left behind")
     assert(st.read().count() == 2)
   }
@@ -207,16 +200,13 @@ class StoreSpec extends SparkSpec {
     st.set(Seq(("A", 1L, 1.0, "d1"), ("A", 2L, 2.0, "d2"), ("B", 1L, 9.0, "d1"))
       .toDF("code", "t", "v", "day"))
     st.save()
-    val before = Seq("d1", "d2").map(d =>
-      new java.io.File(s"$root/__day=$d").listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.lastModified)).toSeq)
+    val gen = st.currentGeneration
+    val before = Seq("d1", "d2").map(d => liveFiles(st, d))
     st.dropSubject("A")
-    val after = Seq("d1", "d2").map(d =>
-      new java.io.File(s"$root/__day=$d").listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.lastModified)).toSeq)
-    assert(after == before, "drop rewrote data files — must be metadata-only")
+    val after = Seq("d1", "d2").map(d => liveFiles(st, d))
+    assert(before.forall(_.nonEmpty) && after == before &&
+      st.currentGeneration == gen,
+      "drop rewrote data files — must be metadata-only")
     assert(st.read().collect().map(_.getString(0)).toSeq == Seq("B"))
 
     // a RESTARTED store (fresh instance, same path) still sees the drop
@@ -242,91 +232,18 @@ class StoreSpec extends SparkSpec {
     assert(st2.read().orderBy("code").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq ==
       Seq(("A", 5L), ("B", 1L)))
-    val rawAfterPack = spark.read.parquet(root)
+    val rawAfterPack = liveRaw(root)
     assert(rawAfterPack.filter(col("code") === "A").count() == 1,
       "pack left tombstoned rows in the files")
   }
 
-  // ── crash-recovery: fabricate the exact on-disk marker states an
-  // interrupted swap leaves behind (the protocol makes each state
+  // ── crash-recovery: fabricate the exact on-disk states an
+  // interrupted commit leaves behind (the protocol makes each state
   // reachable only by a crash at one specific point) and assert a
-  // reopened store finishes or rolls back the swap before serving reads
+  // reopened store finishes or discards the commit before serving reads
   private def hfs = org.apache.hadoop.fs.FileSystem.get(
     spark.sparkContext.hadoopConfiguration)
   private def hp(s: String) = new org.apache.hadoop.fs.Path(s)
-
-  test("recovery: pack crash between rename-aside and rename-in rolls forward") {
-    val root = Files.createTempDirectory("graft_store").toString + "/rec1"
-    val st = mkStore(root)
-    st.set(Seq(("A", 1L, 1.0, "d1"), ("B", 2L, 2.0, "d2"))
-      .toDF("code", "t", "v", "day"))
-    st.save()
-    // fabricate: packed replacement fully written, live renamed aside,
-    // crash before the rename-in — the ONLY copy is in __packed
-    spark.read.parquet(root).write.partitionBy("__day").parquet(root + "__packed")
-    assert(hfs.rename(hp(root), hp(root + "__old")))
-    assert(!hfs.exists(hp(root)))
-    val st2 = mkStore(root) // recovery runs in the constructor
-    assert(st2.read().orderBy("code").collect()
-      .map(r => (r.getString(0), r.getAs[Double]("v"))).toSeq ==
-      Seq(("A", 1.0), ("B", 2.0)), "rolled-forward pack lost rows")
-    assert(!hfs.exists(hp(root + "__old")) && !hfs.exists(hp(root + "__packed")),
-      "recovery left swap markers behind")
-  }
-
-  test("recovery: stale __old after a completed pack is dropped; live wins") {
-    val root = Files.createTempDirectory("graft_store").toString + "/rec2"
-    val st = mkStore(root)
-    st.set(Seq(("A", 1L, 1.0, "d1")).toDF("code", "t", "v", "day"))
-    st.save()
-    // fabricate: pack completed the swap but crashed before deleting
-    // the backup — __old holds SUPERSEDED data that must not resurrect
-    Seq(("OLD", 9L, 9.0, "d9")).toDF("code", "t", "v", "day")
-      .withColumn("__day", col("day")).withColumn("__seq", lit(0L))
-      .write.partitionBy("__day").parquet(root + "__old")
-    val st2 = mkStore(root)
-    assert(st2.read().collect().map(_.getString(0)).toSeq == Seq("A"),
-      "superseded __old data resurrected")
-    assert(!hfs.exists(hp(root + "__old")))
-  }
-
-  test("recovery: uncommitted __packed without __old is discarded; rollback restores a missing live") {
-    val root = Files.createTempDirectory("graft_store").toString + "/rec3"
-    val st = mkStore(root)
-    st.set(Seq(("A", 1L, 1.0, "d1")).toDF("code", "t", "v", "day"))
-    st.save()
-    // crash DURING the packed write: partial tmp, live intact
-    hfs.mkdirs(hp(root + "__packed/__day=d1"))
-    val st2 = mkStore(root)
-    assert(st2.read().count() == 1)
-    assert(!hfs.exists(hp(root + "__packed")), "partial pack tmp not discarded")
-    // crash with live renamed aside and NO replacement → roll back
-    assert(hfs.rename(hp(root), hp(root + "__old")))
-    val st3 = mkStore(root)
-    assert(st3.read().collect().map(_.getString(0)).toSeq == Seq("A"),
-      "rollback did not restore the renamed-aside store")
-  }
-
-  test("recovery: save crash mid-day-swap rolls the remaining tmp days forward") {
-    val root = Files.createTempDirectory("graft_store").toString + "/rec4"
-    val st = mkStore(root)
-    st.set(Seq(("A", 1L, 1.0, "d1"), ("B", 2L, 2.0, "d2"))
-      .toDF("code", "t", "v", "day"))
-    st.save()
-    // fabricate: a completed __saving tmp (with _SUCCESS) holding d1's
-    // REPLACEMENT; crash happened after deleting live d1, before the
-    // rename — d1 exists only in the tmp
-    Seq(("A", 1L, 42.0, "d1")).toDF("code", "t", "v", "day")
-      .withColumn("__day", col("day")).withColumn("__seq", lit(9L))
-      .write.partitionBy("__day").parquet(root + "__saving")
-    hfs.delete(hp(s"$root/__day=d1"), true)
-    val st2 = mkStore(root)
-    val got = st2.read().orderBy("code").collect()
-      .map(r => (r.getString(0), r.getAs[Double]("v"))).toSeq
-    assert(got == Seq(("A", 42.0), ("B", 2.0)),
-      s"interrupted save not rolled forward: $got")
-    assert(!hfs.exists(hp(root + "__saving")))
-  }
 
   test("recovery: save crash mid-WRITE (no _SUCCESS) discards the tmp; live intact") {
     val root = Files.createTempDirectory("graft_store").toString + "/rec5"
@@ -371,21 +288,26 @@ class StoreSpec extends SparkSpec {
     val st = mkStore(root)
     st.set(Seq(("A", 1L, 1.0, "d1"), ("B", 2L, 2.0, "d2"), ("C", 3L, 3.0, "d2"))
       .toDF("code", "t", "v", "day"))
-    st.save()
-    // fabricate the post-manifest crash state of `del v <= 2`: d1 is
-    // EMPTIED (absent from the tmp), d2's replacement keeps only C —
-    // the manifest is what tells recovery d1 must be removed, not kept
+    st.save() // generation 1
+    // fabricate the crash state of `del v <= 2` after its reservation
+    // landed, before the slot claim: d1 is EMPTIED (absent from the
+    // tmp), d2's replacement keeps only C — the instruction is what
+    // tells recovery d1 must leave the manifest, not stay
     Seq(("C", 3L, 3.0, "d2")).toDF("code", "t", "v", "day")
       .withColumn("__day", col("day")).withColumn("__seq", lit(9L))
       .write.partitionBy("__day").parquet(root + "__deleting")
-    val m = """{"replaced":["__day=d2"],"removed":["__day=d1"]}"""
-    val out = hfs.create(hp(root + "__deleting/__affected.json"), true)
+    val m = s"""{"v":2,"token":"crashed-writer","tmp":"${root}__deleting",""" +
+      """"kind":"deleting","place":["__day=d2"],"days":{"__day=d2":2},""" +
+      """"removed":{"__day=d1":1},"seq":9,"tombstones":{}}"""
+    val out = hfs.create(hp(root + "__resv.2.json"), true)
     try out.write(m.getBytes("UTF-8")) finally out.close()
     val st2 = mkStore(root)
     val got = st2.read().orderBy("code").collect().map(_.getString(0)).toSeq
     assert(got == Seq("C"),
-      s"manifest roll-forward applied the delete partially: $got")
-    assert(!hfs.exists(hp(s"$root/__day=d1")), "emptied day survived recovery")
+      s"instruction roll-forward applied the delete partially: $got")
+    assert(!st2.snapshotDays.exists(_._1 == "__day=d1"),
+      "emptied day survived recovery")
+    assert(st2.watermark >= 9L, "replay did not raise the watermark")
     assert(!hfs.exists(hp(root + "__deleting")))
   }
 
@@ -396,23 +318,20 @@ class StoreSpec extends SparkSpec {
       .toDF("code", "t", "v", "day"))
     st.save()
     st.deleteWhere(col("day") === "d1", _ == "d1")
-    assert(!hfs.exists(hp(s"$root/__day=d1")), "emptied day not removed")
-    // the watermark invariant the persist-before-write ordering exists
-    // for: no cold row's __seq may exceed the persisted watermark — a
-    // restarted store + tombstone must always outrank every cold row
-    val maxSeq = spark.read.parquet(root)
-      .agg(max("__seq")).head().getLong(0)
-    val meta = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(root + "__meta.json")), "UTF-8")
-    val persisted = """"seq"\s*:\s*(\d+)""".r.findFirstMatchIn(meta)
-      .map(_.group(1).toLong).getOrElse(-1L)
+    assert(!st.snapshotDays.exists(_._1 == "__day=d1"), "emptied day not removed")
+    // the watermark invariant: no cold row's __seq may exceed the
+    // durable watermark — a restarted store + tombstone must always
+    // outrank every cold row. The watermark rides in the reservation
+    // and manifest that commit the rows, so a reopened store loads it
+    val maxSeq = liveRaw(root).agg(max("__seq")).head().getLong(0)
+    val persisted = mkStore(root).watermark
     assert(persisted >= maxSeq,
       s"persisted watermark $persisted below cold max __seq $maxSeq")
   }
 
   test("pack never leaves the path without a committed store (protocol order)") {
-    // end-to-end: a normal pack with tombstones uses rename-aside —
-    // verify the final state AND that the markers are gone
+    // end-to-end: a pack with tombstones commits a new generation —
+    // verify the final state AND that no staging tmp is left behind
     val root = Files.createTempDirectory("graft_store").toString + "/rec6"
     val st = mkStore(root)
     st.set(Seq(("A", 1L, 1.0, "d1"), ("B", 2L, 2.0, "d1"))
@@ -554,7 +473,7 @@ class StoreSpec extends SparkSpec {
       .select("code", "t", "v", "day").collect().toSeq == before)
     // footer-stat selectivity, the pruning an engine actually does:
     // per-file (min, max) on both dims, box = 4/32 subjects x 16/64 ts
-    val stats = spark.read.parquet(root)
+    val stats = liveRaw(root)
       .groupBy(col("_metadata.file_name").as("f"))
       .agg(min("code").as("mnS"), max("code").as("mxS"),
         min("t").as("mnT"), max("t").as("mxT"))
@@ -578,7 +497,7 @@ class StoreSpec extends SparkSpec {
     val root2 = Files.createTempDirectory("graft_store").toString + "/flat"
     val st2 = mkStore(root2)
     st2.set(rows.toDF("code", "t", "v", "day")); st2.save(); st2.pack(8)
-    val stats2 = spark.read.parquet(root2)
+    val stats2 = liveRaw(root2)
       .groupBy(col("_metadata.file_name").as("f"))
       .agg(min("t").as("mnT"), max("t").as("mxT")).collect()
     val tOnly2 = stats2.count(r => r.getLong(2) >= 16L && r.getLong(1) <= 31L)

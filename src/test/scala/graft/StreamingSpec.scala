@@ -340,7 +340,7 @@ class StreamingSpec extends SparkSpec {
 
   test("maintained-stream housekeeping: slot growth stays bounded; compaction crash-rolls-forward") {
     val root = Files.createTempDirectory("graft_stream_hk").toString
-    val e = new graft.api.Engine(spark, s"$root/eng", snapshots = true)
+    val e = new graft.api.Engine(spark, s"$root/eng")
     e.create("{ev:{fields:{t:[T,8],value:[F,8]}}}")
     e.set("u1.ev", """{"t":"2024-01-01T00:30:00Z","value":0.5}""")
     val barRoot = s"$root/bars"
