@@ -43,8 +43,7 @@ object TierScale {
     import spark.implicits._
 
     val root = "/tmp/graft_tierscale/idx"
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val f = graft.store.TsStore.rootFs(spark, root)
     f.delete(new org.apache.hadoop.fs.Path("/tmp/graft_tierscale"), true)
 
     // deterministic synthetic bucket rows — compaction is

@@ -387,6 +387,11 @@ final class Engine(val spark: SparkSession, rootPath: String) {
     * hooks, staged-commit drills) — not part of the command surface. */
   private[graft] def storeHandle(table: String): TsStore = storeOf(table)
 
+  /** The session time zone, the one [[Engine.dayOf]]'s `date_format`
+    * names a timestamp's day in. */
+  private def sessionZone = org.apache.spark.sql.catalyst.util.DateTimeUtils
+    .getZoneId(spark.conf.get("spark.sql.session.timeZone"))
+
   private def storeOf(table: String): TsStore = {
     val sdb = catalog.get(table).getOrElse(
       throw new IllegalArgumentException(s"unknown table '$table'"))
@@ -554,29 +559,43 @@ final class Engine(val spark: SparkSession, rootPath: String) {
     val timeField = sdb.mainIndex.map(_.name).getOrElse(
       throw new IllegalArgumentException(s"table '$table' has no main index"))
     val p = mapper.readTree(SdbSchema.quoteBareWords(paramsJson))
+    // (start, stop, ifprev), parsed once: it selects the rows AND bounds
+    // the days read
+    val range = Option(p.get("range")).map { r =>
+      (if (r.has("start")) r.get("start").asLong(-1L) else -1L,
+        if (r.has("stop")) r.get("stop").asLong(0L) else 0L,
+        r.has("ifprev") && r.get("ifprev").asInt(0) == 1)
+    }
+    // the days a ranged get can touch: stop = 0 is start's day, stop =
+    // -1 is open above, ifprev is open below (the as-of fallback may
+    // need earlier days); latest-row, where and unranged gets read all
+    val (fromDay, toDay) = range match {
+      case Some((start, stop, ifprev)) if start != -1L =>
+        def day(v: Long) = Engine.dayOfIndex(sdb, timeField, v, sessionZone)
+        (if (ifprev) None else day(start),
+          if (stop == 0L) day(start) else if (stop == -1L) None else day(stop))
+      case _ => (None, None)
+    }
     // full sis_match_key vocabulary incl. comma lists
     // (`get SH600600,SH600601.stk_day …`, sisdb.h:44-49)
-    val base = storeOf(table).read()
+    val base = storeOf(table).read(fromDay, toDay)
       .filter(graft.store.KvStore.matchCond("subject", subject))
 
     val toLong: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
       c => Engine.indexAsLong(sdb, timeField, c)
 
-    val afterMatch =
-      if (p.has("range")) {
-        val r = p.get("range")
-        val start = if (r.has("start")) r.get("start").asLong(-1L) else -1L
-        val stop = if (r.has("stop")) r.get("stop").asLong(0L) else 0L
-        val ifprev = r.has("ifprev") && r.get("ifprev").asInt(0) == 1
+    val afterMatch = range match {
+      case Some((start, stop, ifprev)) =>
         Query.range(base, "subject", timeField, start, stop, ifprev,
           toLong = toLong)
-      } else if (p.has("where")) {
+      case None if p.has("where") =>
         val w = p.get("where")
         Query.whereOffset(base, "subject", timeField,
           if (w.has("start")) w.get("start").asLong(0L) else 0L,
           if (w.has("offset")) w.get("offset").asInt(0) else 0,
           toLong = toLong)
-      } else base
+      case None => base
+    }
 
     val afterCount =
       if (p.has("count") && p.get("count").asInt(0) != 0)
@@ -700,7 +719,8 @@ final class Engine(val spark: SparkSession, rootPath: String) {
       if (!st.isEmpty) { // benign no-data case, like the reference
         val cond = graft.store.KvStore.matchCond("subject", subject) &&
           Engine.indexAsLong(sdb, timeField, col(timeField)).between(start, stop)
-        st.deleteWhere(cond, Engine.dayInRange(sdb, timeField, start, stop))
+        st.deleteWhere(cond,
+          Engine.dayInRange(sdb, timeField, start, stop, sessionZone))
       }
     }
   }
@@ -1927,7 +1947,7 @@ final class Engine(val spark: SparkSession, rootPath: String) {
       throw new IllegalArgumentException(s"unknown table '$table'"))
     val timeField = sdb.mainIndex.map(_.name).get
     graft.stream.Replay.replayFrameTo(
-      st.read(day = Some(day)), timeField, "subject", subs, slices,
+      st.read(Some(day), Some(day)), timeField, "subject", subs, slices,
       table = table,
       sliceExpr = Some(Engine.indexAsLong(sdb, timeField, col(timeField))))
   }
@@ -2332,30 +2352,43 @@ object Engine {
     }
   }
 
-  /** Whether a day-partition VALUE can contain rows whose main index
-    * falls in [start, stop] — the pruning predicate `del` hands the
-    * store, so only intersecting partitions are rewritten. Mirrors
-    * [[indexAsLong]] per style. An unparseable day value returns true:
-    * rewritten-but-unchanged is correct, skipped-but-affected is not. */
-  private[api] def dayInRange(sdb: SdbSchema.Sdb, timeField: String,
-      start: Long, stop: Long): String => Boolean = {
-    val f = sdb.fields.find(_.name == timeField).get
-    def num(s: String): Option[Long] =
-      try Some(s.toLong) catch { case _: NumberFormatException => None }
-    f.style match {
-      case 'D' => day => // DateType casts to "yyyy-MM-dd"; range is yyyymmdd
-        num(day.replace("-", "")).forall(d => d >= start && d <= stop)
-      case 'T' | 'S' | 'W' => day => // "yyyy-MM-dd" (UTC); range is epoch ms
-        (try {
-          val d0 = java.time.LocalDate.parse(day)
-            .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
-          Some(d0)
-        } catch { case _: java.time.format.DateTimeParseException => None })
-          .forall(d0 => d0 + 86399999L >= start && d0 <= stop)
-      case _ => day => // day IS the index value as a string
-        num(day).forall(d => d >= start && d <= stop)
+  /** [[dayOf]] for one main-index VALUE as range params give it
+    * (yyyymmdd for D, epoch ms for T/S/W, days in `zone` — the session
+    * time zone `date_format` uses), for styles whose day strings sort
+    * like their index. None — no day bound — for every other style and
+    * for values outside years 1-9999, where `yyyy-MM-dd` stops sorting
+    * like the index. */
+  private[api] def dayOfIndex(sdb: SdbSchema.Sdb, timeField: String,
+      v: Long, zone: java.time.ZoneId): Option[String] = {
+    def ymd(y: Long, m: Long, d: Long) =
+      if (y >= 1 && y <= 9999) Some(f"$y%04d-$m%02d-$d%02d") else None
+    sdb.fields.find(_.name == timeField).get.style match {
+      case 'D' => ymd(v / 10000, v / 100 % 100, v % 100)
+      case 'T' | 'S' | 'W' =>
+        val d = java.time.Instant.ofEpochMilli(v).atZone(zone).toLocalDate
+        ymd(d.getYear, d.getMonthValue, d.getDayOfMonth)
+      case _ => None
     }
   }
+
+  /** Whether a day-partition VALUE can contain rows whose main index
+    * falls in [start, stop] — the pruning predicate `del` hands the
+    * store, so only intersecting partitions are rewritten. Date and
+    * timestamp styles bound the day by [[dayOfIndex]]; other styles'
+    * day IS the index value. An unparseable day value returns true:
+    * rewritten-but-unchanged is correct, skipped-but-affected is not. */
+  private[api] def dayInRange(sdb: SdbSchema.Sdb, timeField: String,
+      start: Long, stop: Long, zone: java.time.ZoneId): String => Boolean =
+    sdb.fields.find(_.name == timeField).get.style match {
+      case 'D' | 'T' | 'S' | 'W' =>
+        val lo = dayOfIndex(sdb, timeField, start, zone)
+        val hi = dayOfIndex(sdb, timeField, stop, zone)
+        day => !day.matches("\\d{4}-\\d{2}-\\d{2}") ||
+          lo.forall(_ <= day) && hi.forall(day <= _)
+      case _ => day =>
+        (try Some(day.toLong) catch { case _: NumberFormatException => None })
+          .forall(d => d >= start && d <= stop)
+    }
 
   /** The reference's update search tree (sisdb.h:50-53): `{f: v, ...}`
     * is an AND of field matches; `[{...}, {...}]` an OR of AND groups;

@@ -102,6 +102,10 @@ case class HyperplaneSigExpr(child: Expression, planes: Seq[Double],
        """.stripMargin)
   }
 
+  // the plan renders the matrix's shape, never its values
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, s"dim=$dim", s"n=$nPlanes")
+
   override protected def withNewChildInternal(newChild: Expression): HyperplaneSigExpr =
     copy(child = newChild)
 }

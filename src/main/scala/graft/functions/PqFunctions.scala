@@ -145,6 +145,10 @@ case class IvfCellExpr(child: Expression, cents: Seq[Double],
        """.stripMargin)
   }
 
+  // the plan renders the matrix's shape, never its values
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, s"dim=$dim", s"n=$n")
+
   override protected def withNewChildInternal(newChild: Expression): IvfCellExpr =
     copy(child = newChild)
 }
@@ -241,6 +245,10 @@ case class IvfTopCellsExpr(child: Expression, cents: Seq[Double],
     }
     new GenericArrayData(rank(scores, has))
   }
+
+  // the plan renders the matrix's shape, never its values
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, s"dim=$dim", s"n=$n", s"nprobe=$nprobe")
 
   override protected def withNewChildInternal(newChild: Expression): IvfTopCellsExpr =
     copy(child = newChild)
@@ -363,6 +371,10 @@ case class PqEncodeExpr(child: Expression, books: Seq[Double],
        """.stripMargin)
   }
 
+  // the plan renders the matrix's shape, never its values
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, s"m=$m", s"ksub=$ksub", s"dsub=$dsub")
+
   override protected def withNewChildInternal(newChild: Expression): PqEncodeExpr =
     copy(child = newChild)
 }
@@ -435,6 +447,10 @@ case class PqAdcExpr(child: Expression, dt: Seq[Double], m: Int,
        """.stripMargin
     })
   }
+
+  // the plan renders the matrix's shape, never its values
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, s"m=$m", s"ksub=$ksub")
 
   override protected def withNewChildInternal(newChild: Expression): PqAdcExpr =
     copy(child = newChild)
@@ -525,6 +541,10 @@ case class RandomProjectExpr(child: Expression, planes: Seq[Double],
        """.stripMargin
     })
   }
+
+  // the plan renders the matrix's shape, never its values
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, s"dim=$dim", s"n=$k", s"scale=$scale")
 
   override protected def withNewChildInternal(newChild: Expression): RandomProjectExpr =
     copy(child = newChild)

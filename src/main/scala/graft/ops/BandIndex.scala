@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.store.TsStore.rootFs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -63,11 +64,8 @@ object BandIndex {
   /** `_`-prefixed so parquet dir readers skip it. */
   private[graft] val ManifestFile = "_manifest.json"
 
-  private def fs(ss: SparkSession) =
-    org.apache.hadoop.fs.FileSystem.get(ss.sparkContext.hadoopConfiguration)
-
   private def dataFiles(ss: SparkSession, root: String) =
-    fs(ss).listStatus(new org.apache.hadoop.fs.Path(root))
+    rootFs(ss, root).listStatus(new org.apache.hadoop.fs.Path(root))
       .filter { s =>
         val n = s.getPath.getName
         s.isFile && !n.startsWith("_") && !n.startsWith(".")
@@ -202,7 +200,7 @@ object BandIndex {
   private[graft] def commitManifest(ss: SparkSession, root: String,
       key: String, entries: Seq[FileEntry],
       retired: Seq[RetiredEntry] = Nil): Unit = {
-    val f = fs(ss)
+    val f = rootFs(ss, root)
     val tmp = new org.apache.hadoop.fs.Path(root, ManifestFile + ".tmp")
     val out = f.create(tmp, true)
     try out.write(entriesJson(key, entries, retired)) finally out.close()
@@ -218,7 +216,7 @@ object BandIndex {
     * describe. */
   private[graft] def readRetired(ss: SparkSession, root: String)
       : Seq[RetiredEntry] = {
-    val f = fs(ss)
+    val f = rootFs(ss, root)
     val p = new org.apache.hadoop.fs.Path(root, ManifestFile)
     if (!f.exists(p)) return Nil
     try parseRetired(
@@ -256,7 +254,7 @@ object BandIndex {
     * just unpruned). */
   private[graft] def readEntries(ss: SparkSession, root: String, key: String)
       : Seq[FileEntry] = {
-    val f = fs(ss)
+    val f = rootFs(ss, root)
     val p = new org.apache.hadoop.fs.Path(root, ManifestFile)
     if (!f.exists(p)) return Nil
     try parseEntries(readFully(f, p), key)
@@ -291,7 +289,7 @@ object BandIndex {
     * does the exact filtering. `keys` need not be sorted. */
   def readForKeys(ss: SparkSession, root: String, keys: Array[Long],
       key: String = "bucket"): (DataFrame, ProbeStats) = {
-    if (!fs(ss).exists(new org.apache.hadoop.fs.Path(root)))
+    if (!rootFs(ss, root).exists(new org.apache.hadoop.fs.Path(root)))
       recover(ss, root) // a compact may have died mid-swap
     val sorted = keys.sorted
     val manifest = readManifest(ss, root, key)
@@ -358,7 +356,7 @@ object BandIndex {
       bands: Int, sigLen: Int, indexIdCol: String = "index_id")
       : DataFrame = {
     val ss = newSigs.sparkSession
-    if (!fs(ss).exists(new org.apache.hadoop.fs.Path(root)))
+    if (!rootFs(ss, root).exists(new org.apache.hadoop.fs.Path(root)))
       recover(ss, root)
     val newSide = Dedup.bandBuckets(newSigs, id, bands, sigLen, as = "new_id")
     val index = ss.read.parquet(root)
@@ -466,7 +464,7 @@ object BandIndex {
     val mergePaths = all.filter(s => mergeNames(s.getPath.getName))
       .map(_.getPath.toString).toIndexedSeq
     val newRun = (entries.map(_.run) :+ 0L).max + 1
-    val f = fs(ss)
+    val f = rootFs(ss, root)
     val tmpDir = root.stripSuffix("/") + "__compacting"
     f.delete(new org.apache.hadoop.fs.Path(tmpDir), true)
     val rows = ss.read.parquet(mergePaths: _*)
@@ -545,7 +543,7 @@ object BandIndex {
     // carries both what is live and what is grace-held
     node.set[com.fasterxml.jackson.databind.JsonNode]("manifest",
       entriesNode(key, manifest, retired))
-    val f = fs(ss)
+    val f = rootFs(ss, tmpDir)
     val tmp = new org.apache.hadoop.fs.Path(tmpDir, PlanFile + ".tmp")
     val out = f.create(tmp, true)
     try out.write(m.writeValueAsBytes(node)) finally out.close()
@@ -558,7 +556,7 @@ object BandIndex {
     * swap the manifest, clear the tmp dir. */
   private[graft] def applyPlan(ss: SparkSession, root: String, tmpDir: String)
       : Unit = {
-    val f = fs(ss)
+    val f = rootFs(ss, root)
     val node = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(readFully(f, new org.apache.hadoop.fs.Path(tmpDir, PlanFile)))
     val key = node.path("key").asText()
@@ -611,7 +609,7 @@ object BandIndex {
     * `__compacting` without one has all files as tail until the next
     * compact — unpruned, never wrong. */
   def recover(ss: SparkSession, root: String): Unit = {
-    val f = fs(ss)
+    val f = rootFs(ss, root)
     val live = new org.apache.hadoop.fs.Path(root)
     val tmpDir = root.stripSuffix("/") + "__compacting"
     val tmp = new org.apache.hadoop.fs.Path(tmpDir)

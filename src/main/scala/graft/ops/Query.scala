@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Param
 
 /** The reference's `get` query semantics re-expressed as DataFrame
   * transformations.
@@ -25,6 +26,19 @@ import org.apache.spark.sql.functions._
   * column, so on a cluster each key's series is processed inside one
   * shuffle partition — no driver-side iteration, no cross-key skew
   * coupling.
+  *
+  * Per-command values — the range bounds, the `ifprev` fallback bound,
+  * the `where` match value and the `count` cap — enter the plan as
+  * [[graft.functions.Param]]s, not literals: the generated code then
+  * has the same text for every value, so a session's later commands
+  * hit Spark's codegen cache instead of paying a Janino compile each.
+  * The `where` offset stays a literal, because `lag`/`lead` need a
+  * foldable offset for their window frame. The bounds are not typed
+  * `time` literals either: a timestamp literal is inlined into
+  * `FilterExec`'s generated code (bringing the compile back), and
+  * parquet pushdown on it saves nothing on the store's one row group
+  * per day file — the store prunes whole days instead
+  * ([[graft.store.TsStore.read]]).
   */
 object Query {
 
@@ -50,9 +64,9 @@ object Query {
       lastRows(df, subject, time, toLong)
     } else {
       val cond =
-        if (stop == 0L) t === start
-        else if (stop == -1L) t >= start
-        else t.between(start, stop)
+        if (stop == 0L) t === Param(start)
+        else if (stop == -1L) t >= Param(start)
+        else t.between(Param(start), Param(stop))
       if (!ifprev) df.filter(cond)
       else {
         // rows matching, plus per-subject as-of fallback when none match
@@ -62,7 +76,7 @@ object Query {
         val prevW = Window.partitionBy(subject)
           .orderBy(t.desc +: tieBreak.map(col(_).desc): _*)
         val fallback = matched
-          .filter(col("__hit") === 0 && t < start)
+          .filter(col("__hit") === 0 && t < Param(start))
           .withColumn("__rn", row_number().over(prevW))
           .filter(col("__rn") === 1)
           .drop("__hit", "__rn")
@@ -88,7 +102,7 @@ object Query {
     // Row r is selected iff the row `offset` positions away from r (in
     // time order) is an exact match — i.e. shift the hit marker by
     // -offset onto r. Single window pass, one shuffle, no join.
-    val hit = when(t === value, 1).otherwise(0)
+    val hit = when(t === Param(value), 1).otherwise(0)
     val shifted =
       if (offset == 0) hit
       else if (offset > 0) lag(hit, offset).over(w)
@@ -133,7 +147,7 @@ object Query {
       else col(time).desc +: tieBreak.map(col(_).desc)
     val w = Window.partitionBy(subject).orderBy(base: _*)
     df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= math.abs(count))
+      .filter(col("__rn") <= Param(math.abs(count)))
       .drop("__rn")
   }
 

@@ -178,8 +178,7 @@ object Rollup {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{
       escapePathName, unescapePathName}
     val ss = insertRows.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      ss.sparkContext.hadoopConfiguration)
+    val fs = graft.store.TsStore.rootFs(ss, root)
     def path(s: String) = new org.apache.hadoop.fs.Path(s)
     // a crashed slot compaction rolls forward first (pure FS ops) —
     // its half-swapped day would otherwise read as missing
@@ -296,8 +295,7 @@ object Rollup {
   private def readJson(ss: org.apache.spark.sql.SparkSession,
       p: org.apache.hadoop.fs.Path)
       : Option[com.fasterxml.jackson.databind.JsonNode] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      ss.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(ss.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else Some(new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(graft.store.TsStore.readJsonBytes(fs, p)))
@@ -373,8 +371,7 @@ object Rollup {
         s"releaseMaintMarker: pending round is slot $pSlot (dirty " +
           s"${pDays.mkString(",")}), not slot $slot — re-run it " +
           "instead of releasing")
-      clearMaintMarker(org.apache.hadoop.fs.FileSystem.get(
-        ss.sparkContext.hadoopConfiguration), root)
+      clearMaintMarker(graft.store.TsStore.rootFs(ss, root), root)
     }
 
   /** The interrupted-round detector: Some((slot, dirtyDays,
@@ -426,8 +423,8 @@ object Rollup {
     val node = new com.fasterxml.jackson.databind.ObjectMapper()
       .createObjectNode()
     node.put("generation", generation)
-    writeJsonAtomic(org.apache.hadoop.fs.FileSystem.get(
-      ss.sparkContext.hadoopConfiguration), cursorPath(root), node)
+    writeJsonAtomic(graft.store.TsStore.rootFs(ss, root), cursorPath(root),
+      node)
   }
 
   // ── maintenance lease (the bar-root writer fence) ──────────────
@@ -471,8 +468,8 @@ object Rollup {
     node.put("owner", s"${ProcessHandle.current().pid()}@" +
       java.net.InetAddress.getLocalHost.getHostName)
     node.put("acquiredAt", System.currentTimeMillis())
-    writeJsonAtomic(org.apache.hadoop.fs.FileSystem.get(
-      ss.sparkContext.hadoopConfiguration), maintLeasePath(root), node)
+    writeJsonAtomic(graft.store.TsStore.rootFs(ss, root),
+      maintLeasePath(root), node)
   }
 
   /** Fail loudly unless `token` still holds the maintenance lease —
@@ -539,8 +536,7 @@ object Rollup {
     * staged dir = already swapped") into silent day loss. */
   def recoverBarCompaction(ss: org.apache.spark.sql.SparkSession,
       root: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      ss.sparkContext.hadoopConfiguration)
+    val fs = graft.store.TsStore.rootFs(ss, root)
     pendingBarCompaction(ss, root).foreach { days =>
       days.foreach { e =>
         val staged = new org.apache.hadoop.fs.Path(
@@ -582,8 +578,7 @@ object Rollup {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{
       escapePathName, unescapePathName}
     require(minSlots >= 2, s"minSlots must be >= 2, got $minSlots")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      ss.sparkContext.hadoopConfiguration)
+    val fs = graft.store.TsStore.rootFs(ss, root)
     recoverBarCompaction(ss, root)
     pendingMaintenance(ss, root).foreach { case (pSlot, _, _) =>
       throw new IllegalStateException(

@@ -136,8 +136,7 @@ object Similarity {
   private def writeJsonSidecar(ss: org.apache.spark.sql.SparkSession,
       indexRoot: String, name: String,
       node: com.fasterxml.jackson.databind.JsonNode): Unit = {
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      ss.sparkContext.hadoopConfiguration)
+    val f = graft.store.TsStore.rootFs(ss, indexRoot)
     val tmp = new org.apache.hadoop.fs.Path(indexRoot, name + ".tmp")
     val out = f.create(tmp, true)
     try out.write(new com.fasterxml.jackson.databind.ObjectMapper()
@@ -151,8 +150,7 @@ object Similarity {
   private def readJsonSidecar(ss: org.apache.spark.sql.SparkSession,
       indexRoot: String, name: String)
       : Option[com.fasterxml.jackson.databind.JsonNode] = {
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      ss.sparkContext.hadoopConfiguration)
+    val f = graft.store.TsStore.rootFs(ss, indexRoot)
     val p = new org.apache.hadoop.fs.Path(indexRoot, name)
     if (!f.exists(p)) return None
     val in = f.open(p)
@@ -392,8 +390,7 @@ object Similarity {
     * cutover (a root with no marker serves nothing yet). */
   def currentIvfStamp(ss: org.apache.spark.sql.SparkSession, root: String)
       : Option[String] = {
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      ss.sparkContext.hadoopConfiguration)
+    val f = graft.store.TsStore.rootFs(ss, root)
     val p = new org.apache.hadoop.fs.Path(root, StampMarker)
     if (!f.exists(p)) return None
     val in = f.open(p)
@@ -430,8 +427,7 @@ object Similarity {
     * never neither. */
   def ivfCutover(ss: org.apache.spark.sql.SparkSession, root: String,
       stamp: String): Unit = {
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      ss.sparkContext.hadoopConfiguration)
+    val f = graft.store.TsStore.rootFs(ss, root)
     val sidecar = new org.apache.hadoop.fs.Path(
       ivfStampPath(root, stamp), CentroidsFile)
     require(f.exists(sidecar),
@@ -473,8 +469,7 @@ object Similarity {
       stamp: String): Unit = {
     require(!currentIvfStamp(ss, root).contains(stamp),
       s"stamp '$stamp' is the SERVING index — cut over first")
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      ss.sparkContext.hadoopConfiguration)
+    val f = graft.store.TsStore.rootFs(ss, root)
     f.delete(new org.apache.hadoop.fs.Path(ivfStampPath(root, stamp)), true)
   }
 

@@ -181,7 +181,7 @@ object Sketches {
   /** True iff a state table for (kind, stamp) is already present. */
   def exists(ss: SparkSession, root: String, kind: String,
       stamp: String): Boolean =
-    org.apache.hadoop.fs.FileSystem.get(ss.sparkContext.hadoopConfiguration)
+    graft.store.TsStore.rootFs(ss, root)
       .exists(new org.apache.hadoop.fs.Path(
         s"${root.stripSuffix("/")}/${kind}_${stamp}/_SUCCESS"))
 

@@ -95,8 +95,7 @@ object Write {
     // forward/back (the reference's safe-dir save, sisdb.h:184-189).
     // Assumes atomic directory rename (HDFS/local); an object store
     // deployment needs a manifest committer instead.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = graft.store.TsStore.rootFs(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
     val t = new org.apache.hadoop.fs.Path(tmp)
     val o = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__old")

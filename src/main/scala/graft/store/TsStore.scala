@@ -1544,13 +1544,22 @@ final class TsStore(
     total
   }
 
-  /** The read view: cold ∪ hot, solely-upsert resolved last-seq-wins.
-    * Day-filter BEFORE calling heavy ops so partition pruning fires on
-    * the cold side. */
-  def read(day: Option[String] = None): DataFrame = synchronized {
-    val coldPart = cold.map(tombFiltered)
-      .map(c => day.fold(c)(d => c.filter(col("__day") === d)))
-    val hotPart = hotUnion.map(h => day.fold(h)(d => h.filter(col("__day") === d)))
+  /** The read view: cold ∪ hot, solely-upsert resolved last-seq-wins,
+    * limited to the day interval [`from`, `to`] (inclusive day strings;
+    * either end may be open). The interval filters BOTH parts before
+    * the upsert: on the cold part it is a `__day` partition filter, so
+    * only those days' files are listed and scanned; on the hot part it
+    * keeps rows of days no save has written yet. Upsert keys include
+    * `__day`, so filtering before the merge equals filtering after.
+    * The bounds compare as strings: callers pass days in the store's
+    * own day format, whose string order must follow the index order. */
+  def read(from: Option[String] = None, to: Option[String] = None)
+      : DataFrame = synchronized {
+    val inDays = (from.map(col("__day") >= _) ++ to.map(col("__day") <= _))
+      .reduceOption(_ && _)
+    def limited(df: DataFrame) = inDays.fold(df)(df.filter)
+    val coldPart = cold.map(c => limited(tombFiltered(c)))
+    val hotPart = hotUnion.map(limited)
     (coldPart, hotPart) match {
       case (Some(c), Some(h)) =>
         Write.upsert(c.drop("__seq"), h, subject, soleCols :+ "__day", time, "__seq")
@@ -2482,8 +2491,9 @@ object TsStore {
       node.path("v").asLong(), node.path("seq").asLong(0L))
   }
 
-  /** The filesystem a store root lives on — resolved from the root
-    * path, never the session's default filesystem. */
+  /** The filesystem a root lives on (a store's, or a bar, index or
+    * ingest root) — resolved from the path, never the session's
+    * default filesystem. */
   private[graft] def rootFs(spark: SparkSession, path: String)
       : org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(path)

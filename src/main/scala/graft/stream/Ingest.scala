@@ -118,8 +118,7 @@ object Ingest {
       // established — O1's sorted-series property survives compaction
       .sortWithinPartitions(col("__day"), col(subjectCol), col(timeCol))
       .write.mode("overwrite").partitionBy("__batch", "__day").parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = graft.store.TsStore.rootFs(spark, storePath)
     val p = new org.apache.hadoop.fs.Path(storePath)
     fs.delete(p, true)
     if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), p))

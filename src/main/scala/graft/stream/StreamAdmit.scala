@@ -1,6 +1,7 @@
 package graft.stream
 
 import graft.ops.{BandIndex, Dedup}
+import graft.store.TsStore.rootFs
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -95,9 +96,6 @@ object StreamAdmit {
   /** `_`-prefixed so parquet readers of the index dirs skip it. */
   private[graft] val ConfigFile = "_banding.json"
 
-  private def hfs(ss: SparkSession) =
-    org.apache.hadoop.fs.FileSystem.get(ss.sparkContext.hadoopConfiguration)
-
   private[graft] def writeConfig(ss: SparkSession, indexRoot: String,
       cfg: IndexConfig): Unit = {
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -105,7 +103,7 @@ object StreamAdmit {
     node.put("bands", cfg.bands)
     node.put("sigLen", cfg.sigLen)
     node.put("shingleK", cfg.shingleK)
-    val f = hfs(ss)
+    val f = rootFs(ss, indexRoot)
     val tmp = new org.apache.hadoop.fs.Path(indexRoot, ConfigFile + ".tmp")
     val out = f.create(tmp, true)
     try out.write(m.writeValueAsBytes(node)) finally out.close()
@@ -119,7 +117,7 @@ object StreamAdmit {
     * [[writeConfig]]); None for a pre-config index — callers then
     * supply the triple themselves, the original [[admitBatch]] path. */
   def loadConfig(ss: SparkSession, indexRoot: String): Option[IndexConfig] = {
-    val f = hfs(ss)
+    val f = rootFs(ss, indexRoot)
     val p = new org.apache.hadoop.fs.Path(indexRoot, ConfigFile)
     if (!f.exists(p)) return None
     val node = new com.fasterxml.jackson.databind.ObjectMapper()

@@ -663,6 +663,23 @@ class EngineSpec extends SparkSpec {
       assert(e.get("SH600600.stk_day", "{}").count() == 1)
       val reopened = new Engine(spark, root)
       assert(reopened.get("SH600600.stk_day", "{}").count() == 1)
+      // a maintained rollup under the same root: its bars, cursor,
+      // round marker and maintenance lease resolve the root's
+      // filesystem too
+      import org.apache.spark.sql.functions._
+      e.create("{ev:{fields:{t:[T,8],value:[F,8]}}}")
+      e.set("u1.ev", """{"t":"2024-01-01T01:00:00Z","value":1.0}""")
+      val barRoot = s"$root/bars"
+      val grp = Seq(lit("all").as("g"))
+      val okey = unix_millis(col("t"))
+      e.bootstrapRollup("ev", barRoot, grp, okey, col("value"), col("value"))
+      e.set("u1.ev", """{"t":"2024-01-02T01:00:00Z","value":3.0}""")
+      e.save("ev")
+      assert(e.maintainRollup("ev", barRoot, grp, okey, col("value"),
+        col("value"))._1 == Seq("2024-01-02"))
+      assert(graft.ops.Rollup.finalizeBars(
+        spark.read.parquet(barRoot).drop("batch"), Seq("g", "day"))
+        .agg(sum("volume")).head.getDouble(0) == 4.0)
     } finally saved.foreach {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)
@@ -1901,6 +1918,110 @@ class EngineSpec extends SparkSpec {
     val r = feed.head
     assert(r.getAs[String]("op") == "update" &&
       r.getAs[String]("side") == "sell")
+  }
+
+  test("steady-state gets compile nothing: range, where and count values are params") {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val e = mkEngine
+    e.create("{tk:{fields:{t:[T,8],px:[F,8]}}}")
+    val t0 = java.time.Instant.parse("2024-03-01T00:00:00Z").toEpochMilli
+    def ms(h: Int) = t0 + h * 3600000L
+    e.set("s1.tk", (0 until 48).map(h =>
+      s"""{"t":"${java.time.Instant.ofEpochMilli(ms(h))}","px":$h.0}""")
+      .mkString("[", ",", "]"))
+    e.save("tk")
+    val shapes: Seq[Int => String] = Seq(
+      h => s"""{range:{start:${ms(h)},stop:${ms(h + 2)}},format:"j"}""",
+      h => s"{range:{start:${ms(h)},stop:0}}",
+      h => s"{range:{start:${ms(h)},stop:-1},count:${h + 1}}",
+      h => s"{range:{start:${ms(h) + 1},stop:0,ifprev:1}}",
+      h => s"{where:{start:${ms(h)}}}")
+    shapes.foreach(s => assert(e.get("s1.tk", s(1)).collect().nonEmpty))
+    val before = METRIC_COMPILATION_TIME.getCount
+    for (h <- Seq(5, 20, 30); s <- shapes)
+      assert(e.get("s1.tk", s(h)).collect().nonEmpty)
+    assert(METRIC_COMPILATION_TIME.getCount == before,
+      s"${METRIC_COMPILATION_TIME.getCount - before} compiles after warm-up")
+    // a param renders its value, not a reference slot
+    val plan = e.get("s1.tk", shapes(1)(7)).queryExecution.analyzed.toString
+    assert(plan.contains(s"param(${ms(7)})"), plan)
+  }
+
+  test("day-pruned gets equal the unpruned read: stop=0, stop=-1, bounded, ifprev, count, hot tail, midnight off UTC") {
+    import org.apache.spark.sql.functions._
+    import graft.ops.Query
+    val tzKey = "spark.sql.session.timeZone"
+    val zone = java.time.ZoneId.of("Asia/Shanghai")
+    // an instant given as a local time in `zone`: day d of March 2024
+    def at(d: Int, h: Int, m: Int) = java.time.ZonedDateTime
+      .of(2024, 3, d, h, m, 0, 0, zone).toInstant
+    def rows(ts: Seq[java.time.Instant], px0: Int) = ts.zipWithIndex
+      .map { case (t, i) => s"""{"t":"$t","px":${px0 + i}.0}""" }
+      .mkString("[", ",", "]")
+    val saved = spark.conf.get(tzKey)
+    spark.conf.set(tzKey, zone.getId)
+    try {
+      val e = mkEngine
+      e.create("{tk:{fields:{t:[T,8],px:[F,8]}}}")
+      // local days 03-01..03-03, with rows 30 minutes either side of
+      // each local midnight (the same UTC day: 16:30Z and 15:30Z)
+      val ts = for (d <- 1 to 3; (h, m) <- Seq((0, 30), (4, 0), (12, 0), (23, 30)))
+        yield at(d, h, m)
+      e.set("s1.tk", rows(ts, 0))
+      e.set("s2.tk", rows(ts, 100))
+      e.save("tk")
+      // hot tail: a day no save has written, and a re-set saved row
+      e.set("s1.tk", rows(Seq(at(4, 0, 30), at(4, 9, 0)), 50))
+      e.set("s1.tk", rows(Seq(at(2, 12, 0)), -1))
+      val st = e.storeHandle("tk")
+      def reference(start: Long, stop: Long, ifprev: Boolean = false,
+          count: Int = 0) = {
+        val r = Query.range(st.read().filter(col("subject") === "s1"),
+          "subject", "t", start, stop, ifprev, toLong = unix_millis)
+        val c = if (count == 0) r else Query.limitPerSubject(r, "subject", "t", count)
+        c.select("subject", "t", "px").collect().map(_.toString).sorted.toSeq
+      }
+      def get(params: String) = e.get("s1.tk", params)
+      def got(params: String) = get(params).select("subject", "t", "px")
+        .collect().map(_.toString).sorted.toSeq
+      def ms(i: java.time.Instant) = i.toEpochMilli
+      val bounded = s"{range:{start:${ms(at(1, 23, 0))},stop:${ms(at(2, 1, 0))}}}"
+      val boundedWant = reference(ms(at(1, 23, 0)), ms(at(2, 1, 0)))
+      val ifprev = s"{range:{start:${ms(at(3, 0, 10))},stop:0,ifprev:1}}"
+      val ifprevWant = reference(ms(at(3, 0, 10)), 0L, ifprev = true)
+      // the windows reach the edges: two local days, and a fallback to
+      // 23:30 on the previous local day
+      assert(boundedWant.size == 2, boundedWant)
+      assert(ifprevWant.size == 1 && ifprevWant.head.endsWith(",7.0]"), ifprevWant)
+      val cases = Seq(
+        s"{range:{start:${ms(at(2, 0, 30))},stop:0}}" ->
+          reference(ms(at(2, 0, 30)), 0L),
+        s"{range:{start:${ms(at(2, 12, 0))},stop:0}}" ->
+          reference(ms(at(2, 12, 0)), 0L),
+        s"{range:{start:${ms(at(3, 12, 0))},stop:-1}}" ->
+          reference(ms(at(3, 12, 0)), -1L),
+        bounded -> boundedWant,
+        ifprev -> ifprevWant,
+        s"{range:{start:${ms(at(1, 0, 0))},stop:${ms(at(4, 23, 0))}},count:-3}" ->
+          reference(ms(at(1, 0, 0)), ms(at(4, 23, 0)), count = -3))
+      cases.foreach { case (params, want) =>
+        assert(want.nonEmpty, params)
+        assert(got(params) == want, params)
+      }
+      def dayFilters(params: String) = "PartitionFilters: \\[([^\\]]*)\\]".r
+        .findAllMatchIn(get(params).queryExecution.executedPlan.toString)
+        .map(_.group(1)).toSeq
+      val boundedDays = dayFilters(bounded)
+      assert(boundedDays.exists(f => f.contains("__day") &&
+        f.contains(">=") && f.contains("<=")), boundedDays)
+      val ifprevDays = dayFilters(ifprev)
+      assert(ifprevDays.nonEmpty &&
+        ifprevDays.forall(f => f.contains("<=") && !f.contains(">=")), ifprevDays)
+      // del derives its days in the same zone: both rows of the
+      // midnight-crossing window go
+      e.del("s2.tk", bounded)
+      assert(e.get("s2.tk", "{}").count() == ts.size - 2)
+    } finally spark.conf.set(tzKey, saved)
   }
 }
 

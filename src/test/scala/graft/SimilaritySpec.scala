@@ -335,6 +335,27 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("kernel plan strings render the matrices' shapes, never their values") {
+    import graft.functions._
+    val rnd = new scala.util.Random(11)
+    def mat(r: Int, c: Int) = Array.fill(r, c)(rnd.nextGaussian())
+    val v = col("embedding")
+    val books = Array.fill(4)(mat(8, dim / 4))
+    val kernels = Seq(
+      HyperplaneSigExpr(v, mat(56, dim).toSeq) -> s"dim=$dim, n=56",
+      RandomProjectExpr(v, mat(12, dim).toSeq, 0.5) -> s"dim=$dim, n=12, scale=0.5",
+      IvfCellExpr(v, mat(8, dim)) -> s"dim=$dim, n=8",
+      IvfTopCellsExpr(v, mat(8, dim), 3) -> s"dim=$dim, n=8, nprobe=3",
+      PqEncodeExpr(v, books) -> s"m=4, ksub=8, dsub=${dim / 4}",
+      PqAdcExpr(PqEncodeExpr(v, books), mat(4, 8)) -> "m=4, ksub=8")
+    // a shuffle keeps the projection out of local-relation folding
+    val plan = emb.repartition(2).select(kernels.map(_._1): _*)
+      .queryExecution.executedPlan.toString
+    kernels.foreach { case (_, shape) => assert(plan.contains(shape), plan) }
+    assert("-?\\d+\\.\\d{6,}".r.findFirstIn(plan).isEmpty,
+      s"a matrix value leaked into the plan string:\n$plan")
+  }
+
   test("PQ: encode matches driver argmin, ADC = table lookups, full-shortlist search = exact") {
     val books = Similarity.trainPqCodebooks(emb, "embedding",
       m = 4, ksub = 8, seed = 5L)

@@ -70,7 +70,7 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(hfs.exists(hp(s"$base/snap__snaphist/v=2.json")) &&
       !hfs.exists(hp(s"$base/snap__resv.2.json")))
     // day-pruned read still hits PartitionFilters through basePath
-    val pruned = snap.read(day = Some("d2"))
+    val pruned = snap.read(Some("d2"), Some("d2"))
     assert(pruned.count() == 2)
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("__day"),

@@ -57,13 +57,13 @@ class StoreSpec extends SparkSpec {
     st.set((1 to 100).map(i => (s"K${i % 7}", i.toLong, i * 1.0,
       if (i % 2 == 0) "d1" else "d2")).toDF("code", "t", "v", "day"))
     st.save()
-    val pruned = st.read(day = Some("d1"))
+    val pruned = st.read(Some("d1"), Some("d1"))
     assert(pruned.count() == 50)
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("__day"),
       s"no pruning in:\n$plan")
     st.pack(targetFiles = 1)
-    assert(st.read(day = Some("d1")).count() == 50) // unchanged answers
+    assert(st.read(Some("d1"), Some("d1")).count() == 50) // unchanged answers
     val files = liveFiles(st, "d1").size
     assert(files == 1, s"pack left $files files")
   }
@@ -132,7 +132,7 @@ class StoreSpec extends SparkSpec {
     assert(liveFiles(st, "d2") == d2Before,
       "clean day partition was rewritten by save")
     assert(st.read().count() == 3)
-    assert(st.read(day = Some("d2")).count() == 1)
+    assert(st.read(Some("d2"), Some("d2")).count() == 1)
   }
 
   test("deleteWhere rewrites ONLY the day partitions the range touches") {
